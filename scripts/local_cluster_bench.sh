@@ -10,9 +10,10 @@
 #   SPARK_GRAFT_SCALE_DIRS="/tmp/graft_scale/x1;/tmp/graft_scale/x10" \
 #     scripts/local_cluster_bench.sh [master] [mainClass]
 # Default master: local-cluster[4,8,8192] (4 workers x 8 cores x 8 GiB).
-# Default mainClass: graft.Bench; pass graft.PolicyScale (or any other
-# measurement main built on graft.StudySession) for its evidence run.
-# All SPARK_GRAFT_* envs pass through to graft.Bench unchanged.
+# Default mainClass: graft.Bench; any main that builds its session with
+# graft.Sessions.build (Bench, Verify, PlanDump, ScaleFixture) honors the
+# master and executor memory set here.
+# All SPARK_GRAFT_* envs pass through to the main unchanged.
 set -euo pipefail
 MASTER="${1:-local-cluster[4,8,8192]}"
 CLASS="${2:-graft.Bench}"

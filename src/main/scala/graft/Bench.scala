@@ -23,40 +23,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
-    // SPARK_GRAFT_MASTER: override for multi-executor evidence runs —
-    // e.g. local-cluster[4,8,8192] (4 executor JVMs × 8 cores): real
-    // serialized exchanges, broadcast transport, per-executor memory.
-    // Launch via spark-submit with the packaged jar so executor JVMs get
-    // the app classes (scripts/local_cluster_bench.sh). Default stays
-    // the driver's local[N].
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-    val spark = sys.env.get("SPARK_GRAFT_EXECUTOR_MEM")
-      .fold(builder0)(m => builder0.config("spark.executor.memory", m))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // NOTE: size-based AQE coalescing (parallelismFirst=false) was
-      // measured here and REGRESSED the suite 57 s → 67 s: at local[32]
-      // the CPU-bound stages (shingles, windows) want all cores, and the
-      // scheduling overhead it saves is smaller than the parallelism it
-      // gives up. Keep the default.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    // SPARK_GRAFT_CONF: semicolon-separated k=v overrides for config
-    // experiments (runtime-settable SQL confs only; unset in driver runs).
-    // Limitation: a semicolon cannot appear inside a value. Entries with an
-    // empty key ("=v", stray ";") are skipped, not passed to conf.set("").
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';')
-      .map(_.split("=", 2))
-      .collect { case Array(k, v) if k.trim.nonEmpty => (k.trim, v.trim) }
-      .foreach { case (k, v) => spark.conf.set(k, v) })
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build()
     // Scaling-study mode (SCALING.md): SPARK_GRAFT_SCALE_DIRS = semicolon-
     // separated ScaleFixture dirs (e.g. x1;x10). Runs the dedup/ANN/asof/
     // pack scale suite on each dir with the same warmup+min-of-2 protocol
@@ -341,7 +309,8 @@ object Bench {
     val headline =
       s"""{"metric":"total_summary","total_sec":${f"$total%.3f"},"n_timed":${
         finalResults.count(_._2 >= 0)},"n_errors":${errors.size},"job_floor":${
-        f"$jobFloor%.3f"},"shuffle_floor":${f"$shuffleFloor%.3f"},"master":"$master","defaultParallelism":${
+        f"$jobFloor%.3f"},"shuffle_floor":${f"$shuffleFloor%.3f"},"master":"${
+        spark.sparkContext.master}","defaultParallelism":${
         spark.sparkContext.defaultParallelism},"shuffle_partitions":${
         spark.conf.get("spark.sql.shuffle.partitions")},"sf":"$sfDir"}"""
     println(headline)

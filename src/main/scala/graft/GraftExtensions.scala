@@ -8,11 +8,10 @@ import graft.functions.TextExpressions.UnicodeNormalize
 import graft.functions.VectorExpressions._
 
 /** SparkSessionExtensions wiring: makes the engine's native expressions
-  * available to ANY session created with
+  * available to ANY session whose builder is given
   *
   * {{{
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)            // programmatic
+  *   .withExtensions(new GraftExtensions)            // programmatic
   *   // or: --conf spark.sql.extensions=graft.GraftExtensions
   * }}}
   *

@@ -268,14 +268,9 @@ object ScaleFixture {
       if (sweepMode) args.length == 3 && args(2).forall(_.isDigit)
       else args.length == 2 || (args.length == 3 && args(2) == "skew"),
       "usage: ScaleFixture <outDir> <mult> [skew] | <outDir> sweep <seed>")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // 32 shuffle partitions whatever the core count: the fixture's file
+    // layout (part-file counts) must not depend on the machine
+    val spark = Sessions.build(partitions = 32)
     if (sweepMode) writeSweepFixture(spark, args(0), args(2).toLong)
     else writeAll(spark, args(0), args(1).toInt, skewed = args.length == 3)
     spark.stop()

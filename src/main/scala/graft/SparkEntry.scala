@@ -4554,11 +4554,6 @@ object SparkEntry {
   private val encodeMerges: Seq[(String, String)] =
     Seq(("t", "h"), ("th", "e"), ("s", "t"), ("e", "r"), ("a", "n"))
 
-  /** The encode/pack merge table, exposed for the ProbeR12 bpe anatomy
-    * (stage timings must replay the EXACT driver-query model). */
-  private[graft] def encodeMergesForProbe: Seq[(String, String)] = encodeMerges
-  private[graft] def gopherFixtureTextForProbe: Column = gopherFixtureText
-
   // -------------------------------------------------------------- BPE oracle
 
   /** One unrolled BPE merge round as DuckDB CTEs (mirror of

@@ -74,7 +74,8 @@ object Bpe {
     * Generate nodes in the q_bpe_segment plan. The fold does the same
     * work in-row: the replay becomes `merges.size` chained narrow
     * projections with ZERO exchanges/sorts/generates. A/B on the sf0.1
-    * word table (ProbeR12Opt, checksum-equal): 1.70 s → 0.27 s (6.3×).
+    * word table (OPTIMIZATION_r12.md §1, checksum-equal): 1.70 s →
+    * 0.27 s (6.3×).
     * Per-row cost is O(|word|²) array copies on short words — bounded by
     * word length, independent of corpus size, and the word table the
     * replay iterates is the DISTINCT vocabulary, which grows sublinearly

@@ -78,7 +78,7 @@ object Dedup {
       .dropDuplicates("doc_id", "shingle")
 
   /** (doc_id, shingle) WITH within-document multiplicity — the pre-dedup
-    * gram stream, split out for the ProbeR13Opt `idx` study. Note the
+    * gram stream, split out for the OPTIMIZATION_r13.md §13 study. Note the
     * dedup in [[explodedShingles]] is already exchange-free: completeGrams'
     * HashPartitioning(doc_id) satisfies the dedup aggregate's
     * ClusteredDistribution(doc_id, shingle), so deferring the dedup past
@@ -176,12 +176,13 @@ object Dedup {
     * shingle) index — the composition point for operators that reuse one
     * shingle pipeline across several sketches (see [[sketchVsExactPairs]]).
     *
-    * r13 probe note (ProbeR13Opt `idx`): fusing the per-doc dedup into the
-    * shingle-partitioned stage here (dropDuplicates after the repartition)
-    * was measured a WASH — the dedup upstream is already exchange-free
-    * because HashPartitioning(doc_id) from completeGrams satisfies its
-    * ClusteredDistribution(doc_id, shingle), and running it BEFORE the
-    * shingle exchange shuffles deduped rows instead of raw multiplicity.
+    * r13 probe note (OPTIMIZATION_r13.md §13): fusing the per-doc dedup
+    * into the shingle-partitioned stage here (dropDuplicates after the
+    * repartition) was measured a WASH — the dedup upstream is already
+    * exchange-free because HashPartitioning(doc_id) from completeGrams
+    * satisfies its ClusteredDistribution(doc_id, shingle), and running it
+    * BEFORE the shingle exchange shuffles deduped rows instead of raw
+    * multiplicity.
     * The two-exchange shape below is the optimal one; not changed.
     */
   private[graft] def jaccardPairsFromExploded(exploded: DataFrame,
@@ -1211,8 +1212,12 @@ object Dedup {
     * web-scale through semantic deduplication"): cluster the embedding
     * corpus with a coarse quantizer, compute pairwise cosine ONLY within
     * each cluster, and drop every vector that has a lower-id neighbor at
-    * cosine ≥ `minCosine` (greedy lowest-id representative — the same
-    * deterministic keep rule as [[keepCanonical]]).
+    * cosine ≥ `minCosine` — the paper's rule (maximum similarity to any
+    * earlier item). The neighbor counts even when it was itself dropped,
+    * so this is NOT [[keepCanonical]]'s rule (one kept document per
+    * connected cluster): in a chain A–B, B–C with cos(A, C) < `minCosine`
+    * both B and C drop, and C is left with no kept neighbor; in a V shape
+    * A–C, B–C only C drops. SemanticDedupSpec pins both cases.
     *
     * Returns (vec_id, centroid_id, is_dropped) for every input vector.
     *

@@ -135,9 +135,13 @@ object Sampling {
     */
   def pow2Bucket(count: Column): Column = length(bin(count))
 
-  /** Sequence packing: assign documents to fixed token-budget bins — the
-    * sample-packing step that turns a curated corpus into dense training
-    * sequences. Two-level and fully deterministic:
+  /** Sequence packing: assign each document to the budget-wide bin its
+    * start offset falls in — the sample-packing step that turns a curated
+    * corpus into dense training sequences. A bin is a `budget`-token
+    * window of the stream, not a capacity: a document that starts inside
+    * it belongs to it whole, so a bin's token total can exceed `budget`
+    * (SamplingSpec's packingAudit case: 110 tokens in bin 0 at budget
+    * 100). Two-level and fully deterministic:
     *
     *  1. each document lands in one of `buckets` independent packing
     *     streams by key arithmetic (`id % buckets`) — the distribution

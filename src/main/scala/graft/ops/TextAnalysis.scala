@@ -21,9 +21,10 @@ object TextAnalysis {
     * (`\W+`) with the boundary empties removed, which yields the
     * IDENTICAL maximal-\w-run array from the same regex engine while
     * skipping regexp_extract_all's per-match group extraction
-    * (ProbeR12Opt `tokens_project`: 16–38% faster on the bare tokenize,
-    * 3/3 interleaved runs, checksum-equal; this is the innermost kernel
-    * of every text query's first stage).
+    * (OPTIMIZATION_r12.md §6: 16–38% faster on the bare tokenize, 3/3
+    * interleaved runs, checksum-equal; this is the innermost kernel of
+    * every text query's first stage). TextAnalysisSpec pins the
+    * equivalence with `regexp_extract_all(s, "\w+", 0)`.
     */
   def tokens(text: Column): Column =
     array_remove(split(text, "\\W+"), "")

@@ -95,42 +95,6 @@ object Triangles {
       .select(col("n_nodes"), col("n_edges"), col("n_triangles"))
   }
 
-  /** The r11 plan, kept for the decade A/B (SCALING_R12_TRI.json): wedge
-    * path x→y→z materialized as rows, closing edge probed by a left-semi
-    * join. Same result as [[countExact]]; the adjacency-intersect form
-    * replaces it because the Σ in·out wedge set dominates the runtime as
-    * rows — building, shuffling, and semi-probing it costs more than
-    * intersecting bounded adjacency arrays in place. */
-  private[graft] def countExactWedge(edges: DataFrame, aCol: String,
-      bCol: String): DataFrame = {
-    val und = canonical(edges, aCol, bCol).cutLineage(false)
-    val deg = und.select(explode(array(col("u"), col("v"))).as("id"))
-      .groupBy(col("id")).agg(count(lit(1)).as("deg"))
-      .cutLineage(false)
-    val du = deg.select(col("id").as("u"), col("deg").as("du"))
-    val dv = deg.select(col("id").as("v"), col("deg").as("dv"))
-    val directed = und.join(du, "u").join(dv, "v")
-      .select(when(col("du") < col("dv") ||
-          (col("du") === col("dv") && col("u") < col("v")),
-        struct(col("u").as("x"), col("v").as("y")))
-        .otherwise(struct(col("v").as("x"), col("u").as("y"))).as("e"))
-      .select(col("e.x").as("x"), col("e.y").as("y"))
-      .cutLineage(false)
-    val paths = directed.select(col("x"), col("y").as("m"))
-      .join(directed.select(col("x").as("m"), col("y").as("z")), "m")
-    // fresh aliases for the closing-edge leg: all three legs derive from
-    // `directed`, and reusing its attributes verbatim would be ambiguous
-    val closing = directed.select(col("x").as("cx"), col("y").as("cz"))
-    val tri = paths.join(closing,
-        col("x") === col("cx") && col("z") === col("cz"), "left_semi")
-      .agg(count(lit(1)).cast(LongType).as("n_triangles"))
-    val stats = und
-      .agg(count(lit(1)).cast(LongType).as("n_edges"))
-      .crossJoin(deg.agg(count(lit(1)).cast(LongType).as("n_nodes")))
-    stats.crossJoin(tri)
-      .select(col("n_nodes"), col("n_edges"), col("n_triangles"))
-  }
-
   /** DOULION: deterministic md5 edge sampling at rate 1/pInv, exact count
     * on the sample, unbiased estimate = count · pInv³ (exact in double for
     * any plausible count).

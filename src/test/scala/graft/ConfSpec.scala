@@ -9,6 +9,18 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ConfSpec extends AnyFunSuite {
 
+  test("Sessions.build carries the shared conf every spec relies on") {
+    // TestSpark.spark is the suites' Sessions.build session
+    val conf = TestSpark.spark.conf
+    assert(conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(conf.get("spark.sql.ansi.enabled") === "false")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(conf.get("spark.sql.adaptive.enabled") === "true")
+    // the caller's master and partitions, whatever SPARK_GRAFT_CPUS says
+    assert(TestSpark.spark.sparkContext.master === "local[4]")
+    assert(conf.get("spark.sql.shuffle.partitions") === "4")
+  }
+
   test("memory strings parse with Spark memory-conf semantics") {
     assert(Conf.memoryStringBytes("7g") === 7L << 30)
     assert(Conf.memoryStringBytes("16gb") === 16L << 30)

@@ -519,14 +519,20 @@ class RuntimeFilterSpec extends SparkSpec {
   */
 class VocabJoinFallbackSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+  import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
   import graft.ops.TextAnalysis
 
   private def docs = spark.read.parquet(s"$sf/documents.parquet")
 
-  private def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
-    df.collect() // run so the AQE final plan is the inspectable one
-    df.queryExecution.executedPlan.toString
-  }
+  /** Equi-join nodes of `df`'s executed plan keyed on an attribute named
+    * `key` — run `df` first, so AQE's final plan is the one searched. */
+  private def joinsOn(df: org.apache.spark.sql.DataFrame,
+      key: String): Seq[BaseJoinExec] =
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case j: BaseJoinExec if (j.leftKeys ++ j.rightKeys)
+          .exists(_.references.exists(_.name == key)) => j
+    }
 
   test("oovRate: AQE broadcasts a small vocab, falls back to shuffle above the limit") {
     val vocab = TextAnalysis.buildVocab(docs, "text", minCount = 2L)
@@ -537,20 +543,24 @@ class VocabJoinFallbackSpec extends SparkSpec {
     // vocab subtree itself legitimately carries an explicitly-hinted
     // bounded broadcast (globalRank's per-partition offset table — ≤
     // #partitions rows by construction) that survives a closed threshold
-    val tokenBhj = "BroadcastHashJoin \\[token#".r
+    def broadcast(j: BaseJoinExec) = j.isInstanceOf[BroadcastHashJoinExec]
     try {
-      val small = finalPlan(TextAnalysis.oovRate(docs, "doc_id", "text", vocab))
-      assert(tokenBhj.findFirstIn(small).isDefined,
-        s"AQE did not broadcast a fitting vocab:\n$small")
+      val small = TextAnalysis.oovRate(docs, "doc_id", "text", vocab)
+      small.collect()
+      assert(joinsOn(small, "token").exists(broadcast),
+        s"AQE did not broadcast a fitting vocab:\n${small.queryExecution.executedPlan}")
       c.set("spark.sql.autoBroadcastJoinThreshold", "-1") // vocab "outgrew" it
       val big = TextAnalysis.oovRate(docs, "doc_id", "text", vocab)
+        .orderBy("doc_id")
       // collect the fallback rows WHILE the threshold is closed — an
       // except() after restoring the conf would re-plan both sides on
       // the broadcast path and prove nothing
-      val shuffledRows = big.orderBy("doc_id").collect().toSeq
-      val bigPlan = big.queryExecution.executedPlan.toString
-      assert(tokenBhj.findFirstIn(bigPlan).isEmpty,
-        s"vocab join still broadcast with the hint path closed:\n$bigPlan")
+      val shuffledRows = big.collect().toSeq
+      val bigJoins = joinsOn(big, "token")
+      // the join must be present, so the no-broadcast check is not vacuous
+      assert(bigJoins.nonEmpty && !bigJoins.exists(broadcast),
+        s"vocab join missing or still broadcast with the hint path closed:\n${
+          big.queryExecution.executedPlan}")
       // degraded plan, identical answer
       c.unset("spark.sql.autoBroadcastJoinThreshold")
       val refRows = TextAnalysis.oovRate(docs, "doc_id", "text", vocab)

@@ -513,6 +513,22 @@ class TextAnalysisSpec extends SparkSpec {
     assert(s.values.forall(v => v >= 0.0 && v <= 1.0))
   }
 
+  test("tokens is regexp_extract_all(\\w+) on boundary and null inputs") {
+    // tokens splits on \W+ and removes the boundary empties; the result
+    // must be the same maximal-\w-run array the extract form yields
+    val df = Seq[(Long, String)]((1L, ""), (2L, "!a!"), (3L, "..."),
+      (4L, "a  b"), (5L, "the end."), (6L, null)).toDF("doc_id", "text")
+    val out = df.select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t"),
+        regexp_extract_all(col("text"), lit("\\w+"), lit(0)).as("x"))
+      .collect().map(r => r.getLong(0) ->
+        ((Option(r.getSeq[String](1)), Option(r.getSeq[String](2))))).toMap
+    out.foreach { case (id, (t, x)) => assert(t === x, s"doc $id") }
+    assert(out(2L)._1 === Some(Seq("a")))
+    assert(out(4L)._1 === Some(Seq("a", "b")))
+    assert(out(5L)._1 === Some(Seq("the", "end")))
+    assert(out(6L)._1 === None)
+  }
+
   test("repetition stats: duplicate-token fraction, empty-doc zero") {
     val df = Seq(
       (1L, "a a a b"),

@@ -33,6 +33,32 @@ class SemanticDedupSpec extends SparkSpec {
     assert(out(5L) === ((1L, false)))
   }
 
+  // unit vector at `deg` degrees in the (axis 0, axis 2) plane: every such
+  // vector with |deg| < 45 lands in cluster 0, and the cosine of two of
+  // them is the cosine of their angle difference
+  private def at(deg: Double): Seq[Float] = {
+    val r = math.toRadians(deg)
+    Seq(math.cos(r).toFloat, 0f, math.sin(r).toFloat, 0f)
+  }
+
+  private def drops(rows: (Long, Seq[Float])*): Map[Long, Boolean] =
+    Dedup.semanticDedup(vecs(rows: _*), "vec_id", "v", index, minCosine = 0.95)
+      .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
+
+  test("chain A–B, B–C: B and C drop, so C has no kept neighbour") {
+    // cos 15° = 0.966 ≥ 0.95 for A–B and B–C; cos 30° = 0.866 for A–C.
+    // C drops on its dropped lower-id neighbour B — the paper's rule, not
+    // keepCanonical's one-kept-per-component rule
+    assert(drops((1L, at(0)), (2L, at(15)), (3L, at(30))) ===
+      Map(1L -> false, 2L -> true, 3L -> true))
+  }
+
+  test("V shape A–C, B–C: only C drops, A and B are both kept") {
+    // A and B are 30° apart (not neighbours); C sits 15° from each
+    assert(drops((1L, at(-15)), (2L, at(15)), (3L, at(0))) ===
+      Map(1L -> false, 2L -> false, 3L -> true))
+  }
+
   test("near-duplicates split across clusters are NOT compared (the documented SemDeDup bound)") {
     // two identical vectors equidistant-ish but assigned to different
     // centroids by construction: one leans to axis 0, one to axis 1
