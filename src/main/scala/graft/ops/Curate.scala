@@ -53,7 +53,10 @@ object Curate {
   final case class MixtureSpec(domainCol: String,
       targets: Seq[(String, Int)], budget: Long)
 
-  final case class Curated(docs: DataFrame, report: CurationReport)
+  /** `caches`: with `report`, the last-stage cache `docs` reads — release
+    * with `unpersist(false)` once `docs` is consumed. */
+  final case class Curated(docs: DataFrame, report: CurationReport,
+      caches: Seq[DataFrame] = Nil)
 
   /** Run the full curation over `docs(idCol, textCol)`.
     *
@@ -71,10 +74,10 @@ object Curate {
     *                     prefix re-executes, intermediates are unpersisted
     *                     once the final stage is materialized, and the
     *                     returned frame reads from the retained last-stage
-    *                     cache. When false (production mode) nothing is
-    *                     counted or cached — the pipeline is one fully
-    *                     lazy plan and observability is the caller's
-    *                     metrics layer.
+    *                     cache, handed out in [[Curated.caches]]. When
+    *                     false (production mode) nothing is counted or
+    *                     cached — the pipeline is one fully lazy plan and
+    *                     observability is the caller's metrics layer.
     */
   def run(docs0: DataFrame, idCol: String, textCol: String,
       evalSet: DataFrame,
@@ -161,7 +164,8 @@ object Curate {
     // returned frame)
     if (report) intermediates.dropRight(1).foreach(_.unpersist(false))
     Curated(packed,
-      CurationReport(input, nExact, nNear, nSpan, nClean, nKept, nMixed))
+      CurationReport(input, nExact, nNear, nSpan, nClean, nKept, nMixed),
+      intermediates.lastOption.toSeq)
   }
 
   /** The persisted dedup state an append-mode corpus maintains between

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.ops.Checkpoints.CutOps
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -274,45 +274,33 @@ object Dedup {
     *         `label` = smallest id in the node's component.
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-      maxIters: Int = 25,
-      maxDriverCcEdges: Long = DefaultMaxDriverCcEdges): DataFrame =
-    connectedComponentsCached(edges, srcCol, dstCol, maxIters,
-      maxDriverCcEdges).df
+      maxIters: Int = 25): DataFrame =
+    connectedComponentsCached(edges, srcCol, dstCol, maxIters).df
 
-  /** Bound for [[connectedComponentsCached]]'s driver-side round collapse:
-    * 2^20 edges ≈ 16 MB of raw ids collected, ≤ 2·2^20 union-find entries
-    * — bounded driver memory regardless of corpus size. */
-  val DefaultMaxDriverCcEdges: Long = 1L << 20
-
-  /** The driver-side gate + labeling for [[connectedComponentsCached]]:
+  /** The [[DriverBound]] gate of [[connectedComponentsCached]]:
     * `Some(labels)` when the materialized edge frame `e` (columns src, dst)
     * is bounded, null-free and integer-keyed; `None` → run the distributed
-    * loop. The decision aggregation is one count-shaped job over already-
-    * materialized blocks. */
-  private def driverCcResult(e: DataFrame, maxDriverCcEdges: Long,
+    * loop. */
+  private def driverCcResult(e: DataFrame,
       caches: Seq[DataFrame]): Option[Checkpoints.CachedResult] = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
     val srcT = e.schema("src").dataType
-    val integral = srcT == e.schema("dst").dataType &&
-      (srcT == LongType || srcT == IntegerType)
-    if (!integral || maxDriverCcEdges <= 0) return None
-    val st = e.agg(count(lit(1)).as("n"),
-      count(col("src")).as("ns"), count(col("dst")).as("nd")).head()
-    val (n, ns, nd) = (st.getLong(0), st.getLong(1), st.getLong(2))
-    if (n > maxDriverCcEdges || ns != n || nd != n) return None
-    val collected = e.collect().map { r =>
-      if (srcT == LongType) (r.getLong(0), r.getLong(1))
-      else (r.getInt(0).toLong, r.getInt(1).toLong)
+    if (srcT != e.schema("dst").dataType ||
+        (srcT != LongType && srcT != IntegerType)) return None
+    val n = count(lit(1))
+    val nullFree = count(col("src")) === n && count(col("dst")) === n
+    DriverBound.collect(e, DriverBound.CcEdges,
+        size = when(nullFree, n).otherwise(lit(Long.MaxValue))) { edgeRows =>
+      val collected = edgeRows.map(r =>
+        (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue))
+      val schema = StructType(Seq(
+        StructField("id", srcT), StructField("label", srcT)))
+      val rows = new java.util.ArrayList[Row]()
+      unionFindMinLabels(collected).foreach { case (id, lb) =>
+        rows.add(if (srcT == LongType) Row(id, lb) else Row(id.toInt, lb.toInt))
+      }
+      Checkpoints.CachedResult(
+        e.sparkSession.createDataFrame(rows, schema), caches)
     }
-    val schema = StructType(Seq(
-      StructField("id", srcT), StructField("label", srcT)))
-    val rows = new java.util.ArrayList[Row]()
-    unionFindMinLabels(collected).foreach { case (id, lb) =>
-      rows.add(if (srcT == LongType) Row(id, lb) else Row(id.toInt, lb.toInt))
-    }
-    Some(Checkpoints.CachedResult(
-      e.sparkSession.createDataFrame(rows, schema), caches))
   }
 
   /** Driver-side label table for a BOUNDED collected edge list: union-find
@@ -365,8 +353,7 @@ object Dedup {
     * and `PageRank.runCached`.
     */
   def connectedComponentsCached(edges: DataFrame, srcCol: String,
-      dstCol: String, maxIters: Int = 25,
-      maxDriverCcEdges: Long = DefaultMaxDriverCcEdges): Checkpoints.CachedResult = {
+      dstCol: String, maxIters: Int = 25): Checkpoints.CachedResult = {
     // the edge set is read every round — checkpoint once to cut an
     // arbitrary upstream plan, UNLESS the input is already a materialized
     // RDD scan (e.g. jaccardPairs' checkpointed output): re-checkpointing
@@ -389,23 +376,9 @@ object Dedup {
     }
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val e = if (alreadyMaterialized) e0 else e0.cutLineage(true)
-    // Adaptive round collapse (same bounded-fetch gate as keepCanonical's
-    // broadcast decision and fitQualityClassifier's driver rounds): each
-    // distributed round is a full job round-trip — pure scheduler floor
-    // when the edge set is small. The edge set is ALREADY materialized
-    // here, so one cheap aggregation decides: a bounded, null-free,
-    // integer-keyed edge list (≤ `maxDriverCcEdges` rows ≈ 16 MB of ids)
-    // is collected once and labeled by driver union-find
-    // ([[unionFindMinLabels]] — identical labels by definition); anything
-    // larger, any null id, or non-integral keys runs the distributed loop
-    // unchanged. At 100 TB the thresholded pair list exceeds the bound and
-    // the driver never sees a row — the gate costs one count-shaped job
-    // over materialized blocks.
-    driverCcResult(e, maxDriverCcEdges,
-      caches = if (alreadyMaterialized) Seq.empty else Seq(e)) match {
-      case Some(res) => return res
-      case None => ()
-    }
+    val driverSide =
+      driverCcResult(e, caches = if (alreadyMaterialized) Seq.empty else Seq(e))
+    if (driverSide.nonEmpty) return driverSide.get
     val und = e
       .select(explode(array(
         struct(col("src"), col("dst")),
@@ -469,6 +442,7 @@ object Dedup {
     val losers = connectedComponents(pairs, "id_a", "id_b")
       .where(col("id") =!= col("label"))
       .select(col("id").as(idCol))
+    Checkpoints.release(pairs) // the returned labels no longer read the pairs
     docs.join(losers, Seq(idCol), "left_anti")
   }
 
@@ -785,37 +759,26 @@ object Dedup {
     * at 100 TB.
     *
     * Adaptivity: the label set is already materialized by the CC loop, so
-    * one cheap count decides the plan — past `maxBroadcastLabels` (a
-    * heavily-duplicated corpus where the labeled set is corpus-scale, the
-    * case a blind broadcast would OOM on) it falls back to shuffled joins
-    * of the same shape, still windowing only the contenders.
+    * one [[DriverBound]] decision on its estimated broadcast bytes picks
+    * the plan — past the bound (a heavily-duplicated corpus where the
+    * labeled set is corpus-scale, the case a blind broadcast would OOM on)
+    * it falls back to shuffled joins of the same shape, still windowing
+    * only the contenders.
     *
     * Precondition: `idCol` values are unique. Rows sharing an id all
     * survive or all drop together under the anti-join (dedup ids first —
     * [[dropExactDuplicates]] — if the input can carry duplicates).
     */
   def keepCanonical(docs: DataFrame, idCol: String, pairs: DataFrame,
-      aCol: String, bCol: String, preference: Seq[Column],
-      maxBroadcastLabels: Long = 10000000L,
-      maxBroadcastBytes: Long = 512L * 1024 * 1024,
-      maxDriverCcEdges: Long = DefaultMaxDriverCcEdges): DataFrame = {
-    val labels = connectedComponents(pairs, aCol, bCol,
-      maxDriverCcEdges = maxDriverCcEdges)
+      aCol: String, bCol: String, preference: Seq[Column]): DataFrame = {
+    val labels = connectedComponents(pairs, aCol, bCol)
       .withColumnRenamed("id", idCol)
-    // gate the broadcast on BOTH row count and estimated payload bytes:
-    // with wide string ids a sub-threshold row count can still be a
-    // multi-GB broadcast, the exact OOM the shuffled fallback exists to
-    // avoid. The labels frame is already materialized by the CC loop, so
-    // this single agg is a cheap local scan.
-    val stats = labels.agg(
-      count(lit(1)).as("n"),
-      coalesce(sum(length(col(idCol).cast("string")) +
-        length(col("label").cast("string"))), lit(0L)).as("chars")).head()
-    val nLabels = stats.getLong(0)
-    // ~2 bytes/char UTF-16 in the broadcast hash map + per-row object
-    // overhead; a coarse but order-of-magnitude-safe estimate
-    val estBytes = stats.getLong(1) * 2 + nLabels * 48
-    val small = nLabels <= maxBroadcastLabels && estBytes <= maxBroadcastBytes
+    // payload bytes, not rows: wide string ids can make a modest row count
+    // a multi-GB broadcast. ~2 B/char UTF-16 in the broadcast hash map +
+    // per-row object overhead — coarse but order-of-magnitude-safe
+    val estBytes = coalesce(sum(length(col(idCol).cast("string")) +
+      length(col("label").cast("string"))), lit(0L)) * 2 + count(lit(1)) * 48
+    val small = DriverBound.fits(labels, DriverBound.BroadcastBytes, estBytes)
     def side(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     val contenders = docs.join(side(labels), Seq(idCol))
     val w = Window.partitionBy(col("label"))

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.ops.Checkpoints.CutOps
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** PageRank over an edge list — the canonical iterative-numeric graph
@@ -177,36 +177,22 @@ object PageRank {
     */
   def runFixedPoint(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 10, dampingNum: Long = 85L, dampingDen: Long = 100L,
-      scale: Long = 1000000000000000L,
-      maxDriverEdges: Long = Dedup.DefaultMaxDriverCcEdges): DataFrame =
+      scale: Long = 1000000000000000L): DataFrame =
     runFixedPointCached(edges, srcCol, dstCol, iters, dampingNum, dampingDen,
-      scale, maxDriverEdges).df
+      scale).df
 
   /** [[runFixedPoint]] with internal checkpoints handed out — see
     * [[runCached]] for the lifecycle contract. */
   def runFixedPointCached(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 10, dampingNum: Long = 85L, dampingDen: Long = 100L,
-      scale: Long = 1000000000000000L,
-      maxDriverEdges: Long = Dedup.DefaultMaxDriverCcEdges): Checkpoints.CachedResult = {
+      scale: Long = 1000000000000000L): Checkpoints.CachedResult = {
     val (e, nodesDeg, n) = graphFrames(edges, srcCol, dstCol)
     val caches = scala.collection.mutable.ListBuffer[DataFrame](e, nodesDeg)
-    // Adaptive round collapse (the Dedup.connectedComponents gate): every
-    // fixed-point quantity is a nonnegative BIGINT and every op is integer
-    // multiply/divide, so a driver-side replay of the SAME recurrence is
-    // bit-identical regardless of summation order — the property that
-    // already makes this variant cross-engine oracle-able. A bounded edge
-    // list (≤ `maxDriverEdges` rows, ≈16 MB of ids — e and nodesDeg are
-    // already materialized by graphFrames' setup aggregate, so the gate is
-    // one count-shaped job) runs all `iters` rounds in one collect; larger
-    // graphs run the distributed loop unchanged. The DOUBLE variant
-    // [[runCached]] deliberately has no such path: its partition-merge-
-    // order-dependent float sums would not replay bit-identically.
-    if (maxDriverEdges > 0 && e.count() <= maxDriverEdges) {
-      return Checkpoints.CachedResult(
-        fixedPointDriverSide(e, nodesDeg, n, iters, dampingNum, dampingDen,
-          scale),
-        caches.toSeq)
-    }
+    // e and nodesDeg are materialized by graphFrames' setup aggregate
+    val driverSide = DriverBound.collect(e, DriverBound.PageRankEdges)(
+      fixedPointDriverSide(_, nodesDeg, n, iters, dampingNum, dampingDen, scale))
+    if (driverSide.nonEmpty)
+      return Checkpoints.CachedResult(driverSide.get, caches.toSeq)
     var ranks = nodesDeg.withColumn("rank_fp", lit(scale / n))
     (0 until iters).foreach { i =>
       // same one-left-join routing as [[run]] (see comment there)
@@ -250,13 +236,12 @@ object PageRank {
     * `//`. Integer sums are order-independent, so accumulation order
     * cannot diverge from the distributed partial aggregation.
     */
-  private def fixedPointDriverSide(e: DataFrame, nodesDeg: DataFrame,
+  private def fixedPointDriverSide(eRows: Array[Row], nodesDeg: DataFrame,
       n: Long, iters: Int, dampingNum: Long, dampingDen: Long,
       scale: Long): DataFrame = {
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    // eRows: (src, dst) non-null longs by graphFrames
     val nd = nodesDeg.collect() // (id, out_deg nullable) — dangling = null
-    val eRows = e.collect()     // (src, dst) non-null longs by graphFrames
     val deg = new java.util.HashMap[java.lang.Long, java.lang.Long]()
     var ranks = new java.util.HashMap[java.lang.Long, java.lang.Long]()
     val init: Long = scale / n  // same eager Scala division as the lit()
@@ -297,6 +282,6 @@ object PageRank {
       val id = r.getLong(0)
       out.add(Row(id, ranks.get(id): Long))
     }
-    e.sparkSession.createDataFrame(out, schema)
+    nodesDeg.sparkSession.createDataFrame(out, schema)
   }
 }

@@ -1010,9 +1010,8 @@ object TextAnalysis {
     * re-tokenized and never shuffled on anything but doc_id/bucket. The
     * driver holds only the weight vector (O(buckets) cells, the same
     * bounded-parameter-fetch contract as the IVF Lloyd centroids);
-    * training iterates the BUCKET table, not the corpus. A BOUNDED
-    * feature matrix (≤ `maxDriverFmRows` cells — one cheap count on the
-    * persisted matrix decides) skips the per-round job round-trips
+    * training iterates the BUCKET table, not the corpus. A feature matrix
+    * within its [[DriverBound]] bound skips the per-round job round-trips
     * entirely: collect once, run every round driver-side in the identical
     * integer arithmetic ([[fitRoundsDriverSide]]).
     *
@@ -1064,8 +1063,7 @@ object TextAnalysis {
   }
 
   def fitQualityClassifier(docs: DataFrame, idCol: String, textCol: String,
-      labelCol: String, buckets: Int = 256, rounds: Int = 3,
-      maxDriverFmRows: Long = 4L << 20): DataFrame = {
+      labelCol: String, buckets: Int = 256, rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 16,
       s"rounds must be in [1,16], got $rounds")
     val spark = docs.sparkSession
@@ -1083,26 +1081,14 @@ object TextAnalysis {
     val fm = inst.groupBy(col("doc_id"), col("bucket"))
       .agg(count(lit(1)).as("c"), first(col("__y")).as("__y"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Adaptive round schedule (r12 verdict item #6). Every training round
-    // is a GLOBAL barrier (the gradient is a corpus sum), so the
-    // distributed loop pays `rounds` job round-trips — pure scheduler
-    // floor on a small corpus, where the whole feature matrix is a few MB.
-    // One cheap count on the already-persisted matrix decides the plan
-    // (the same adaptivity pattern as keepCanonical's broadcast-label
-    // bound): a bounded matrix (≤ maxDriverFmRows ≈ 4M rows ≈ 100 MB, the
-    // documented bounded-parameter-fetch contract) is collected ONCE and
-    // every round runs driver-side in identical integer arithmetic — two
-    // jobs total (materialize+count, collect) instead of 2+rounds. Past
-    // the bound — the 100 TB regime — the distributed loop below runs
-    // unchanged: the corpus-scale matrix is never collected, the driver
-    // holds only the O(buckets) weight vector per round.
-    val fmRows = fm.count()
-    val wts: Map[Long, Long] = if (fmRows <= maxDriverFmRows) {
-      val rows = fm.collect().map(r =>
+    // every round is a GLOBAL barrier (the gradient is a corpus sum): a
+    // bounded matrix runs them all on the driver in two jobs, not 2+rounds
+    val wts = DriverBound.collect(fm, DriverBound.FitRows) { fmRows =>
+      val rows = fmRows.map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       fm.unpersist(false)
       fitRoundsDriverSide(rows, rounds)
-    } else {
+    }.getOrElse {
       // per-doc totals aggregate the PERSISTED feature matrix — reading
       // `inst` here would re-run the whole corpus tokenize/window/hash
       // pass a second time (the scaladoc's one-pass contract)

@@ -342,6 +342,24 @@ class PlanAuditSpec extends SparkSpec {
     assert(exchanges <= 3,
       s"expected <=3 hash exchanges (2 digest-only + 1 reassembly), got $exchanges:\n$p")
   }
+
+  test("langId: one filter() lambda per profile — the argmax struct is not inlined twice") {
+    import org.apache.spark.sql.catalyst.expressions.ArrayFilter
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    // a non-local, non-constant text column: a local relation or a literal
+    // would fold the projection away before the plan is inspected
+    val plan = spark.range(3)
+      .select(concat(lit("the cat sat on mat "), col("id").cast("string")).as("text"))
+      .select(graft.ops.TextAnalysis.langId(col("text")).as("lang"))
+      .queryExecution.optimizedPlan
+    val filters = plan.flatMap(_.expressions.flatMap(_.collect {
+      case f: ArrayFilter => f
+    }))
+    // plans/r12/q_lang_mixture_after.txt: 5 profiles, 5 filter() scans;
+    // an inlined argmax would double them to 10
+    assert(graft.ops.TextAnalysis.langProfiles.size == 5)
+    assert(filters.size == 5, s"expected 5 filter() lambdas, got ${filters.size}:\n$plan")
+  }
 }
 
 /** AQE must split a skewed shuffle partition at runtime (OptimizeSkewedJoin)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.ops.{Dedup, Policy, Sessionize, TextAnalysis, Urls}
+import graft.ops.{Dedup, DriverBound, Policy, Sessionize, TextAnalysis, Urls}
 
 /** Property-based invariants (SURVEY §5.2-2). ScalaCheck generators feed
   * deterministic seeds; generated cases are BATCHED into single Spark jobs
@@ -88,9 +88,10 @@ class PropertySpec extends SparkSpec {
       val got = Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == expected, s"seed=$i: cc=$got expected=$expected")
-      val gotDist = Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b",
-        maxDriverCcEdges = 0L)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val gotDist = DriverBound.distributedOnly {
+        Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b")
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
       assert(gotDist == expected,
         s"seed=$i: distributed cc=$gotDist expected=$expected")
     }
@@ -193,9 +194,14 @@ class PropertySpec extends SparkSpec {
       val docs = (0L to 40L).map(i => (i, i * 13 % 37)).toDF("doc_id", "w")
       if (edges.nonEmpty) {
         val pairs = edges.toDF("id_a", "id_b")
-        val kept = graft.ops.Dedup.keepCanonical(docs, "doc_id", pairs,
+        def survivors() = Dedup.keepCanonical(docs, "doc_id", pairs,
             "id_a", "id_b", Seq(col("w").desc, col("doc_id")))
           .select("doc_id").as[Long].collect().toSet
+        val kept = survivors()
+        // the shuffled-join fallback (labels past the broadcast bound) and
+        // the distributed CC loop must pick the same survivors
+        val keptDist = DriverBound.distributedOnly(survivors())
+        assert(keptDist == kept, s"seed=$seed: distributed kept $keptDist, driver $kept")
         // driver-side union-find for expected component structure
         val parent = scala.collection.mutable.Map((0L to 40L).map(i => i -> i): _*)
         def find(x: Long): Long =

@@ -112,8 +112,9 @@ class CheckpointRecoverySpec extends SparkSpec {
     val ranks = Checkpoints.withBlockLossRetry(retries = 1) {
       // forced distributed: the adaptive driver replay would sidestep the
       // checkpoint blocks this test exists to evict
-      val r = PageRank.runFixedPoint(edges, "src", "dst", iters = 6,
-        maxDriverEdges = 0L)
+      val r = DriverBound.distributedOnly {
+        PageRank.runFixedPoint(edges, "src", "dst", iters = 6)
+      }
       r.count()
       if (evictOnce) {
         evictOnce = false

@@ -37,6 +37,19 @@ class CurateSpec extends SparkSpec {
     // no surviving exact-duplicate text
     assert(result.groupBy("text").count().where($"count" > 1).count() == 0)
     result.unpersist()
+    out.caches.foreach(_.unpersist(false))
+  }
+
+  test("run(report = true) hands out its retained stage: released, nothing stays persisted") {
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = Curate.run(docs, "doc_id", "text", empty)
+    assert(out.docs.count() === out.report.afterMixture)
+    assert(out.caches.size === 1, "the report run retains its last counted stage")
+    out.caches.foreach(_.unpersist(true))
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
+    assert(left.isEmpty, s"persisted RDDs left behind: ${left.values.mkString(", ")}")
   }
 
   test("crawl composition: gate drops never reach curation, extraction precedes dedup") {
@@ -66,6 +79,7 @@ class CurateSpec extends SparkSpec {
         "— markup-level dedup would keep both")
     val row = out.docs.select("text").as[String].head()
     assert(!row.contains("<"), "curated text must be extracted, not markup")
+    out.caches.foreach(_.unpersist(false))
   }
 
   test("learned quality gate composes upstream of curation (fit -> scoreWith -> run)") {
@@ -105,6 +119,7 @@ class CurateSpec extends SparkSpec {
     // one canonical that flows through to packing
     assert(out.report.afterNearDedup === 1 && out.docs.count() === 1,
       "rotations of one ring must collapse to a single packed canonical")
+    out.caches.foreach(_.unpersist(false))
   }
 
   test("optional stages: span dedup binds, mixture whitelists and rebalances") {
@@ -141,6 +156,7 @@ class CurateSpec extends SparkSpec {
     assert(result.select("lang").distinct().collect()
       .map(_.getString(0)).toSet.subsetOf(Set("en", "de")))
     result.unpersist()
+    out.caches.foreach(_.unpersist(false))
   }
 
   test("curation honors caller column names (idCol/textCol are not doc_id/text)") {

@@ -884,13 +884,14 @@ class TextAnalysisSpec extends SparkSpec {
         buckets = 100)
     }
     // driver-side vs distributed round schedule: BIT-IDENTICAL weights
-    // (r13: the bounded-matrix fit runs all rounds on the driver; forcing
-    // maxDriverFmRows = 0 routes the same input through the distributed
-    // loop — the two paths must land on the same table, or the adaptive
-    // bound would change query results with corpus size)
-    val wDistributed = TextAnalysis.fitQualityClassifier(docs, "doc_id",
-      "text", "is_good", buckets = 256, rounds = 3, maxDriverFmRows = 0L)
-      .as[(Long, Long)].collect()
+    // (r13: the bounded-matrix fit runs all rounds on the driver;
+    // DriverBound.distributedOnly routes the same input through the
+    // distributed loop — the two paths must land on the same table, or the
+    // adaptive bound would change query results with corpus size)
+    val wDistributed = DriverBound.distributedOnly {
+      TextAnalysis.fitQualityClassifier(docs, "doc_id", "text", "is_good",
+        buckets = 256, rounds = 3).as[(Long, Long)].collect()
+    }
     assert(w.sortBy(_._1).toSeq == wDistributed.sortBy(_._1).toSeq,
       "driver-side fit diverged from the distributed round schedule")
   }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 
 class PageRankSpec extends SparkSpec {
   import spark.implicits._
@@ -72,16 +73,14 @@ class PageRankSpec extends SparkSpec {
     val edges = (1L to 200L).map(i => (i % 17, i % 23)) ++
       Seq((100L, 101L), (101L, 100L))
     val df = edges.toDF("s", "d")
-    // forced distributed (maxDriverEdges=0): this pins the DISTRIBUTED
-    // loop's merge-order independence, which the adaptive driver replay
-    // would otherwise bypass at these sizes
-    val a = PageRank.runFixedPoint(df, "s", "d", iters = 5,
-        maxDriverEdges = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val b = PageRank.runFixedPoint(df.repartition(7), "s", "d", iters = 5,
-        maxDriverEdges = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    assert(a == b)
+    // forced distributed: this pins the DISTRIBUTED loop's merge-order
+    // independence, which the driver replay would otherwise bypass at
+    // these sizes
+    def ranks(in: DataFrame) = DriverBound.distributedOnly {
+      PageRank.runFixedPoint(in, "s", "d", iters = 5)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    }
+    assert(ranks(df) == ranks(df.repartition(7)))
   }
   test("fixed-point driver replay is bit-identical to the distributed loop") {
     // dangling node (4 has no out-edges), duplicate edge (weight), cycle
@@ -90,9 +89,10 @@ class PageRankSpec extends SparkSpec {
     val df = edges.toDF("s", "d")
     val drv = PageRank.runFixedPoint(df, "s", "d", iters = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val dist = PageRank.runFixedPoint(df, "s", "d", iters = 6,
-        maxDriverEdges = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    val dist = DriverBound.distributedOnly {
+      PageRank.runFixedPoint(df, "s", "d", iters = 6)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    }
     assert(drv == dist, s"driver replay diverged: $drv vs $dist")
   }
 
