@@ -1,60 +1,63 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.TextExpressions.UnicodeNormalize
 import graft.functions.VectorExpressions._
 
-/** SparkSessionExtensions wiring: makes the engine's native expressions
-  * available to ANY session whose builder is given
+/** SparkSessionExtensions wiring: makes the engine's SQL functions
+  * ([[GraftExtensions.functions]]) available to ANY session whose builder
+  * is given
   *
   * {{{
   *   .withExtensions(new GraftExtensions)            // programmatic
   *   // or: --conf spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * For an already-running session, `VectorFunctions.register(spark)`
-  * installs the same functions into the temp registry.
+  * For an already-running session, `GraftExtensions.register(spark)`
+  * installs the same table into the session's function registry.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((new FunctionIdentifier("cosine_f32"),
-      new ExpressionInfo(classOf[CosineSimilarityF32].getName, "cosine_f32"),
-      (es: Seq[Expression]) => CosineSimilarityF32(es(0), es(1))))
-    e.injectFunction((new FunctionIdentifier("dot_f32"),
-      new ExpressionInfo(classOf[DotProductF32].getName, "dot_f32"),
-      (es: Seq[Expression]) => DotProductF32(es(0), es(1))))
-    e.injectFunction((new FunctionIdentifier("l2_norm_f32"),
-      new ExpressionInfo(classOf[L2NormF32].getName, "l2_norm_f32"),
-      (es: Seq[Expression]) => L2NormF32(es.head)))
-    // hyperplane_bucket_f32(vec, planes, dim[, seed]) — the index geometry
-    // arguments must be literals (they parameterize plan-time constants)
-    e.injectFunction((new FunctionIdentifier("hyperplane_bucket_f32"),
-      new ExpressionInfo(classOf[HyperplaneBucketF32].getName, "hyperplane_bucket_f32"),
-      (es: Seq[Expression]) => HyperplaneBucketF32(es(0),
-        GraftExtensions.litInt(es(1), "planes"),
-        GraftExtensions.litInt(es(2), "dim"),
-        if (es.size > 3) GraftExtensions.litLong(es(3), "seed") else 42L)))
-    // morton_z(a, b) — Z-order clustering key; expands to the same
-    // shift/mask expression tree as graft.ops.Layout.mortonZ (composed
-    // builtins, fully codegen'd — no custom Expression needed)
-    e.injectFunction((new FunctionIdentifier("morton_z"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "morton_z"),
-      (es: Seq[Expression]) => GraftExtensions.mortonZExpr(es(0), es(1))))
-    // unicode_normalize(s, 'NFC'|'NFD'|'NFKC'|'NFKD') — form is a
-    // plan-time constant
-    e.injectFunction((new FunctionIdentifier("unicode_normalize"),
-      new ExpressionInfo(classOf[UnicodeNormalize].getName, "unicode_normalize"),
-      (es: Seq[Expression]) => UnicodeNormalize(es(0),
-        GraftExtensions.litString(es(1), "form"))))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(e.injectFunction)
 }
 
 object GraftExtensions {
   import org.apache.spark.sql.catalyst.expressions.{BitwiseAnd, BitwiseOr, Cast, Literal, ShiftLeft}
   import org.apache.spark.sql.types.LongType
+
+  /** The one SQL function table: name, `DESCRIBE FUNCTION` info and
+    * builder. Index geometry and normalization form are plan-time
+    * constants, so those arguments must be literals. */
+  private[graft] val functions
+      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    fn("cosine_f32", classOf[CosineSimilarityF32])(es => CosineSimilarityF32(es(0), es(1))),
+    fn("dot_f32", classOf[DotProductF32])(es => DotProductF32(es(0), es(1))),
+    fn("l2_norm_f32", classOf[L2NormF32])(es => L2NormF32(es.head)),
+    // hyperplane_bucket_f32(vec, planes, dim[, seed])
+    fn("hyperplane_bucket_f32", classOf[HyperplaneBucketF32])(es =>
+      HyperplaneBucketF32(es(0), litInt(es(1), "planes"), litInt(es(2), "dim"),
+        if (es.size > 3) litLong(es(3), "seed") else 42L)),
+    // morton_z(a, b) — Z-order clustering key; expands to the same
+    // shift/mask expression tree as graft.ops.Layout.mortonZ (composed
+    // builtins, fully codegen'd — no custom Expression needed)
+    fn("morton_z", classOf[GraftExtensions])(es => mortonZExpr(es(0), es(1))),
+    fn("quantize_audit_int8_f32", classOf[QuantizeAuditInt8F32])(es =>
+      QuantizeAuditInt8F32(es.head)),
+    // unicode_normalize(s, 'NFC'|'NFD'|'NFKC'|'NFKD')
+    fn("unicode_normalize", classOf[UnicodeNormalize])(es =>
+      UnicodeNormalize(es(0), litString(es(1), "form"))))
+
+  private def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
+  /** Installs [[functions]] into a running session (`SELECT cosine_f32(a, b) ...`). */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { case (id, info, build) => registry.registerFunction(id, info, build) }
+  }
 
   /** Catalyst twin of [[graft.ops.Layout.mortonZ]] for the SQL function
     * registry (a Column built outside an analyzer run cannot be re-used as

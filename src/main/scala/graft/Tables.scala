@@ -79,8 +79,4 @@ object ExactNum {
     val p = math.pow(10.0, scale.toDouble)
     sum(round(c * lit(p))) / lit(p)
   }
-
-  /** Deterministic mean built from [[exactSum]] (exact numerator). */
-  def exactAvg(c: Column, scale: Int): Column =
-    exactSum(c, scale) / count(lit(1))
 }

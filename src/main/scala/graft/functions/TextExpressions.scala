@@ -1,8 +1,6 @@
 package graft.functions
 
-import java.text.Normalizer
-
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -41,41 +39,22 @@ object TextExpressions {
     override def prettyName: String = "unicode_normalize"
 
     override def nullSafeEval(a: Any): Any =
-      TextExpressions.normalize(a.asInstanceOf[UTF8String], form)
+      Kernels.normalize(a.asInstanceOf[UTF8String], form)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"""${ev.value} = graft.functions.TextExpressions.normalize($a, "$form");""")
+      defineCodeGen(ctx, ev, a => Kernels.call("normalize", a, s"\"$form\""))
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
-
-  // form is a plan-time constant; resolve the enum once, not per row
-  private val forms: Map[String, Normalizer.Form] =
-    Normalizer.Form.values().map(f => f.name -> f).toMap
-
-  /** Shared by interpreted eval and generated code (static call target). */
-  def normalize(s: UTF8String, form: String): UTF8String = {
-    val f = forms(form)
-    val str = s.toString
-    if (Normalizer.isNormalized(str, f)) s
-    else UTF8String.fromString(Normalizer.normalize(str, f))
-  }
 }
 
-/** Column-level API + SQL registration for the text kernels. */
+/** Column-level API for the text kernels (SQL names:
+  * [[graft.GraftExtensions]]). */
 object TextFunctions {
   import TextExpressions._
 
   def unicodeNormalize(text: Column, form: String = "NFC"): Column =
     GraftExpressionBridge.column(
       UnicodeNormalize(GraftExpressionBridge.expression(text), form))
-
-  /** SQL surface: `unicode_normalize(s, 'NFC')`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "unicode_normalize",
-      es => UnicodeNormalize(es(0), graft.GraftExtensions.litString(es(1), "form")),
-      "scala_udf")
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -19,56 +19,44 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * exactly this inner loop, so it must be a codegen'd kernel, not an
   * interpreted fold.
   *
-  * Accumulation is left-to-right in double precision — bit-identical to the
-  * HOF formulation it replaces, so DuckDB-oracle parity is preserved.
-  * Null ELEMENTS inside vectors are not supported (embedding arrays are
-  * dense by contract); null vectors propagate null.
+  * Each loop is written once, in [[Kernels]]: `nullSafeEval` calls it
+  * directly and `doGenCode` emits a static call to it, with any plan-time
+  * table (centroids, hyperplanes, codebooks) passed as a reference object.
+  * Null vectors propagate null.
   */
 object VectorExpressions {
 
+  private val F32Vector = ArrayType(FloatType)
+
+  /** The one input check of the vector kernels: each argument has its
+    * `argTypes` type, where `array<float>` accepts either element
+    * nullability. */
+  trait F32Args extends Expression {
+    protected def argTypes: Seq[DataType] = children.map(_ => F32Vector)
+    override def checkInputDataTypes(): TypeCheckResult = {
+      val got = children.map(_.dataType)
+      val ok = got.length == argTypes.length && argTypes.zip(got).forall {
+        case (ArrayType(FloatType, _), ArrayType(FloatType, _)) => true
+        case (want, have) => want == have
+      }
+      if (ok) TypeCheckResult.TypeCheckSuccess
+      else TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires (${argTypes.map(_.simpleString).mkString(", ")}) " +
+          s"arguments, got (${got.map(_.simpleString).mkString(", ")})")
+    }
+  }
+
   /** cosine(a, b) = a·b / (‖a‖·‖b‖), one pass over both arrays. */
   case class CosineSimilarityF32(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
-          TypeCheckResult.TypeCheckSuccess
-        case _ => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires two array<float> arguments, " +
-            s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
-      }
+      extends BinaryExpression with F32Args {
     override def dataType: DataType = DoubleType
     override def prettyName: String = "cosine_f32"
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val n = math.min(x.numElements(), y.numElements())
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < n) {
-        val xi = x.getFloat(i).toDouble
-        val yi = y.getFloat(i).toDouble
-        dot += xi * yi; na += xi * xi; nb += yi * yi; i += 1
-      }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
+    override def nullSafeEval(a: Any, b: Any): Any =
+      Kernels.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val (n, i) = (ctx.freshName("n"), ctx.freshName("i"))
-        val (dot, na, nb) = (ctx.freshName("dot"), ctx.freshName("na"), ctx.freshName("nb"))
-        val (x, y) = (ctx.freshName("x"), ctx.freshName("y"))
-        s"""
-           |int $n = Math.min($a.numElements(), $b.numElements());
-           |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  double $x = (double) $a.getFloat($i);
-           |  double $y = (double) $b.getFloat($i);
-           |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-           |}
-           |${ev.value} = $dot / (Math.sqrt($na) * Math.sqrt($nb));
-         """.stripMargin
-      })
+      defineCodeGen(ctx, ev, (a, b) => Kernels.call("cosine", a, b))
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
@@ -77,39 +65,15 @@ object VectorExpressions {
 
   /** a·b in one pass. */
   case class DotProductF32(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
-          TypeCheckResult.TypeCheckSuccess
-        case _ => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires two array<float> arguments, " +
-            s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
-      }
+      extends BinaryExpression with F32Args {
     override def dataType: DataType = DoubleType
     override def prettyName: String = "dot_f32"
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val n = math.min(x.numElements(), y.numElements())
-      var dot = 0.0; var i = 0
-      while (i < n) { dot += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
-      dot
-    }
+    override def nullSafeEval(a: Any, b: Any): Any =
+      Kernels.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val (n, i, dot) = (ctx.freshName("n"), ctx.freshName("i"), ctx.freshName("dot"))
-        s"""
-           |int $n = Math.min($a.numElements(), $b.numElements());
-           |double $dot = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  $dot += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-           |}
-           |${ev.value} = $dot;
-         """.stripMargin
-      })
+      defineCodeGen(ctx, ev, (a, b) => Kernels.call("dot", a, b))
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
@@ -130,13 +94,8 @@ object VectorExpressions {
     * `> 0.0` threshold.
     */
   case class HyperplaneBucketF32(child: Expression, planes: Int, dim: Int,
-      seed: Long) extends UnaryExpression {
+      seed: Long) extends UnaryExpression with F32Args {
     require(planes >= 1 && planes <= 63, s"planes must be in [1,63], got $planes")
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an array<float> argument, got ${other.simpleString}")
-    }
     override def dataType: DataType = LongType
     override def prettyName: String = "hyperplane_bucket_f32"
 
@@ -147,42 +106,12 @@ object VectorExpressions {
       Array.fill(planes * dim)(rnd.nextGaussian())
     }
 
-    override def nullSafeEval(a: Any): Any = {
-      val v = a.asInstanceOf[ArrayData]
-      val n = math.min(dim, v.numElements())
-      var bucket = 0L
-      var i = 0
-      while (i < planes) {
-        val off = i * dim
-        var dot = 0.0
-        var j = 0
-        while (j < n) { dot += hp(off + j) * v.getFloat(j).toDouble; j += 1 }
-        if (dot > 0.0) bucket |= (1L << i)
-        i += 1
-      }
-      bucket
-    }
+    override def nullSafeEval(a: Any): Any =
+      Kernels.hyperplaneBucket(a.asInstanceOf[ArrayData], hp, planes, dim)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val hpRef = ctx.addReferenceObj("hyperplanes", hp, "double[]")
-      nullSafeCodeGen(ctx, ev, a => {
-        val (n, i, j, off, dot, bkt) = (ctx.freshName("n"), ctx.freshName("i"),
-          ctx.freshName("j"), ctx.freshName("off"), ctx.freshName("dot"),
-          ctx.freshName("bkt"))
-        s"""
-           |int $n = Math.min($dim, $a.numElements());
-           |long $bkt = 0L;
-           |for (int $i = 0; $i < $planes; $i++) {
-           |  int $off = $i * $dim;
-           |  double $dot = 0.0;
-           |  for (int $j = 0; $j < $n; $j++) {
-           |    $dot += $hpRef[$off + $j] * (double) $a.getFloat($j);
-           |  }
-           |  if ($dot > 0.0) $bkt |= (1L << $i);
-           |}
-           |${ev.value} = $bkt;
-         """.stripMargin
-      })
+      defineCodeGen(ctx, ev, a => Kernels.call("hyperplaneBucket", a, hpRef, planes, dim))
     }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -191,65 +120,25 @@ object VectorExpressions {
 
   /** Squared L2 distance to the NEAREST centroid (the value the argmin
     * kernel discards): the prototypicality score of Sorscher et al. 2022
-    * data pruning — far from every prototype = outlier/noise. Same fused
-    * loop, accumulation order and table reference as
-    * [[NearestCentroidF32]], so (argmin, mindist) pairs from the two
-    * kernels are always consistent, and an oracle can reproduce the
-    * value as `least(d_0..d_{k-1})` of identically-ordered sums.
+    * data pruning — far from every prototype = outlier/noise. The same
+    * scan as [[NearestCentroidF32]] (`Kernels.scanSqL2`), so (argmin,
+    * mindist) pairs from the two kernels are always consistent, and an
+    * oracle can reproduce the value as `least(d_0..d_{k-1})` of
+    * identically-ordered sums.
     */
   case class CentroidMinSqDistF32(child: Expression, centroidsFlat: Array[Double],
-      dim: Int) extends UnaryExpression {
+      dim: Int) extends UnaryExpression with F32Args {
     require(dim > 0 && centroidsFlat.length % dim == 0,
       s"centroid table length ${centroidsFlat.length} not a multiple of dim $dim")
-    private val k = centroidsFlat.length / dim
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an array<float> argument, got ${other.simpleString}")
-    }
     override def dataType: DataType = DoubleType
     override def prettyName: String = "centroid_min_sqdist_f32"
 
-    override def nullSafeEval(a: Any): Any = {
-      val v = a.asInstanceOf[ArrayData]
-      val n = math.min(dim, v.numElements())
-      var bestDist = Double.MaxValue
-      var c = 0
-      while (c < k) {
-        val off = c * dim
-        var dist = 0.0
-        var j = 0
-        while (j < n) {
-          val d = v.getFloat(j).toDouble - centroidsFlat(off + j)
-          dist += d * d; j += 1
-        }
-        if (dist < bestDist) bestDist = dist
-        c += 1
-      }
-      bestDist
-    }
+    override def nullSafeEval(a: Any): Any =
+      Kernels.centroidMinSqDist(a.asInstanceOf[ArrayData], centroidsFlat, dim)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val cRef = ctx.addReferenceObj("centroids", centroidsFlat, "double[]")
-      nullSafeCodeGen(ctx, ev, a => {
-        val (n, c, j, off, d, dist, bestDist) = (ctx.freshName("n"),
-          ctx.freshName("c"), ctx.freshName("j"), ctx.freshName("off"),
-          ctx.freshName("d"), ctx.freshName("dist"), ctx.freshName("bestDist"))
-        s"""
-           |int $n = Math.min($dim, $a.numElements());
-           |double $bestDist = Double.MAX_VALUE;
-           |for (int $c = 0; $c < $k; $c++) {
-           |  int $off = $c * $dim;
-           |  double $dist = 0.0;
-           |  for (int $j = 0; $j < $n; $j++) {
-           |    double $d = (double) $a.getFloat($j) - $cRef[$off + $j];
-           |    $dist += $d * $d;
-           |  }
-           |  if ($dist < $bestDist) $bestDist = $dist;
-           |}
-           |${ev.value} = $bestDist;
-         """.stripMargin
-      })
+      defineCodeGen(ctx, ev, a => Kernels.call("centroidMinSqDist", a, cRef, dim))
     }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -262,89 +151,31 @@ object VectorExpressions {
     * assignment shape that keeps scaled-k clustering linear when the
     * cell count tracks the corpus (see SCALING.md's next-decade caveat):
     * with k1 = k2 = √k, assignment cost is O(√k · dim) per vector.
-    * Returns the flat cell id `super · k2 + sub`. Same accumulation
-    * order and lowest-id tie-break as [[NearestCentroidF32]] at both
-    * levels, so an oracle reproduces the id with two nested
+    * Returns the flat cell id `super · k2 + sub`. Both levels run the scan
+    * of [[NearestCentroidF32]] (same accumulation order, lowest-id
+    * tie-break), so an oracle reproduces the id with two nested
     * earliest-minimum CASE chains.
     *
     * `subFlat` is row-major (k1 × k2) × dim: super cell c's sub table is
     * rows [c·k2, (c+1)·k2).
     */
   case class HierCellF32(child: Expression, superFlat: Array[Double],
-      subFlat: Array[Double], k2: Int, dim: Int) extends UnaryExpression {
+      subFlat: Array[Double], k2: Int, dim: Int) extends UnaryExpression with F32Args {
     require(dim > 0 && k2 > 0 && superFlat.length % dim == 0,
       s"super table length ${superFlat.length} not a multiple of dim $dim")
     private val k1 = superFlat.length / dim
     require(subFlat.length == k1 * k2 * dim,
       s"sub table length ${subFlat.length} != k1*k2*dim = ${k1 * k2 * dim}")
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an array<float> argument, got ${other.simpleString}")
-    }
     override def dataType: DataType = IntegerType
     override def prettyName: String = "hier_cell_f32"
 
-    override def nullSafeEval(a: Any): Any = {
-      val v = a.asInstanceOf[ArrayData]
-      val n = math.min(dim, v.numElements())
-      def argmin(flat: Array[Double], from: Int, count: Int): Int = {
-        var best = 0
-        var bestDist = Double.MaxValue
-        var c = 0
-        while (c < count) {
-          val off = (from + c) * dim
-          var dist = 0.0
-          var j = 0
-          while (j < n) {
-            val d = v.getFloat(j).toDouble - flat(off + j)
-            dist += d * d; j += 1
-          }
-          if (dist < bestDist) { bestDist = dist; best = c }
-          c += 1
-        }
-        best
-      }
-      val s = argmin(superFlat, 0, k1)
-      s * k2 + argmin(subFlat, s * k2, k2)
-    }
+    override def nullSafeEval(a: Any): Any =
+      Kernels.hierCell(a.asInstanceOf[ArrayData], superFlat, subFlat, k2, dim)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val supRef = ctx.addReferenceObj("superCentroids", superFlat, "double[]")
       val subRef = ctx.addReferenceObj("subCentroids", subFlat, "double[]")
-      nullSafeCodeGen(ctx, ev, a => {
-        val (n, c, j, off, d, dist, best, bestDist, s) = (ctx.freshName("n"),
-          ctx.freshName("c"), ctx.freshName("j"), ctx.freshName("off"),
-          ctx.freshName("d"), ctx.freshName("dist"), ctx.freshName("best"),
-          ctx.freshName("bestDist"), ctx.freshName("s"))
-        s"""
-           |int $n = Math.min($dim, $a.numElements());
-           |int $best = 0;
-           |double $bestDist = Double.MAX_VALUE;
-           |for (int $c = 0; $c < $k1; $c++) {
-           |  int $off = $c * $dim;
-           |  double $dist = 0.0;
-           |  for (int $j = 0; $j < $n; $j++) {
-           |    double $d = (double) $a.getFloat($j) - $supRef[$off + $j];
-           |    $dist += $d * $d;
-           |  }
-           |  if ($dist < $bestDist) { $bestDist = $dist; $best = $c; }
-           |}
-           |int $s = $best;
-           |$best = 0;
-           |$bestDist = Double.MAX_VALUE;
-           |for (int $c = 0; $c < $k2; $c++) {
-           |  int $off = ($s * $k2 + $c) * $dim;
-           |  double $dist = 0.0;
-           |  for (int $j = 0; $j < $n; $j++) {
-           |    double $d = (double) $a.getFloat($j) - $subRef[$off + $j];
-           |    $dist += $d * $d;
-           |  }
-           |  if ($dist < $bestDist) { $bestDist = $dist; $best = $c; }
-           |}
-           |${ev.value} = $s * $k2 + $best;
-         """.stripMargin
-      })
+      defineCodeGen(ctx, ev, a => Kernels.call("hierCell", a, supRef, subRef, k2, dim))
     }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -359,61 +190,18 @@ object VectorExpressions {
     * (deterministic across engines and partitionings).
     */
   case class NearestCentroidF32(child: Expression, centroidsFlat: Array[Double],
-      dim: Int) extends UnaryExpression {
+      dim: Int) extends UnaryExpression with F32Args {
     require(dim > 0 && centroidsFlat.length % dim == 0,
       s"centroid table length ${centroidsFlat.length} not a multiple of dim $dim")
-    private val k = centroidsFlat.length / dim
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an array<float> argument, got ${other.simpleString}")
-    }
     override def dataType: DataType = IntegerType
     override def prettyName: String = "nearest_centroid_f32"
 
-    override def nullSafeEval(a: Any): Any = {
-      val v = a.asInstanceOf[ArrayData]
-      val n = math.min(dim, v.numElements())
-      var best = 0
-      var bestDist = Double.MaxValue
-      var c = 0
-      while (c < k) {
-        val off = c * dim
-        var dist = 0.0
-        var j = 0
-        while (j < n) {
-          val d = v.getFloat(j).toDouble - centroidsFlat(off + j)
-          dist += d * d; j += 1
-        }
-        if (dist < bestDist) { bestDist = dist; best = c }
-        c += 1
-      }
-      best
-    }
+    override def nullSafeEval(a: Any): Any =
+      Kernels.nearestCentroid(a.asInstanceOf[ArrayData], centroidsFlat, dim)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val cRef = ctx.addReferenceObj("centroids", centroidsFlat, "double[]")
-      nullSafeCodeGen(ctx, ev, a => {
-        val (n, c, j, off, d, dist, best, bestDist) = (ctx.freshName("n"),
-          ctx.freshName("c"), ctx.freshName("j"), ctx.freshName("off"),
-          ctx.freshName("d"), ctx.freshName("dist"), ctx.freshName("best"),
-          ctx.freshName("bestDist"))
-        s"""
-           |int $n = Math.min($dim, $a.numElements());
-           |int $best = 0;
-           |double $bestDist = Double.MAX_VALUE;
-           |for (int $c = 0; $c < $k; $c++) {
-           |  int $off = $c * $dim;
-           |  double $dist = 0.0;
-           |  for (int $j = 0; $j < $n; $j++) {
-           |    double $d = (double) $a.getFloat($j) - $cRef[$off + $j];
-           |    $dist += $d * $d;
-           |  }
-           |  if ($dist < $bestDist) { $bestDist = $dist; $best = $c; }
-           |}
-           |${ev.value} = $best;
-         """.stripMargin
-      })
+      defineCodeGen(ctx, ev, a => Kernels.call("nearestCentroid", a, cRef, dim))
     }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -433,21 +221,15 @@ object VectorExpressions {
     * scaled value implemented exactly — `floor`-based tricks drift one ulp
     * on values just below .5.
     */
-  case class QuantizeAuditInt8F32(child: Expression) extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an array<float> argument, got ${other.simpleString}")
-    }
+  case class QuantizeAuditInt8F32(child: Expression) extends UnaryExpression with F32Args {
     override def dataType: DataType = QuantizeAuditInt8F32.schema
     override def prettyName: String = "quantize_audit_int8_f32"
 
     override def nullSafeEval(a: Any): Any =
-      QuantizeKernels.audit(a.asInstanceOf[ArrayData])
+      Kernels.audit(a.asInstanceOf[ArrayData])
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"""${ev.value} = graft.functions.QuantizeKernels.audit($a);""")
+      defineCodeGen(ctx, ev, a => Kernels.call("audit", a))
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -466,38 +248,15 @@ object VectorExpressions {
   }
 
   /** ‖v‖₂ in one pass. */
-  case class L2NormF32(child: Expression)
-      extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an array<float> argument, got ${other.simpleString}")
-    }
+  case class L2NormF32(child: Expression) extends UnaryExpression with F32Args {
     override def dataType: DataType = DoubleType
     override def prettyName: String = "l2_norm_f32"
 
-    override def nullSafeEval(a: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val n = x.numElements()
-      var s = 0.0; var i = 0
-      while (i < n) { val xi = x.getFloat(i).toDouble; s += xi * xi; i += 1 }
-      math.sqrt(s)
-    }
+    override def nullSafeEval(a: Any): Any =
+      Kernels.l2Norm(a.asInstanceOf[ArrayData])
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val (n, i, s, xi) = (ctx.freshName("n"), ctx.freshName("i"),
-          ctx.freshName("s"), ctx.freshName("xi"))
-        s"""
-           |int $n = $a.numElements();
-           |double $s = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  double $xi = (double) $a.getFloat($i);
-           |  $s += $xi * $xi;
-           |}
-           |${ev.value} = Math.sqrt($s);
-         """.stripMargin
-      })
+      defineCodeGen(ctx, ev, a => Kernels.call("l2Norm", a))
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -516,32 +275,24 @@ object VectorExpressions {
     */
   case class PqResidualCodesF32(left: Expression, right: Expression,
       coarseFlat: Array[Double], codebooksFlat: Array[Double],
-      m: Int, kSub: Int, dSub: Int) extends BinaryExpression {
+      m: Int, kSub: Int, dSub: Int) extends BinaryExpression with F32Args {
     require(coarseFlat.length % (m * dSub) == 0,
       s"coarse table length ${coarseFlat.length} not a multiple of dim ${m * dSub}")
     require(codebooksFlat.length == m * kSub * dSub,
       s"codebook table length ${codebooksFlat.length} != $m*$kSub*$dSub")
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(FloatType, _), IntegerType) =>
-          TypeCheckResult.TypeCheckSuccess
-        case _ => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires (array<float>, int) arguments, " +
-            s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
-      }
+    override protected def argTypes: Seq[DataType] = Seq(F32Vector, IntegerType)
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "pq_residual_codes_f32"
 
     override def nullSafeEval(a: Any, b: Any): Any =
-      QuantizeKernels.pqResidualCodes(a.asInstanceOf[ArrayData],
+      Kernels.pqResidualCodes(a.asInstanceOf[ArrayData],
         b.asInstanceOf[Int], coarseFlat, codebooksFlat, m, kSub, dSub)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val coarseRef = ctx.addReferenceObj("coarse", coarseFlat, "double[]")
       val cbRef = ctx.addReferenceObj("codebooks", codebooksFlat, "double[]")
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"""${ev.value} = graft.functions.QuantizeKernels.pqResidualCodes(
-           |  $a, $b, $coarseRef, $cbRef, $m, $kSub, $dSub);""".stripMargin)
+      defineCodeGen(ctx, ev, (a, b) =>
+        Kernels.call("pqResidualCodes", a, b, coarseRef, cbRef, m, kSub, dSub))
     }
 
     override protected def withNewChildrenInternal(
@@ -550,109 +301,8 @@ object VectorExpressions {
   }
 }
 
-/** Static loop body for [[VectorExpressions.QuantizeAuditInt8F32]] — a
-  * top-level object so generated code reaches it as a plain static call
-  * (`graft.functions.QuantizeKernels.audit(arr)`), keeping the expression
-  * inside the whole-stage-codegen span with zero per-element dispatch.
-  */
-object QuantizeKernels {
-
-  /** Exact round-half-up for non-negative d (parity with Spark round()
-    * HALF_UP and DuckDB round() half-away-from-zero on positives):
-    * `d - floor(d)` is exact for d < 2^52, so the .5 comparison cannot be
-    * perturbed the way `floor(d + 0.5)` is.
-    */
-  private def roundHalfUpNonNeg(d: Double): Long = {
-    val f = d.toLong
-    if (d - f >= 0.5) f + 1L else f
-  }
-
-  /** One fused pass: min/max, affine int8 codes, code stats, max
-    * reconstruction error. Shared by interpreted eval and generated code.
-    */
-  def audit(v: ArrayData): org.apache.spark.sql.catalyst.InternalRow = {
-    val n = v.numElements()
-    if (n == 0) // matches the HOF formulation: aggregate(empty)=0, min/max null
-      return org.apache.spark.sql.catalyst.InternalRow(
-        0L, null, null, 0L, null, null, null)
-    // min/max under SPARK's ordering (NaN sorts greatest): array_min skips
-    // NaN unless all elements are NaN, array_max is NaN if ANY element is —
-    // the HOF formulation sees exactly this, so the kernel must too
-    var qmin = v.getFloat(0).toDouble
-    var qmax = qmin
-    var i = 1
-    while (i < n) {
-      val x = v.getFloat(i).toDouble
-      if (x < qmin || qmin.isNaN) qmin = x
-      if (x > qmax || x.isNaN) qmax = x
-      i += 1
-    }
-    val span = qmax - qmin
-    val scale = span / 255.0
-    var cSum = 0L
-    var cMin = Long.MaxValue
-    var cMax = Long.MinValue
-    var maxErr = 0.0
-    i = 0
-    while (i < n) {
-      val x = v.getFloat(i).toDouble
-      val c = if (span == 0.0) 0L else roundHalfUpNonNeg((x - qmin) / scale)
-      cSum += c
-      if (c < cMin) cMin = c
-      if (c > cMax) cMax = c
-      if (span != 0.0) {
-        val err = math.abs(qmin + c.toDouble * scale - x)
-        // array_max semantics again: NaN (from a NaN element) wins and sticks
-        if (err > maxErr || err.isNaN) maxErr = err
-      }
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.InternalRow(
-      n.toLong, qmin, qmax, cSum, cMin, cMax, maxErr)
-  }
-
-  /** Static loop body for [[VectorExpressions.PqResidualCodesF32]] —
-    * residual PQ codes in one pass. Per subspace `i` and codebook entry
-    * `c`: dist = Σ_j (((double)v[i·dSub+j] − coarse[cid·dim + i·dSub+j])
-    * − cb[((i·kSub)+c)·dSub+j])², accumulated left-to-right; argmin with
-    * strictly-smaller update. Elements past the vector's length contribute
-    * nothing (ragged clamp, same contract as NearestCentroidF32).
-    */
-  def pqResidualCodes(v: ArrayData, cid: Int, coarse: Array[Double],
-      codebooksFlat: Array[Double], m: Int, kSub: Int,
-      dSub: Int): ArrayData = {
-    val dim = m * dSub
-    val n = v.numElements()
-    val codes = new Array[Long](m)
-    var i = 0
-    while (i < m) {
-      var best = 0
-      var bestDist = Double.MaxValue
-      var c = 0
-      while (c < kSub) {
-        val cbOff = (i * kSub + c) * dSub
-        var dist = 0.0
-        var j = 0
-        while (j < dSub) {
-          val idx = i * dSub + j
-          if (idx < n) {
-            val r = v.getFloat(idx).toDouble - coarse(cid * dim + idx)
-            val d = r - codebooksFlat(cbOff + j)
-            dist += d * d
-          }
-          j += 1
-        }
-        if (dist < bestDist) { bestDist = dist; best = c }
-        c += 1
-      }
-      codes(i) = best.toLong
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(codes)
-  }
-}
-
-/** Column-level API + SQL registration for the native vector kernels. */
+/** Column-level API for the native vector kernels (SQL names:
+  * [[graft.GraftExtensions]]). */
 object VectorFunctions {
   import VectorExpressions._
 
@@ -684,25 +334,4 @@ object VectorFunctions {
   }
 
   private def expression(c: Column): Expression = GraftExpressionBridge.expression(c)
-
-  /** Make the kernels available to SQL (`SELECT cosine_f32(a, b) ...`). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cosine_f32",
-      es => CosineSimilarityF32(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("dot_f32",
-      es => DotProductF32(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("l2_norm_f32",
-      es => L2NormF32(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("hyperplane_bucket_f32",
-      es => HyperplaneBucketF32(es(0),
-        graft.GraftExtensions.litInt(es(1), "planes"),
-        graft.GraftExtensions.litInt(es(2), "dim"),
-        if (es.size > 3) graft.GraftExtensions.litLong(es(3), "seed") else 42L),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("morton_z",
-      es => graft.GraftExtensions.mortonZExpr(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("quantize_audit_int8_f32",
-      es => QuantizeAuditInt8F32(es.head), "scala_udf")
-  }
 }

@@ -41,28 +41,6 @@ object Dedup {
     docs.join(keep, Seq(idCol), "left_semi")
   }
 
-  /** Word-level n-gram shingles (distinct) from an ALREADY-MATERIALIZED
-    * tokens column. `toks` must be a plain attribute reference, not an
-    * expression: it is referenced inside the transform lambda, and Spark's
-    * subexpression elimination does not reach into lambda bodies — an
-    * inline `regexp_extract_all` here would re-tokenize the document once
-    * per shingle (O(tokens²), catastrophic on long docs).
-    */
-  /** PRECONDITION: `size(toks) >= n` (filter rows first — see
-    * [[shingleFrame]]). Two deliberate performance choices, both measured
-    * at 14× on a 5000-doc corpus:
-    *  - no `when(size >= n, ...)` guard: an array-valued CaseWhen feeding
-    *    explode() drops the whole generate out of codegen into interpreted
-    *    per-element evaluation — filter the short rows instead;
-    *  - no array_distinct: its per-row O(n²) string-equality scan is
-    *    replaced by a hash-based dropDuplicates AFTER the explode. MinHash
-    *    doesn't need it at all (min over a multiset = min over its set).
-    */
-  def shinglesFromTokens(toks: Column, n: Int): Column =
-    transform(
-      sequence(lit(0), size(toks) - lit(n)),
-      i => concat_ws(" ", (0 until n).map(k => element_at(toks, i + lit(k + 1))): _*))
-
   /** Distinct (doc_id, shingle) pairs built WITHOUT array lambdas:
     * tokenize → posexplode → window `lead` to assemble n-grams → hash
     * dedup. Every expression here is codegen'd. The obvious alternative —
@@ -78,12 +56,12 @@ object Dedup {
       .dropDuplicates("doc_id", "shingle")
 
   /** (doc_id, shingle) WITH within-document multiplicity — the pre-dedup
-    * gram stream, split out for the OPTIMIZATION_r13.md §13 study. Note the
-    * dedup in [[explodedShingles]] is already exchange-free: completeGrams'
-    * HashPartitioning(doc_id) satisfies the dedup aggregate's
-    * ClusteredDistribution(doc_id, shingle), so deferring the dedup past
-    * the shingle exchange saves nothing and ships raw multiplicity
-    * (measured a wash — see [[jaccardPairsFromExploded]]'s probe note). */
+    * gram stream. The dedup in [[explodedShingles]] is already
+    * exchange-free: completeGrams' HashPartitioning(doc_id) satisfies the
+    * dedup aggregate's ClusteredDistribution(doc_id, shingle), so deferring
+    * the dedup past the shingle exchange saves nothing and ships raw
+    * multiplicity (measured a wash — see [[jaccardPairsFromExploded]]'s
+    * probe note). */
   private[graft] def rawShingles(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame =
     completeGrams(docs, idCol, textCol, n)
@@ -129,8 +107,8 @@ object Dedup {
     * ObjectHashAggregate buffer before discarding it — an OOM at 100 TB.
     *
     * Cache lifetime: the capped postings are read by two consumers (pair
-    * explode + per-doc sizes), so they are persisted at `persistLevel`
-    * (MEMORY_AND_DISK by default — spills, never OOMs). The RESULT pair
+    * explode + per-doc sizes), so they are persisted at MEMORY_AND_DISK
+    * (spills, never OOMs). The RESULT pair
     * set (tiny under the threshold) is then eagerly materialized via
     * `localCheckpoint` and the intermediate is unpersisted before
     * returning — repeated calls leave no INTERMEDIATE blocks behind
@@ -143,33 +121,32 @@ object Dedup {
     * @param maxDocFreq shingles appearing in more than this many docs are
     *                   dropped from the index (boilerplate / skew guard).
     * @param minJaccard similarity threshold on |A∩B| / |A∪B|.
-    * @param persistLevel storage level for the two reused intermediates;
-    *                     `None` recomputes them per consumer.
     */
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, minJaccard: Double = 0.5, maxDocFreq: Long = 20L,
-      persistLevel: Option[org.apache.spark.storage.StorageLevel] =
-        Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)): DataFrame = {
-    val intermediates = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def cached(df: DataFrame): DataFrame =
-      persistLevel.fold(df) { lvl =>
-        val p = df.persist(lvl); intermediates += p; p
-      }
+      n: Int = 3, minJaccard: Double = 0.5, maxDocFreq: Long = 20L): DataFrame =
     // the exploded index has a single consumer (the fused df-cap/postings
     // pass shuffles it once) — only the postings, read by both the pair
     // explode and the per-doc sizes, need a cache
-    val out = jaccardPairsFromExploded(
+    checkpointReleasing(cached => jaccardPairsFromExploded(
       explodedShingles(docs, idCol, textCol, n),
-      minJaccard, maxDocFreq, cached)
-    if (intermediates.isEmpty) out
-    else {
-      // one eager job: the thresholded pair set is tiny, the caches make
-      // its two-consumer upstream run once, and unpersisting here (not at
-      // LRU eviction) bounds the session's cache footprint to this call
-      val mat = out.cutLineage(true)
-      intermediates.foreach(_.unpersist(false))
-      mat
-    }
+      minJaccard, maxDocFreq, cached))
+
+  /** Storage level of the intermediates an operator persists for several
+    * consumers: spills, never OOMs. */
+  private val Intermediate = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+
+  /** `build`'s result, checkpointed in one eager job, after which every
+    * frame `build` passed through its `cached` argument (persisted at
+    * [[Intermediate]]) is unpersisted: the caches make a multi-consumer
+    * upstream run once, and unpersisting here (not at LRU eviction)
+    * bounds the session's cache footprint to the call. */
+  private def checkpointReleasing(
+      build: (DataFrame => DataFrame) => DataFrame): DataFrame = {
+    val intermediates = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    val out = build { df => val p = df.persist(Intermediate); intermediates += p; p }
+    val mat = out.cutLineage(true)
+    intermediates.foreach(_.unpersist(false))
+    mat
   }
 
   /** Pair generation from an already-materialized distinct (doc_id,
@@ -278,11 +255,10 @@ object Dedup {
     connectedComponentsCached(edges, srcCol, dstCol, maxIters).df
 
   /** The [[DriverBound]] gate of [[connectedComponentsCached]]:
-    * `Some(labels)` when the materialized edge frame `e` (columns src, dst)
-    * is bounded, null-free and integer-keyed; `None` → run the distributed
-    * loop. */
-  private def driverCcResult(e: DataFrame,
-      caches: Seq[DataFrame]): Option[Checkpoints.CachedResult] = {
+    * `Some(labels)`, a local table that no longer reads `e`, when the
+    * materialized edge frame `e` (columns src, dst) is bounded, null-free
+    * and integer-keyed; `None` → run the distributed loop. */
+  private def driverCcLabels(e: DataFrame): Option[DataFrame] = {
     val srcT = e.schema("src").dataType
     if (srcT != e.schema("dst").dataType ||
         (srcT != LongType && srcT != IntegerType)) return None
@@ -298,8 +274,7 @@ object Dedup {
       unionFindMinLabels(collected).foreach { case (id, lb) =>
         rows.add(if (srcT == LongType) Row(id, lb) else Row(id.toInt, lb.toInt))
       }
-      Checkpoints.CachedResult(
-        e.sparkSession.createDataFrame(rows, schema), caches)
+      e.sparkSession.createDataFrame(rows, schema)
     }
   }
 
@@ -344,9 +319,10 @@ object Dedup {
   }
 
   /** [[connectedComponents]] with its retained checkpoints handed out
-    * ([[Checkpoints.CachedResult]]): the final label table (the returned
-    * frame READS it — consume, then `release()`) and, when the input
-    * edge set was not already materialized, the edge checkpoint. The
+    * ([[Checkpoints.CachedResult]]): on the distributed side, the final
+    * label table (the returned frame READS it — consume, then `release()`)
+    * and, when the input edge set was not already materialized, the edge
+    * checkpoint; the driver side retains nothing. The
     * in-loop rule (each superseded round released as soon as its
     * successor materializes) is internal; only the terminal blocks need
     * the caller's lifecycle — same contract as [[semanticDedupCached]]
@@ -376,9 +352,12 @@ object Dedup {
     }
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val e = if (alreadyMaterialized) e0 else e0.cutLineage(true)
-    val driverSide =
-      driverCcResult(e, caches = if (alreadyMaterialized) Seq.empty else Seq(e))
-    if (driverSide.nonEmpty) return driverSide.get
+    val driverSide = driverCcLabels(e)
+    if (driverSide.nonEmpty) {
+      // the gate's collect has read the edges: release their checkpoint
+      if (!alreadyMaterialized) Checkpoints.release(e)
+      return Checkpoints.CachedResult(driverSide.get, Nil)
+    }
     val und = e
       .select(explode(array(
         struct(col("src"), col("dst")),
@@ -454,16 +433,6 @@ object Dedup {
     val rnd = new scala.util.Random(42)
     Seq.fill(k)((rnd.nextLong() | 1L, rnd.nextLong()))
   }
-
-  /** MinHash signature (length k) from a materialized shingle-hash column:
-    * k per-permutation minima via higher-order functions in one projection
-    * (no explode, no shuffle). `hashes` must be an attribute (see
-    * [[shinglesFromTokens]] for why).
-    */
-  def minhashFromHashes(hashes: Column, k: Int): Column =
-    array(permSeeds(k).map { case (a, b) =>
-      array_min(transform(hashes, h => h * lit(a) + lit(b)))
-    }: _*)
 
   /** (doc_id, sig) frame; docs too short to shingle keep a null signature
     * (restored via a join against the full id set).
@@ -570,66 +539,39 @@ object Dedup {
     */
   def sketchVsExactPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
-      maxDocFreq: Long = 20L,
-      persistLevel: Option[org.apache.spark.storage.StorageLevel] =
-        Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)): DataFrame = {
+      maxDocFreq: Long = 20L): DataFrame =
     // same cache-lifetime discipline as [[jaccardPairs]]: intermediates
     // persist for their multiple consumers, the audit RESULT (bounded by
     // the candidate-pair count) is checkpointed, intermediates released
-    val intermediates = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def cached(df: DataFrame): DataFrame =
-      persistLevel.fold(df) { lvl =>
-        val p = df.persist(lvl); intermediates += p; p
-      }
-    val exploded = cached(explodedShingles(docs, idCol, textCol, n))
-    val est = cached(lshCandidatesFromSigs(
-      minhashSigsFromExploded(exploded, bands * rowsPerBand),
-      bands, rowsPerBand, 0.0))
-    // Exact Jaccard ONLY where the sketch found a candidate: the capped
-    // index is restricted to candidate documents, per-doc shingle sets are
-    // collected (candidate docs only — a tiny fraction of the corpus), and
-    // each pair is scored by set intersection. This avoids materializing
-    // the full threshold-0 pair matrix just to audit the sketch.
-    val rare = exploded.groupBy("shingle").agg(count(lit(1)).as("df"))
-      .where(col("df") <= maxDocFreq).select("shingle")
-    val idx = exploded.join(rare, Seq("shingle"), "left_semi")
-    val candDocs = est.select(col("id_a").as("doc_id"))
-      .unionByName(est.select(col("id_b").as("doc_id"))).distinct()
-    val docSets = idx.join(candDocs, Seq("doc_id"), "left_semi")
-      .groupBy("doc_id").agg(collect_set(col("shingle")).as("sh"))
-    val nCommon = size(array_intersect(col("sh_a"), col("sh_b")))
-    val out = est
-      .join(docSets.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(docSets.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .withColumn("n_common", nCommon)
-      // parity with jaccardPairsFromExploded(minJaccard = 0): only pairs
-      // actually sharing a rare shingle have an exact row
-      .where(col("n_common") >= 1)
-      .withColumn("jaccard",
-        round(col("n_common").cast(DoubleType) /
-          (size(col("sh_a")) + size(col("sh_b")) - col("n_common")), 4))
-      .select(col("id_a"), col("id_b"), col("est_jaccard"), col("jaccard"))
-    if (intermediates.isEmpty) out
-    else {
-      val mat = out.cutLineage(true)
-      intermediates.foreach(_.unpersist(false))
-      mat
-    }
-  }
-
-  /** 64-bit SimHash from a materialized token-hash column: bit b of the
-    * signature is the majority vote of bit b across token hashes. `hashes`
-    * must be an attribute (lambda-recompute trap, see
-    * [[shinglesFromTokens]]).
-    */
-  def simhashFromHashes(hashes: Column): Column = {
-    val n = size(hashes)
-    val sig = (0 until 64).map { b =>
-      val ones = size(filter(hashes,
-        h => shiftright(h, b).bitwiseAND(lit(1L)) === lit(1L)))
-      when(ones * 2 >= n, lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ bitwiseOR _)
-    when(n > 0, sig).otherwise(lit(null).cast(LongType))
+    checkpointReleasing { cached =>
+      val exploded = cached(explodedShingles(docs, idCol, textCol, n))
+      val est = cached(lshCandidatesFromSigs(
+        minhashSigsFromExploded(exploded, bands * rowsPerBand),
+        bands, rowsPerBand, 0.0))
+      // Exact Jaccard ONLY where the sketch found a candidate: the capped
+      // index is restricted to candidate documents, per-doc shingle sets are
+      // collected (candidate docs only — a tiny fraction of the corpus), and
+      // each pair is scored by set intersection. This avoids materializing
+      // the full threshold-0 pair matrix just to audit the sketch.
+      val rare = exploded.groupBy("shingle").agg(count(lit(1)).as("df"))
+        .where(col("df") <= maxDocFreq).select("shingle")
+      val idx = exploded.join(rare, Seq("shingle"), "left_semi")
+      val candDocs = est.select(col("id_a").as("doc_id"))
+        .unionByName(est.select(col("id_b").as("doc_id"))).distinct()
+      val docSets = idx.join(candDocs, Seq("doc_id"), "left_semi")
+        .groupBy("doc_id").agg(collect_set(col("shingle")).as("sh"))
+      val nCommon = size(array_intersect(col("sh_a"), col("sh_b")))
+      est
+        .join(docSets.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
+        .join(docSets.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+        .withColumn("n_common", nCommon)
+        // parity with jaccardPairsFromExploded(minJaccard = 0): only pairs
+        // actually sharing a rare shingle have an exact row
+        .where(col("n_common") >= 1)
+        .withColumn("jaccard",
+          round(col("n_common").cast(DoubleType) /
+            (size(col("sh_a")) + size(col("sh_b")) - col("n_common")), 4))
+        .select(col("id_a"), col("id_b"), col("est_jaccard"), col("jaccard"))
   }
 
   /** Hamming distance between two 64-bit signatures. */
@@ -971,9 +913,7 @@ object Dedup {
     */
   def ingestNearIncremental(batch: DataFrame, index: DataFrame, idCol: String,
       textCol: String, n: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
-      minEstJaccard: Double = 0.7,
-      persistLevel: Option[org.apache.spark.storage.StorageLevel] =
-        Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)): IngestResult = {
+      minEstJaccard: Double = 0.7): IngestResult = {
     val k = bands * rowsPerBand
     // geometry guard: probing an index built with a different k silently
     // admits every duplicate (band hashes never collide) — fail fast on
@@ -989,8 +929,8 @@ object Dedup {
     // jaccardPairs; callers own the cache lifetime (handles returned in
     // IngestResult.caches)
     val cachedFrames = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def cached(df: DataFrame): DataFrame = persistLevel.fold(df) { lvl =>
-      val p = df.persist(lvl); cachedFrames += p; p
+    def cached(df: DataFrame): DataFrame = {
+      val p = df.persist(Intermediate); cachedFrames += p; p
     }
     val sigs = cached(sigsWithFallback(batch, idCol, textCol, n, k))
     val banded = cached(bandedFromSigs(sigs, bands, rowsPerBand))

@@ -115,11 +115,6 @@ object Similarity {
       .select(col(idCol), col("cos_sim"), col("bucket"))
   }
 
-  /** Per-vector L2 norms (sanity/statistics projection). */
-  def norms(vecs: DataFrame, idCol: String, vecCol: String): DataFrame =
-    vecs.select(col(idCol),
-      round(l2Norm(toDoubleVec(col(vecCol))), 4).as("l2_norm"))
-
   // ------------------------------------------------------------------ IVF
 
   /** IVF coarse quantizer: `k` centroids (row-major flat, k × dim). */

@@ -60,9 +60,6 @@ object TextAnalysis {
   /** Deterministic 128-bit content fingerprint of the normalized text. */
   def fingerprint(text: Column): Column = md5(normalized(text))
 
-  /** 64-bit rolling-style fingerprint (cheap, order-sensitive). */
-  def fingerprint64(text: Column): Column = xxhash64(normalized(text))
-
   val defaultStopwords: Seq[String] =
     Seq("the", "a", "an", "of", "and", "to", "in", "is", "it", "for")
 

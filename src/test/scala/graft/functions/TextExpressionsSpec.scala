@@ -33,7 +33,7 @@ class TextExpressionsSpec extends SparkSpec {
   }
 
   test("SQL registration via session extensions path") {
-    TextFunctions.register(spark)
+    graft.GraftExtensions.register(spark)
     val out = spark.sql(
       s"SELECT unicode_normalize('$decomposed', 'NFC') AS n").head().getString(0)
     assert(out == composed)

@@ -47,7 +47,7 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("SQL registration: cosine_f32 usable from spark.sql") {
-    VectorFunctions.register(spark)
+    graft.GraftExtensions.register(spark)
     graft.Tables.embeddings(spark, sf).createOrReplaceTempView("emb_v")
     val n = spark.sql(
       """SELECT vec_id, cosine_f32(embedding, embedding) AS self_sim FROM emb_v""")
@@ -56,7 +56,7 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("SQL registration: hyperplane_bucket_f32 matches the Column API") {
-    VectorFunctions.register(spark)
+    graft.GraftExtensions.register(spark)
     graft.Tables.embeddings(spark, sf).createOrReplaceTempView("emb_v2")
     val viaSql = spark.sql(
       "SELECT vec_id, hyperplane_bucket_f32(embedding, 12, 64) AS b FROM emb_v2")

@@ -21,8 +21,8 @@ class DriverBoundSpec extends SparkSpec {
       try r.df.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
       finally r.release()
     val drv = Dedup.connectedComponentsCached(edges, "a", "b")
-    assert(fromDriver(drv.df) && drv.caches.size == 1,
-      "a 5-edge set must take the driver union-find (edge checkpoint only)")
+    assert(fromDriver(drv.df) && drv.caches.isEmpty,
+      "a 5-edge set must take the driver union-find (nothing retained)")
     val dist = DriverBound.distributedOnly(
       Dedup.connectedComponentsCached(edges, "a", "b"))
     assert(!fromDriver(dist.df) && dist.caches.size == 2,

@@ -41,7 +41,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("SQL registration: morton_z matches the Column API") {
-    graft.functions.VectorFunctions.register(spark)
+    graft.GraftExtensions.register(spark)
     val df = Seq((3L, 1L), (123L, 456L)).toDF("a", "b")
     df.createOrReplaceTempView("mz_v")
     val viaSql = spark.sql("SELECT morton_z(a, b) AS z FROM mz_v")

@@ -31,24 +31,35 @@ class DedupSpec extends SparkSpec {
     assert(!pairs.exists { case (a, b, _) => Set(a, b).contains(3L) })
   }
 
+  /** RDD ids persisted now that were not in `before`. */
+  private def persistedSince(before: Set[Int]): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+
   test("jaccardPairs unpersists its intermediates: bounded cache across repeated calls") {
-    // a storage level used nowhere else in the pipeline, so any surviving
-    // MEMORY_ONLY block is provably a leaked intermediate (the result
-    // localCheckpoint persists at MEMORY_AND_DISK)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_ONLY
-    def leaked = spark.sparkContext.getPersistentRDDs.values
-      .count(_.getStorageLevel == lvl)
+    // the result checkpoint is the caller's to release; once it is, every
+    // block the call persisted must be gone
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     (1 to 3).foreach { i =>
       val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", n = 3,
-        minJaccard = 0.3, maxDocFreq = 10L, persistLevel = Some(lvl))
+        minJaccard = 0.3, maxDocFreq = 10L)
       assert(pairs.count() > 0)
-      assert(leaked == 0, s"call $i left a persisted intermediate behind")
+      Checkpoints.release(pairs)
+      assert(persistedSince(before).isEmpty, s"call $i left a persisted intermediate behind")
     }
-    // same contract for the sketch-audit pipeline (3 cached intermediates)
-    val audit = Dedup.sketchVsExactPairs(docs, "doc_id", "text",
-      persistLevel = Some(lvl))
+    // same contract for the sketch-audit pipeline (2 cached intermediates)
+    val audit = Dedup.sketchVsExactPairs(docs, "doc_id", "text")
     audit.count()
-    assert(leaked == 0, "sketchVsExactPairs left a persisted intermediate behind")
+    Checkpoints.release(audit)
+    assert(persistedSince(before).isEmpty,
+      "sketchVsExactPairs left a persisted intermediate behind")
+  }
+
+  test("connectedComponents on the driver side leaves no edge checkpoint behind") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a", "b") // lazy: not materialized
+    val cc = Dedup.connectedComponents(edges, "a", "b").collect()
+    assert(cc.length == 5)
+    assert(persistedSince(before).isEmpty, "connectedComponents left a checkpoint behind")
   }
 
   test("incremental near-dup ingest: index dups, in-batch dups, novel docs") {
