@@ -167,29 +167,44 @@ object StockEtl {
     frames.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** Global sort for the consolidated output (O1, DAG:216). */
-  def consolidate(df: DataFrame): DataFrame = df.orderBy("Date", "Symbol")
+  /** The consolidated output (O1, DAG:216): one partition sorted by
+    * (Date, Symbol). It stages the same rows in the same order as a global
+    * `orderBy` followed by `coalesce(1)`, but a global sort first runs a
+    * range-sampling job to pick its partition bounds; gathering into one
+    * partition and sorting there needs none.
+    */
+  def consolidate(df: DataFrame): DataFrame =
+    df.repartition(1).sortWithinPartitions("Date", "Symbol")
 
-  /** Quality summary (A1–A4, DAG:219–227) in ONE pass: total rows, distinct
-    * symbols, date range, and per-column null counts — not one job per
-    * column, which would rescan the input N times at 100 TB.
+  /** The quality-summary aggregates (A1–A4, DAG:219–227): total rows,
+    * distinct symbols, date range and per-column null counts. One list
+    * serves [[qualitySummary]] and the `Observation` that
+    * [[Pipeline.run]] attaches to its stage write. Observed metrics reject
+    * DISTINCT aggregates, so `n_symbols` is the size of the symbol set;
+    * the constituent list bounds that set.
+    */
+  def qualityAggs(df: DataFrame): Seq[Column] = Seq(
+    count(lit(1)).as("n_rows"),
+    size(collect_set(col("Symbol"))).cast(LongType).as("n_symbols"),
+    min(col("Date")).as("min_date"),
+    max(col("Date")).as("max_date")) ++
+    df.columns.toSeq.map(c => sum(col(c).isNull.cast(LongType)).as(s"nulls_$c"))
+
+  /** Quality summary (A1–A4) in ONE pass — not one job per column, which
+    * would rescan the input N times at 100 TB.
     */
   def qualitySummary(df: DataFrame): DataFrame = {
-    val nullCounts = df.columns.toSeq.map(c =>
-      sum(col(c).isNull.cast(LongType)).as(s"nulls_$c"))
-    val aggs = Seq(
-      count(lit(1)).as("n_rows"),
-      countDistinct(col("Symbol")).as("n_symbols"),
-      min(col("Date")).as("min_date"),
-      max(col("Date")).as("max_date")) ++ nullCounts
+    val aggs = qualityAggs(df)
     df.agg(aggs.head, aggs.tail: _*)
   }
 
   /** Option-parity CSV stage sink (S4, DAG:229–242): QUOTE_ALL, empty string
     * for null, `yyyy-MM-dd` dates, `%.4f` floats via pre-formatting.
     * `coalesce(1)` reproduces the reference's single-file contract — the one
-    * deliberately anti-scale spot in the engine; keep it off the bench path
-    * (SURVEY §7.5-4).
+    * deliberately anti-scale spot in the engine (SURVEY §7.5-4). Over a
+    * [[consolidate]]d frame it is a no-op: that frame is one partition
+    * already, so the write runs in the same stage as the sort and any
+    * metrics observed on the frame.
     */
   def writeCsvStage(df: DataFrame, path: String): Unit = {
     val formatted = df.schema.fields.foldLeft(df) { (acc, f) =>

@@ -140,9 +140,10 @@ object WarehouseLoad {
 
   /** Consume-once deletion through the Hadoop FileSystem API — PURGE must
     * work identically on local FS, HDFS, and object stores; a
-    * `java.io.File` walk silently no-ops on anything remote.
+    * `java.io.File` walk silently no-ops on anything remote. Also how
+    * [[graft.etl.Pipeline.run]] clears a stage it must not load.
     */
-  private def purge(spark: SparkSession, stagePath: String): Unit = {
+  private[graft] def purge(spark: SparkSession, stagePath: String): Unit = {
     val path = new org.apache.hadoop.fs.Path(stagePath)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(path) && fs.getFileStatus(path).isDirectory)

@@ -169,11 +169,12 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("retry: transient DISTRIBUTED read failure recovers (full run)") {
-    // The executor-side fault fires on a row the stage-2 probe
-    // (limit(1).count) never reaches, so only the retried first full
-    // materialization can observe — and recover from — it. A filter is
-    // used (not a projected column) so no optimizer rule can prune the
-    // fault out of the plan. Shared-JVM state is valid in local mode.
+    // The executor-side fault fires in the one action that reads the bars:
+    // the observed CSV stage write. The retried write must recover from it
+    // and still report the quality numbers of the attempt that succeeded.
+    // A filter is used (not a projected column) so no optimizer rule can
+    // prune the fault out of the plan. Shared-JVM state is valid in local
+    // mode.
     PipelineSpec.faultArmed.set(true)
     val tmp = java.nio.file.Files.createTempDirectory("pipeflaky").toString
     writeBarsCsv(tmp)
@@ -195,7 +196,108 @@ class PipelineSpec extends SparkSpec {
       java.sql.Date.valueOf("2024-01-01"), java.sql.Date.valueOf("2024-01-31"),
       stageDir = s"$tmp/stage", warehouseDir = s"$tmp/warehouse")
     assert(report.loadedRows == 4L, "run did not recover from the transient fault")
-    assert(!PipelineSpec.faultArmed.get, "fault was never triggered — probe scope grew?")
+    assert(report.nRows == 4L && report.nSymbols == 3L,
+      s"recovered run reported ${report.nRows} rows, ${report.nSymbols} symbols")
+    assert(!PipelineSpec.faultArmed.get, "fault was never triggered")
+  }
+
+  test("C5 empty fetch: an all-out-of-range window raises and leaves no stage or warehouse") {
+    val tmp = java.nio.file.Files.createTempDirectory("pipeempty").toString
+    writeBarsCsv(tmp)
+    // the window is empty at run time; the second source's frame is empty
+    // when it is planned
+    val emptyFrame = new graft.sources.BarSource {
+      def fetch(s: org.apache.spark.sql.SparkSession,
+          symbols: org.apache.spark.sql.DataFrame,
+          start: java.sql.Date, end: java.sql.Date) =
+        s.read.option("header", "true").csv(s"$tmp/bars.csv").limit(0)
+    }
+    Seq("csv" -> new CsvBarSource(s"$tmp/bars.csv"), "empty" -> emptyFrame).foreach {
+      case (name, source) =>
+        val ex = intercept[IllegalArgumentException] {
+          Pipeline.run(spark,
+            new HtmlTableConstituentSource(() => fixtureHtml), source,
+            java.sql.Date.valueOf("2030-01-01"), java.sql.Date.valueOf("2030-01-31"),
+            stageDir = s"$tmp/stage_$name", warehouseDir = s"$tmp/warehouse_$name")
+        }
+        assert(ex.getMessage.contains("no bars fetched"), s"$name: ${ex.getMessage}")
+        PipelineSpec.assertNothingLanded(s"$tmp/stage_$name", s"$tmp/warehouse_$name")
+    }
+  }
+
+  test("one read of the bars: a daily run stays within 12 jobs, one observed scan, no cache, no range sort") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val tmp = java.nio.file.Files.createTempDirectory("pipeaudit").toString
+    writeBarsCsv(tmp)
+    val (runGroup, doneGroup) = ("pipeline-audit-run", "pipeline-audit-done")
+    // Job starts and query executions arrive on the same listener queue,
+    // in order: once the marker job's start is seen, every event of the
+    // run before it has been delivered too.
+    val audit = new SparkListener with QueryExecutionListener {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val done = new java.util.concurrent.CountDownLatch(1)
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`runGroup`) => jobs.incrementAndGet()
+          case Some(`doneGroup`) => done.countDown()
+          case _ =>
+        }
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(audit)
+    spark.listenerManager.register(audit)
+    try {
+      sc.setJobGroup(runGroup, runGroup)
+      val report = try Pipeline.run(spark,
+        new HtmlTableConstituentSource(() => fixtureHtml),
+        new CsvBarSource(s"$tmp/bars.csv"),
+        java.sql.Date.valueOf("2024-01-01"), java.sql.Date.valueOf("2024-01-31"),
+        stageDir = s"$tmp/stage", warehouseDir = s"$tmp/warehouse")
+      finally sc.clearJobGroup()
+      assert(report.loadedRows == 4L)
+      sc.setJobGroup(doneGroup, doneGroup)
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      assert(audit.done.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the marker job")
+      assert(audit.jobs.get <= 12, s"${audit.jobs.get} jobs for one fixture run")
+
+      import scala.jdk.CollectionConverters._
+      val helper = new AdaptiveSparkPlanHelper {}
+      // CSV decodes of the bar file; the source's header read is a text scan
+      def barScans(qe: QueryExecution) = helper.collect(qe.executedPlan) {
+        case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[CSVFileFormat] &&
+            s.relation.location.rootPaths.exists(_.getName == "bars.csv") => s
+      }
+      // exactly one query decodes the bars: the stage write
+      val readers = audit.plans.asScala.toSeq.filter(qe => barScans(qe).nonEmpty)
+      assert(readers.size == 1, s"${readers.size} queries read the bars:\n" +
+        readers.map(_.executedPlan).mkString("\n\n"))
+      val write = readers.head.executedPlan
+      assert(barScans(readers.head).size == 1, s"bars scanned twice:\n$write")
+      val observed = helper.collect(write) {
+        case m if m.nodeName == "CollectMetrics" => m
+      }
+      assert(observed.size == 1, s"expected one CollectMetrics node:\n$write")
+      assert(helper.collect(write) { case c: InMemoryTableScanExec => c }.isEmpty,
+        s"the write reads a cached relation:\n$write")
+      assert(helper.collect(write) {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }.isEmpty, s"the write range-partitions:\n$write")
+    } finally {
+      spark.listenerManager.unregister(audit)
+      sc.removeSparkListener(audit)
+    }
   }
 
   test("retry: transient source failure recovers") {
@@ -216,4 +318,13 @@ class PipelineSpec extends SparkSpec {
 object PipelineSpec {
   /** armed → the next executor task that sees the marker row throws once */
   val faultArmed = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** A failed run staged no CSV and created no warehouse. */
+  def assertNothingLanded(stageDir: String, warehouseDir: String): Unit = {
+    import org.scalatest.Assertions.assert
+    val staged = Option(new java.io.File(s"$stageDir/stock_stage").listFiles())
+      .getOrElse(Array.empty).map(_.getName)
+    assert(!staged.exists(_.endsWith(".csv")), s"staged csv left behind: ${staged.toSeq}")
+    assert(!new java.io.File(warehouseDir).exists(), s"$warehouseDir was created")
+  }
 }

@@ -109,6 +109,60 @@ class StockEtlSpec extends SparkSpec {
     assert(r.getAs[Long]("nulls_Open") == 0L)
   }
 
+  test("qualityAggs observed on a write equal qualitySummary, nulls in several columns") {
+    val df = Seq(
+      ("2024-01-01", "AAA", Some(10.0), Some(12.0), Some(100L)),
+      ("2024-01-02", "AAA", None, Some(13.0), None),
+      ("2024-01-02", "BRK.B", Some(5.0), None, None),
+      ("2024-01-03", null, None, Some(1.0), Some(7L)),
+      (null, "BBB", Some(1.0), Some(2.0), Some(3L)))
+      .toDF("Date", "Symbol", "Open", "High", "Volume")
+      .withColumn("Date", to_date($"Date"))
+      .repartition(3)
+    val want = StockEtl.qualitySummary(df).head()
+    val obs = org.apache.spark.sql.Observation()
+    val aggs = StockEtl.qualityAggs(df)
+    df.observe(obs, aggs.head, aggs.tail: _*).write.format("noop").mode("overwrite").save()
+    assert(obs.get == want.getValuesMap[Any](want.schema.fieldNames))
+    assert(want.getAs[Long]("n_symbols") == 3L && want.getAs[Long]("nulls_Open") == 2L &&
+      want.getAs[Long]("nulls_Volume") == 2L && want.getAs[Long]("nulls_Date") == 1L)
+  }
+
+  test("consolidate stages the same bytes as a global orderBy + coalesce(1)") {
+    // five days of three symbols over four partitions: ±Infinity pct
+    // changes (zero previous Close), a NaN Open, a null Volume, BRK.B
+    val rows = for {
+      (sym, i) <- Seq("AAA", "BRK.B", "ZZ-A").zipWithIndex
+      d <- 1 to 5
+    } yield {
+      val close = if (sym == "AAA" && d == 2) 0.0 else if (sym == "ZZ-A" && d == 4) -2.0
+        else 10.0 * (i + 1) + d * 0.125
+      val open = if (sym == "BRK.B" && d == 3) Double.NaN else close - 0.5
+      (f"2024-01-0$d", sym, Option(open), Option(close + 1.0), Option(close - 1.0),
+        Option(close), if (d == 5) None else Some(100L * d))
+    }
+    val zeroPrev = Seq(("2024-01-03", "ZZ-A", Some(0.0), Some(1.0), Some(0.0), Some(0.0), Some(1L)))
+    val df = StockEtl.enrich((rows.filterNot(r => r._1 == "2024-01-03" && r._2 == "ZZ-A") ++ zeroPrev)
+      .toDF("Date", "Symbol", "Open", "High", "Low", "Close", "Volume")
+      .withColumn("Date", to_date($"Date")))
+      .repartition(4)
+    val pct = df.select("Close_Pct_Change").as[Double].collect()
+    assert(pct.exists(_.isPosInfinity) && pct.exists(_.isNegInfinity))
+    val dir = java.nio.file.Files.createTempDirectory("consolidate").toString
+    def staged(out: String, frame: org.apache.spark.sql.DataFrame): Array[Byte] = {
+      StockEtl.writeCsvStage(frame, s"$dir/$out")
+      val csvs = new java.io.File(s"$dir/$out").listFiles().filter(_.getName.endsWith(".csv"))
+      assert(csvs.length == 1, s"$out: ${csvs.length} csv files")
+      java.nio.file.Files.readAllBytes(csvs.head.toPath)
+    }
+    val sorted = staged("sorted", df.orderBy("Date", "Symbol"))
+    val consolidated = staged("consolidated", StockEtl.consolidate(df))
+    val text = new String(consolidated, "UTF-8")
+    assert(text.contains("\"inf\"") && text.contains("\"-inf\"") && text.contains("BRK.B"))
+    assert(java.util.Arrays.equals(sorted, consolidated),
+      s"staged bytes differ:\n${new String(sorted, "UTF-8")}\n---\n$text")
+  }
+
   test("csv stage sink: quote-all, %.4f, empty-for-null round trip") {
     val dir = java.nio.file.Files.createTempDirectory("csvstage").toString
     val df = StockEtl.enrich(bars(

@@ -135,6 +135,7 @@ class HttpBarSourceSpec extends SparkSpec {
           jan1, jan31, s"$tmp/stage", s"$tmp/warehouse")
       }
       assert(ex.getMessage.contains("no bars fetched"))
+      graft.etl.PipelineSpec.assertNothingLanded(s"$tmp/stage", s"$tmp/warehouse")
     }
   }
 
