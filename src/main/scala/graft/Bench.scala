@@ -101,10 +101,12 @@ object Bench {
     def isolate(): Unit = {
       spark.sqlContext.clearCache()
       // clearCache only drops SQL-plan caches; lazy localCheckpoint
-      // blocks (semanticDedup*'s assignment, PageRank's inMass) live as
-      // persisted RDDs outside the CacheManager and would otherwise sit
-      // in executor storage across runs until the ContextCleaner happens
-      // to reap them
+      // blocks live as persisted RDDs outside the CacheManager. The query
+      // builders keep only `.df` of each operator's CachedResult (the
+      // SemDeDup assignment, PageRank's inMass, the CC labels, the BPE
+      // word table, the bigram tf table), so their blocks would otherwise
+      // sit in executor storage across runs until the ContextCleaner
+      // happens to reap them — this frees every persisted RDD instead
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       System.gc()
     }
@@ -458,14 +460,15 @@ object Bench {
     // part of the SemDeDup operating point, same as growing k.
     val index = Similarity.trainIvfCentroids(doubled, "vec_id", "embedding",
       k = k, sampleSize = 2048, iters = 10)
-    Dedup.semanticDedup(doubled, "vec_id", "embedding", index, minCosine = 0.95)
+    Dedup.semanticDedupCached(doubled, "vec_id", "embedding", index,
+      minCosine = 0.95).df
   }
 
   /** Study-only query: the scaled-k operating point with TWO-LEVEL
-    * assignment (`Dedup.semanticDedupHier`) — k grows with the corpus as
-    * in [[semanticDedupScaledK]], but the per-vector assignment cost is
-    * O(k1 + k2) = O(√k) instead of O(k), the SCALING.md next-decade
-    * composition. One bounded-sample training job regardless of k
+    * assignment (`Dedup.semanticDedupHierCached`) — k grows with the
+    * corpus as in [[semanticDedupScaledK]], but the per-vector assignment
+    * cost is O(k1 + k2) = O(√k) instead of O(k), the SCALING.md
+    * next-decade composition. One bounded-sample training job regardless of k
     * (`Similarity.trainHierCentroids`).
     */
   private def semanticDedupHierK(spark: SparkSession, dir: String) = {
@@ -475,8 +478,8 @@ object Bench {
     val k2 = math.max(2, math.ceil(k.toDouble / k1).toInt)
     val (sup, sub) = Similarity.trainHierCentroids(doubled, "vec_id",
       "embedding", k1 = k1, k2 = k2, sampleSize = 4096, iters = 10)
-    Dedup.semanticDedupHier(doubled, "vec_id", "embedding", sup, sub,
-      k2 = k2, dim = 64, minCosine = 0.95)
+    Dedup.semanticDedupHierCached(doubled, "vec_id", "embedding", sup, sub,
+      k2 = k2, dim = 64, minCosine = 0.95).df
   }
 
   /** Shared fixture for the two SemDeDup study rows — the flat and hier

@@ -729,8 +729,8 @@ object SparkEntry {
     // the shared deterministic ln + 2^32 fixed-point sums. minCount = 3
     // exercises both floor paths at sf0.01.
     "q_bigram_logprob" -> q { (s, dir) =>
-      TextAnalysis.bigramLogProb(Tables.documents(s, dir), "doc_id",
-        minCount = 3L)
+      TextAnalysis.bigramLogProbCached(Tables.documents(s, dir), "doc_id",
+        minCount = 3L).df
     },
 
     // Learned quality-classifier inference (fastText/CCNet shape): hashed
@@ -786,8 +786,8 @@ object SparkEntry {
     // symbols at C+rank-1). Emitted exploded — (doc_id, pos, token_id) is
     // scalar-exact; the oracle replays merges, vocab and reassembly.
     "q_bpe_encode" -> q { (s, dir) =>
-      Bpe.encode(Tables.documents(s, dir), "doc_id", "text",
-          merges = encodeMerges)
+      Bpe.encodeCachedWithModel(Tables.documents(s, dir), "doc_id", "text",
+          merges = encodeMerges)._1.df
         .select(col("doc_id"),
           posexplode(col("token_ids")).as(Seq("pos", "token_id")))
         .select(col("doc_id"), col("pos").cast(LongType).as("pos"),
@@ -799,9 +799,9 @@ object SparkEntry {
     // offset inside its (pack_bucket, pack_bin) training sequence. The
     // last step of an LLM data pipeline, end-to-end bit-exact.
     "q_tokenize_pack" -> q { (s, dir) =>
-      graft.ops.Curate.tokenizePack(Tables.documents(s, dir), "doc_id",
+      graft.ops.Curate.tokenizePackCached(Tables.documents(s, dir), "doc_id",
           "text", merges = encodeMerges, packBudget = 128L, packBuckets = 8)
-        .select(col("pack_bucket"), col("pack_bin"), col("doc_id"),
+        .df.select(col("pack_bucket"), col("pack_bin"), col("doc_id"),
           col("bin_offset"),
           posexplode(col("token_ids")).as(Seq("pos", "token_id")))
         .select(col("pack_bucket"), col("pack_bin"), col("doc_id"),
@@ -2114,9 +2114,9 @@ object SparkEntry {
           report = false, htmlInput = true).docs
         .select(col("doc_id"), col("text"), col("quality_score"),
           col("split"))
-      graft.ops.Curate.tokenizePack(curated, "doc_id", "text",
+      graft.ops.Curate.tokenizePackCached(curated, "doc_id", "text",
           merges = encodeMerges, packBudget = 128L, packBuckets = 8)
-        .join(curated.select(col("doc_id"), col("quality_score"),
+        .df.join(curated.select(col("doc_id"), col("quality_score"),
           col("split")), Seq("doc_id"))
         .select(col("doc_id"), col("quality_score"), col("split"),
           col("n_tokens").cast(LongType).as("n_tokens"),
@@ -2337,9 +2337,9 @@ object SparkEntry {
       val emb = doubledEmbeddings(s, dir)
         .where(col("embedding").isNotNull && size(col("embedding")) === 64 &&
           !exists(col("embedding"), _.isNull))
-      Dedup.semanticDedup(emb, "vec_id", "embedding",
+      Dedup.semanticDedupCached(emb, "vec_id", "embedding",
         Similarity.IvfIndex(Similarity.fixedCentroids(k = 8, dim = 64), 64),
-        minCosine = 0.95)
+        minCosine = 0.95).df
     },
 
     // SemDeDup with TWO-LEVEL assignment (r5, the SCALING.md next-decade
@@ -2353,10 +2353,10 @@ object SparkEntry {
       val emb = doubledEmbeddings(s, dir)
         .where(col("embedding").isNotNull && size(col("embedding")) === 64 &&
           !exists(col("embedding"), _.isNull))
-      Dedup.semanticDedupHier(emb, "vec_id", "embedding",
+      Dedup.semanticDedupHierCached(emb, "vec_id", "embedding",
         Similarity.fixedCentroids(4, 64, seed = 7L),
         Similarity.fixedCentroids(16, 64, seed = 13L), k2 = 4, dim = 64,
-        minCosine = 0.95)
+        minCosine = 0.95).df
     },
 
     // Multiprobe-LSH recall against exact nearest-neighbor ground truth —
@@ -2720,16 +2720,17 @@ object SparkEntry {
     // DuckDB twin (same recurrence unrolled as CTEs, `//` floor division)
     // hashes identically — retires the r3 "declared necessity". Iterations
     // are shuffled join+agg rounds with constant-depth lineage, the CC
-    // iteration discipline; the double variant stays in PageRank.run for
-    // callers wanting IEEE semantics (spec'd under tolerance).
+    // iteration discipline; the double variant stays in
+    // PageRank.runCached for callers wanting IEEE semantics (spec'd under
+    // tolerance).
     "q_pagerank" -> q { (s, dir) =>
       val edges = Tables.lineitem(s, dir)
         .where(col("l_orderkey") % 5 === 0)
         .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey").as("src"),
           (col("l_suppkey") + lit(1000000L)).as("dst"))
-      graft.ops.PageRank.runFixedPoint(edges, "src", "dst", iters = 3)
-        .orderBy(col("rank_fp").desc, col("id"))
+      graft.ops.PageRank.runFixedPointCached(edges, "src", "dst", iters = 3)
+        .df.orderBy(col("rank_fp").desc, col("id"))
         .limit(25)
         .select(col("id"), col("rank_fp"))
     },
@@ -4163,10 +4164,10 @@ object SparkEntry {
     * derived from the SAME bit width, so a kSub change cannot desync the
     * two sides).
     */
-  /** Fixed-point PageRank oracle: PageRank.runFixedPoint's recurrence
-    * unrolled as chained CTEs. All arithmetic is BIGINT multiply and `//`
-    * floor division on nonnegative operands — identical to the engine's
-    * Scala `/` on Long and SQL `div`, so the ranks are bit-equal by
+  /** Fixed-point PageRank oracle: PageRank.runFixedPointCached's
+    * recurrence unrolled as chained CTEs. All arithmetic is BIGINT multiply
+    * and `//` floor division on nonnegative operands — identical to the
+    * engine's Scala `/` on Long and SQL `div`, so the ranks are bit-equal by
     * construction, not by tolerance.
     */
   private def pageRankOracleSql(iters: Int): String = {
@@ -4677,11 +4678,11 @@ object SparkEntry {
   }
 
   /** Shared CTE chain for the encode oracles (mirror of
-    * [[graft.ops.Bpe.vocab]] + [[graft.ops.Bpe.encode]]): replay a FIXED
-    * merge list, build the vocab (base alphabet by lexicographic
-    * row_number, merge symbols at C+rank-1 with the first-wins dup rule
-    * applied driver-side — the same Scala dedup the engine runs), then
-    * reassemble per-doc token-id lists in text order. Ends with CTE
+    * [[graft.ops.Bpe.vocab]] + [[graft.ops.Bpe.encodeCachedWithModel]]):
+    * replay a FIXED merge list, build the vocab (base alphabet by
+    * lexicographic row_number, merge symbols at C+rank-1 with the first-wins
+    * dup rule applied driver-side — the same Scala dedup the engine runs),
+    * then reassemble per-doc token-id lists in text order. Ends with CTE
     * `docids(doc_id, token_ids)`. MATERIALIZED throughout (round N
     * references round N-1 — the CTE-inlining blow-up rule). */
   private def bpeEncodeCtes(merges: Seq[(String, String)],
@@ -4763,7 +4764,7 @@ object SparkEntry {
     * first-8-tokens paragraph + remainder under the density gate), the
     * full curation chain ([[curateCtes]]) runs over that surviving
     * extracted corpus, and BPE encode + packing ([[bpeEncodeCtes]] with
-    * the curated survivors as the corpus) replays the tokenizePack
+    * the curated survivors as the corpus) replays the tokenizePackCached
     * terminal. A plumbing regression BETWEEN any two stages — gate keeps
     * feeding extraction, extraction feeding dedup digests, curation
     * survivors feeding the tokenizer's word table — hash-fails even
@@ -4880,9 +4881,9 @@ object SparkEntry {
   }
 
   /** Oracle for `q_semantic_dedup` (DuckDB mirror of
-    * [[graft.ops.Dedup.semanticDedup]]): the doubled near-dup fixture,
-    * the same fixed-centroid argmin as [[ivfAssignOracleSql]] (distances
-    * in kernel accumulation order, earliest-minimum tie-break), then the
+    * [[graft.ops.Dedup.semanticDedupCached]]): the doubled near-dup fixture,
+    * the same fixed-centroid argmin as [[ivfAssignOracleSql]] (distances in
+    * kernel accumulation order, earliest-minimum tie-break), then the
     * within-cluster pair join with greedy lowest-id keep.
     */
   private def semanticDedupOracleSql(k: Int, dim: Int, minCosine: Double): String = {

@@ -298,7 +298,8 @@ object Bpe {
   }
 
   /** BPE vocabulary (sym, token_id) for a learned merge table — the id
-    * table [[encode]] emits against. The standard tokenizer-file layout:
+    * table [[encodeCachedWithModel]] emits against. The standard
+    * tokenizer-file layout:
     *  - the BASE ALPHABET (every distinct seed character of the corpus
     *    word table — including characters later absorbed entirely into
     *    merges) gets ids 0..C-1 in lexicographic order;
@@ -335,15 +336,12 @@ object Bpe {
     * ([[segmentCounts]]'s replay) and emit each document's token ids in
     * text order as (idCol, token_ids ARRAY<BIGINT>, n_tokens), ids per
     * [[vocab]]. Documents with no `\w+` token are absent (same inner-join
-    * contract as [[segmentCounts]]). Retains the word-table checkpoint —
-    * long-running callers use [[encodeCached]] and release.
-    */
-  def encode(docs: DataFrame, idCol: String, textCol: String,
-      merges: Seq[(String, String)]): DataFrame =
-    encodeCached(docs, idCol, textCol, merges).df
-
-  /** [[encode]] with its internal checkpoint handed out
-    * ([[Checkpoints.CachedResult]] lifecycle).
+    * contract as [[segmentCounts]]). Returns the encode with its
+    * word-table checkpoint handed out ([[Checkpoints.CachedResult]]
+    * lifecycle) plus the driver-side symbol map it derived — the model
+    * [[decode]] needs, so a round-trip caller never makes a separate
+    * [[symbolTable]] call (which would re-scan the corpus to re-derive
+    * the identical alphabet).
     *
     * Scale shape — ONE corpus scan plus one corpus reassembly pass:
     *  - the corpus collapses to the distinct word-count table in one
@@ -364,15 +362,6 @@ object Bpe {
     *  - word→ids rejoins the corpus by broadcast (word-table-sized), and
     *    the only corpus-sized shuffle is the per-document reassembly
     *    groupBy — the price of emitting actual sequences, paid once.
-    */
-  def encodeCached(docs: DataFrame, idCol: String, textCol: String,
-      merges: Seq[(String, String)]): Checkpoints.CachedResult =
-    encodeCachedWithModel(docs, idCol, textCol, merges)._1
-
-  /** [[encodeCached]] plus the driver-side symbol map it derived — the
-    * model [[decode]] needs. Round-trip callers use THIS instead of a
-    * separate [[symbolTable]] call, which would re-scan the corpus to
-    * re-derive the identical alphabet.
     */
   def encodeCachedWithModel(docs: DataFrame, idCol: String, textCol: String,
       merges: Seq[(String, String)]): (Checkpoints.CachedResult, Map[String, Long]) = {
@@ -436,12 +425,12 @@ object Bpe {
     symToId(chars, merges)
   }
 
-  /** Inverse of [[encode]]: token-id sequences back to text. The
-    * reconstruction concatenates decoded symbols with no separator, so
-    * `decode(encode(text))` equals text's `\w+` tokens joined on "" —
-    * whitespace and punctuation are not part of the token stream (the
-    * [[TextAnalysis.tokens]] pre-tokenizer drops them), the standard
-    * lossy-pre-tokenizer contract, and exactly the invariant
+  /** Inverse of [[encodeCachedWithModel]]: token-id sequences back to
+    * text. The reconstruction concatenates decoded symbols with no
+    * separator, so `decode(encode(text))` equals text's `\w+` tokens
+    * joined on "" — whitespace and punctuation are not part of the token
+    * stream (the [[TextAnalysis.tokens]] pre-tokenizer drops them), the
+    * standard lossy-pre-tokenizer contract, and exactly the invariant
     * `q_bpe_roundtrip` oracles. An id absent from `symbols` poisons its
     * document's reconstruction to NULL (fail loud, never a silently
     * shortened document).

@@ -8,22 +8,29 @@ import org.apache.spark.sql.execution.LogicalRDD
   * Two storage mechanisms exist in this codebase and they release
   * DIFFERENTLY:
   *  - `.persist(...)` registers with the SQL CacheManager and releases
-  *    through `Dataset.unpersist` (the [[Curate.IngestedBatch]] caches);
+  *    through `Dataset.unpersist`;
   *  - `.localCheckpoint(...)` persists the RDD inside the returned frame's
   *    [[LogicalRDD]] leaf — `Dataset.unpersist` only consults the
   *    CacheManager and silently NO-OPS on it (measured on this Spark:
   *    blocks survive `unpersist(true)`). The handle that works is the
   *    leaf RDD itself.
   *
-  * [[release]] dispatches on the plan so callers hold ONE release call for
-  * either mechanism. Ops that checkpoint internally hand their frames out
-  * in a [[CachedResult.caches]] field (the repo rule since r5: a
-  * long-running caller — e.g. a streaming job invoking an op per batch —
-  * must be able to bound executor storage instead of waiting on
-  * ContextCleaner GC); the caller releases AFTER consuming the result
-  * (outputs are lazy — releasing first silently recomputes).
+  * [[release]] dispatches on the plan, so every frame an operator hands
+  * out — a [[CachedResult.caches]] entry, [[Curate.Curated.caches]],
+  * [[Curate.IngestedBatch.caches]] — has ONE release call, whichever
+  * mechanism backs it. Every op that persists or checkpoints on the
+  * caller's behalf hands its frames out (its one entry point returns
+  * them — no variant drops them): a long-running caller, e.g. a
+  * streaming job invoking an op per batch, must be able to bound
+  * executor storage instead of waiting on ContextCleaner GC. The caller
+  * releases AFTER consuming the result (outputs are lazy — releasing
+  * first silently recomputes).
   */
 object Checkpoints {
+
+  /** Storage level of the intermediates an operator persists for several
+    * consumers: spills, never OOMs. */
+  val Intermediate = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
   /** Unpersist whatever storage backs `df`. Returns true when checkpoint
     * blocks were found on a [[LogicalRDD]] leaf (the path
@@ -128,9 +135,12 @@ object Checkpoints {
     throw new IllegalStateException("unreachable")
   }
 
-  /** An operator result plus the internally-persisted frames backing it.
-    * Consume `df` (write/collect), then `release()` — same lifecycle as
-    * [[Curate.IngestedBatch]], generalized. */
+  /** An operator result plus the internally-persisted frames backing it
+    * — what every storage-holding operator's one entry point returns.
+    * Consume `df` (write/collect), then `release()`: one [[release]] call
+    * per handed-out frame, whichever mechanism backs it. A caller that
+    * keeps only `df` (a lazy frame that reads the result) leaves the
+    * blocks to ContextCleaner GC. */
   final case class CachedResult(df: DataFrame, caches: Seq[DataFrame]) {
     def release(blocking: Boolean = false): Unit =
       caches.foreach(c => Checkpoints.release(c, blocking))

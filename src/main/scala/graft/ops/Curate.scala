@@ -54,7 +54,7 @@ object Curate {
       targets: Seq[(String, Int)], budget: Long)
 
   /** `caches`: with `report`, the last-stage cache `docs` reads — release
-    * with `unpersist(false)` once `docs` is consumed. */
+    * each through [[Checkpoints.release]] once `docs` is consumed. */
   final case class Curated(docs: DataFrame, report: CurationReport,
       caches: Seq[DataFrame] = Nil)
 
@@ -107,7 +107,7 @@ object Curate {
     def cnt(df: DataFrame): (DataFrame, Long) =
       if (!report) (df, -1L)
       else {
-        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val p = df.persist(Checkpoints.Intermediate)
         intermediates += p
         (p, p.count())
       }
@@ -180,11 +180,12 @@ object Curate {
 
   /** One ingested batch: the curated rows plus the index DELTA the caller
     * appends before the next round ([[DedupIndex]] union). `caches` are
-    * the frames persisted on the caller's behalf (the batch and its
-    * signature pipeline feed several consumers each) — release them with
-    * `unpersist(false)` once the outputs are consumed, as
-    * [[graft.streaming.CurateStreaming.ingestBatch]] does per
-    * micro-batch. */
+    * the frames persisted or checkpointed on the caller's behalf (the
+    * batch and its signature pipeline feed several consumers each; the
+    * in-batch connected components checkpoint their edges and labels) —
+    * release each through [[Checkpoints.release]] once the outputs are
+    * consumed, as [[graft.streaming.CurateStreaming.ingestBatch]] does
+    * per micro-batch (`unpersist` silently skips the checkpoints). */
   final case class IngestedBatch(docs: DataFrame, newDigests: DataFrame,
       newBandedRows: DataFrame, report: IngestReport,
       caches: Seq[DataFrame] = Nil)
@@ -226,7 +227,7 @@ object Curate {
     // in IngestedBatch.caches for the caller to release.
     val intermediates = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def cnt(df: DataFrame): (DataFrame, Long) = {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val p = df.persist(Checkpoints.Intermediate)
       intermediates += p
       (p, if (report) p.count() else -1L)
     }
@@ -270,36 +271,28 @@ object Curate {
   /** The TRAINING-BATCH TERMINAL path: tokenizer encode → sequence
     * packing — the step that turns a curated corpus into the dense
     * fixed-budget token sequences a trainer consumes. Composes
-    * [[Bpe.encode]] (per-doc token-id arrays under a learned merge
-    * table) with [[Sampling.packSequences]] on the REAL encoded length
-    * (`n_tokens` = BPE tokens, not word counts — the budget a trainer
-    * actually bins by).
+    * [[Bpe.encodeCachedWithModel]] (per-doc token-id arrays under a
+    * learned merge table) with [[Sampling.packSequences]] on the REAL
+    * encoded length (`n_tokens` = BPE tokens, not word counts — the
+    * budget a trainer actually bins by). The encode's word-table
+    * checkpoint is handed out ([[Checkpoints.CachedResult]] lifecycle).
     *
     * @return (idCol, token_ids, n_tokens, pack_bucket, pack_bin,
     *         bin_offset) — one row per surviving document; a training
     *         sequence is the (pack_bucket, pack_bin) group's token_ids
     *         laid end-to-end at their bin_offsets.
     */
-  def tokenizePack(docs: DataFrame, idCol: String, textCol: String,
-      merges: Seq[(String, String)], packBudget: Long,
-      packBuckets: Int = 32): DataFrame =
-    tokenizePackCached(docs, idCol, textCol, merges, packBudget,
-      packBuckets).df
-
-  /** [[tokenizePack]] with the encode's internal word-table checkpoint
-    * handed out ([[Checkpoints.CachedResult]] lifecycle) — the variant
-    * for long-running callers. */
   def tokenizePackCached(docs: DataFrame, idCol: String, textCol: String,
       merges: Seq[(String, String)], packBudget: Long,
       packBuckets: Int = 32): Checkpoints.CachedResult = {
-    val enc = Bpe.encodeCached(docs, idCol, textCol, merges)
+    val (enc, _) = Bpe.encodeCachedWithModel(docs, idCol, textCol, merges)
     Checkpoints.CachedResult(
       Sampling.packSequences(enc.df, idCol, "n_tokens",
         budget = packBudget, buckets = packBuckets),
       enc.caches)
   }
 
-  /** [[tokenizePack]] shipped to disk: shard by TRAINING SEQUENCE (the
+  /** [[tokenizePackCached]] shipped to disk: shard by TRAINING SEQUENCE (the
     * (pack_bucket, pack_bin) bin, not the document — a shard holds whole
     * training sequences, so a trainer reads each sequence from one file)
     * through [[graft.sinks.ShardWriter.writeShards]]'s manifest-audited

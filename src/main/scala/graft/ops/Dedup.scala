@@ -131,19 +131,17 @@ object Dedup {
       explodedShingles(docs, idCol, textCol, n),
       minJaccard, maxDocFreq, cached))
 
-  /** Storage level of the intermediates an operator persists for several
-    * consumers: spills, never OOMs. */
-  private val Intermediate = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
   /** `build`'s result, checkpointed in one eager job, after which every
     * frame `build` passed through its `cached` argument (persisted at
-    * [[Intermediate]]) is unpersisted: the caches make a multi-consumer
-    * upstream run once, and unpersisting here (not at LRU eviction)
-    * bounds the session's cache footprint to the call. */
+    * [[Checkpoints.Intermediate]]) is unpersisted: the caches make a
+    * multi-consumer upstream run once, and unpersisting here (not at LRU
+    * eviction) bounds the session's cache footprint to the call. */
   private def checkpointReleasing(
       build: (DataFrame => DataFrame) => DataFrame): DataFrame = {
     val intermediates = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    val out = build { df => val p = df.persist(Intermediate); intermediates += p; p }
+    val out = build { df =>
+      val p = df.persist(Checkpoints.Intermediate); intermediates += p; p
+    }
     val mat = out.cutLineage(true)
     intermediates.foreach(_.unpersist(false))
     mat
@@ -217,43 +215,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
   }
 
-  /** Connected components over a near-duplicate pair list (edge list) by
-    * iterative min-label propagation: every node's label converges to the
-    * smallest id reachable from it — the canonical "group near-dup pairs
-    * into duplicate clusters, keep one representative" step after
-    * [[jaccardPairs]] / [[lshCandidatePairs]] / [[embeddingDupPairs]].
-    *
-    * Scale design: each round is two shuffled equi-joins + a min
-    * aggregation (all partial-aggregatable); rounds needed = graph
-    * diameter, and similarity graphs under a document-frequency cap have
-    * small, bounded components (a component's diameter cannot exceed its
-    * size, which the cap bounds). The driver-side loop is a CONVERGENCE
-    * check, not per-row work — the standard pattern for iterative graph
-    * algorithms on Spark.
-    *
-    * Job-count discipline (serial driver jobs dominate wall-clock when
-    * the label table is small): the input edge set is checkpointed once
-    * (cutting an arbitrarily expensive upstream), and the undirected
-    * mirror is a NARROW in-row explode over it — no union branches, no
-    * distinct, no shuffle, recomputed for free from the checkpointed
-    * blocks each round. Dedup is unnecessary for correctness: min-label
-    * propagation is idempotent under duplicate edges and self-loops (a
-    * duplicate only widens a join; a self-loop contributes the node's own
-    * label to its neighbor-min), so dirty inputs cost join width, never
-    * wrong labels. The seed and every iteration use LAZY checkpoints
-    * materialized by the convergence count, so a round costs one job.
-    * (A fused two-steps-per-job variant was measured and REGRESSED: under
-    * a df cap components are shallow and the seed already folds round 1,
-    * so most runs converge at the first check and the second step's two
-    * extra shuffles are pure waste.)
-    *
-    * @return (id, label) — one row per node that appears in any edge;
-    *         `label` = smallest id in the node's component.
-    */
-  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-      maxIters: Int = 25): DataFrame =
-    connectedComponentsCached(edges, srcCol, dstCol, maxIters).df
-
   /** The [[DriverBound]] gate of [[connectedComponentsCached]]:
     * `Some(labels)`, a local table that no longer reads `e`, when the
     * materialized edge frame `e` (columns src, dst) is bounded, null-free
@@ -318,15 +279,46 @@ object Dedup {
     out
   }
 
-  /** [[connectedComponents]] with its retained checkpoints handed out
-    * ([[Checkpoints.CachedResult]]): on the distributed side, the final
-    * label table (the returned frame READS it — consume, then `release()`)
-    * and, when the input edge set was not already materialized, the edge
-    * checkpoint; the driver side retains nothing. The
-    * in-loop rule (each superseded round released as soon as its
-    * successor materializes) is internal; only the terminal blocks need
-    * the caller's lifecycle — same contract as [[semanticDedupCached]]
-    * and `PageRank.runCached`.
+  /** Connected components over a near-duplicate pair list (edge list) by
+    * iterative min-label propagation: every node's label converges to the
+    * smallest id reachable from it — the canonical "group near-dup pairs
+    * into duplicate clusters, keep one representative" step after
+    * [[jaccardPairs]] / [[lshCandidatePairs]] / [[embeddingDupPairs]].
+    *
+    * Scale design: each round is two shuffled equi-joins + a min
+    * aggregation (all partial-aggregatable); rounds needed = graph
+    * diameter, and similarity graphs under a document-frequency cap have
+    * small, bounded components (a component's diameter cannot exceed its
+    * size, which the cap bounds). The driver-side loop is a CONVERGENCE
+    * check, not per-row work — the standard pattern for iterative graph
+    * algorithms on Spark.
+    *
+    * Job-count discipline (serial driver jobs dominate wall-clock when
+    * the label table is small): the input edge set is checkpointed once
+    * (cutting an arbitrarily expensive upstream), and the undirected
+    * mirror is a NARROW in-row explode over it — no union branches, no
+    * distinct, no shuffle, recomputed for free from the checkpointed
+    * blocks each round. Dedup is unnecessary for correctness: min-label
+    * propagation is idempotent under duplicate edges and self-loops (a
+    * duplicate only widens a join; a self-loop contributes the node's own
+    * label to its neighbor-min), so dirty inputs cost join width, never
+    * wrong labels. The seed and every iteration use LAZY checkpoints
+    * materialized by the convergence count, so a round costs one job.
+    * (A fused two-steps-per-job variant was measured and REGRESSED: under
+    * a df cap components are shallow and the seed already folds round 1,
+    * so most runs converge at the first check and the second step's two
+    * extra shuffles are pure waste.)
+    *
+    * Retained checkpoints are handed out ([[Checkpoints.CachedResult]]):
+    * on the distributed side, the final label table (the returned frame
+    * READS it — consume, then `release()`) and, when the input edge set
+    * was not already materialized, the edge checkpoint; the driver side
+    * retains nothing. The in-loop rule (each superseded round released as
+    * soon as its successor materializes) is internal; only the terminal
+    * blocks need the caller's lifecycle.
+    *
+    * @return (id, label) — one row per node that appears in any edge;
+    *         `label` = smallest id in the node's component.
     */
   def connectedComponentsCached(edges: DataFrame, srcCol: String,
       dstCol: String, maxIters: Int = 25): Checkpoints.CachedResult = {
@@ -405,7 +397,7 @@ object Dedup {
     * surviving (minimum) id and the member count.
     */
   def duplicateGroups(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    connectedComponents(edges, srcCol, dstCol)
+    connectedComponentsCached(edges, srcCol, dstCol).df
       .groupBy(col("label").as("group_id"))
       .agg(count(lit(1)).as("n_members"))
 
@@ -418,7 +410,7 @@ object Dedup {
   def dropNearDuplicates(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, minJaccard: Double = 0.5, maxDocFreq: Long = 20L): DataFrame = {
     val pairs = jaccardPairs(docs, idCol, textCol, n, minJaccard, maxDocFreq)
-    val losers = connectedComponents(pairs, "id_a", "id_b")
+    val losers = connectedComponentsCached(pairs, "id_a", "id_b").df
       .where(col("id") =!= col("label"))
       .select(col("id").as(idCol))
     Checkpoints.release(pairs) // the returned labels no longer read the pairs
@@ -713,7 +705,7 @@ object Dedup {
     */
   def keepCanonical(docs: DataFrame, idCol: String, pairs: DataFrame,
       aCol: String, bCol: String, preference: Seq[Column]): DataFrame = {
-    val labels = connectedComponents(pairs, aCol, bCol)
+    val labels = connectedComponentsCached(pairs, aCol, bCol).df
       .withColumnRenamed("id", idCol)
     // payload bytes, not rows: wide string ids can make a modest row count
     // a multi-GB broadcast. ~2 B/char UTF-16 in the broadcast hash map +
@@ -860,12 +852,14 @@ object Dedup {
     *                     duplicate group
     * @param newIndexRows banded signature rows for the accepted docs; the
     *                     caller appends them to the persisted index
-    * @param caches       frames persisted on the caller's behalf (the
-    *                     documented "callers own the cache lifetime"
-    *                     contract made concrete): call
-    *                     `unpersist(false)` on each once the outputs
-    *                     are consumed, or a long-running caller — a
-    *                     daily-ingest stream — accumulates blocks
+    * @param caches       frames persisted or checkpointed on the caller's
+    *                     behalf (the persisted signature pipeline and
+    *                     labels, plus the in-batch connected-components
+    *                     checkpoints): call [[Checkpoints.release]] on
+    *                     each once the outputs are consumed, or a
+    *                     long-running caller — a daily-ingest stream —
+    *                     accumulates blocks (`unpersist` silently skips
+    *                     the checkpoints)
     */
   final case class IngestResult(accepted: DataFrame, dropped: DataFrame,
       newIndexRows: DataFrame, caches: Seq[DataFrame] = Nil)
@@ -930,7 +924,7 @@ object Dedup {
     // IngestResult.caches)
     val cachedFrames = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def cached(df: DataFrame): DataFrame = {
-      val p = df.persist(Intermediate); cachedFrames += p; p
+      val p = df.persist(Checkpoints.Intermediate); cachedFrames += p; p
     }
     val sigs = cached(sigsWithFallback(batch, idCol, textCol, n, k))
     val banded = cached(bandedFromSigs(sigs, bands, rowsPerBand))
@@ -953,7 +947,9 @@ object Dedup {
     // ONE connected-components run serves both the canonical pick and the
     // dropped-doc attribution: with min-id preference the component label
     // IS the kept canonical
-    val labels = cached(connectedComponents(inBatchPairs, "id_a", "id_b")
+    val cc = connectedComponentsCached(inBatchPairs, "id_a", "id_b")
+    cachedFrames ++= cc.caches
+    val labels = cached(cc.df
       .withColumnsRenamed(Map("id" -> "doc_id", "label" -> "keep_id")))
     val droppedInBatch = labels
       .where(col("doc_id") =!= col("keep_id"))
@@ -1131,16 +1127,13 @@ object Dedup {
     * cluster join itself is an ordinary shuffled equi-join on a small int
     * key that AQE skew-splits if the quantizer leaves a hot cluster. The
     * scoring kernel is the fused codegen'd `cosine_f32`.
+    *
+    * The internally-checkpointed assignment frame is handed out for
+    * release ([[Checkpoints.CachedResult]]): a long-running caller
+    * (per-batch streaming invocation) that drops it accumulates one
+    * assignment table per call until ContextCleaner GC. Consume `df`,
+    * then `release()`.
     */
-  def semanticDedup(vecs: DataFrame, idCol: String, vecCol: String,
-      index: graft.ops.Similarity.IvfIndex, minCosine: Double = 0.95): DataFrame =
-    semanticDedupCached(vecs, idCol, vecCol, index, minCosine).df
-
-  /** [[semanticDedup]] with the internally-checkpointed assignment frame
-    * handed out for release ([[Checkpoints.CachedResult]]) — the variant a
-    * long-running caller (per-batch streaming invocation) must use, or
-    * executor storage accumulates one assignment table per call until
-    * ContextCleaner GC. Consume `df`, then `release()`. */
   def semanticDedupCached(vecs: DataFrame, idCol: String, vecCol: String,
       index: graft.ops.Similarity.IvfIndex,
       minCosine: Double = 0.95): Checkpoints.CachedResult = {
@@ -1163,20 +1156,13 @@ object Dedup {
     * is the sub-cell id, found in O(k1 + k2) = O(√k) distance
     * evaluations per vector instead of O(k) — the SCALING.md next-decade
     * answer for growing k with the corpus. Same pair-bound contract as
-    * [[semanticDedup]] with k = k1·k2 cells; same greedy lowest-id keep.
+    * [[semanticDedupCached]] with k = k1·k2 cells; same greedy lowest-id
+    * keep; same lifecycle for the checkpointed assignment it hands out.
     *
     * `subFlat` is row-major (k1·k2)×dim with super cell c's sub table at
     * rows [c·k2, (c+1)·k2) — train one sub fit per super cell
     * ([[Similarity.trainIvfCentroids]] on the cell's members).
     */
-  def semanticDedupHier(vecs: DataFrame, idCol: String, vecCol: String,
-      superFlat: Array[Double], subFlat: Array[Double], k2: Int, dim: Int,
-      minCosine: Double = 0.95): DataFrame =
-    semanticDedupHierCached(vecs, idCol, vecCol, superFlat, subFlat, k2, dim,
-      minCosine).df
-
-  /** [[semanticDedupHier]] with the checkpointed assignment handed out —
-    * see [[semanticDedupCached]] for the lifecycle contract. */
   def semanticDedupHierCached(vecs: DataFrame, idCol: String, vecCol: String,
       superFlat: Array[Double], subFlat: Array[Double], k2: Int, dim: Int,
       minCosine: Double = 0.95): Checkpoints.CachedResult = {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * graphs).
   *
   * Scale shape (same discipline as
-  * [[Dedup.connectedComponents]]): each iteration is one shuffled
+  * [[Dedup.connectedComponentsCached]]): each iteration is one shuffled
   * equi-join (ranks ⋈ edges on src) plus one partial-aggregatable sum to
   * dst grain and a small AQE-broadcast node join — no driver-side
   * per-row work. Per-iteration floor cuts (the r4 verdict's finding,
@@ -89,16 +89,12 @@ object PageRank {
   /** @param edges   directed edge list (duplicate edges count as weight)
     * @param iters   fixed iteration count (10–20 suffices at damping 0.85)
     * @param damping probability of following an edge vs teleporting
-    * @return (id, rank); ranks sum to ~1 (dangling mass redistributed)
+    * @return (id, rank); ranks sum to ~1 (dangling mass redistributed),
+    *         with every internally-checkpointed frame (edges, degree
+    *         table, periodic in-mass checkpoints) handed out for release
+    *         ([[Checkpoints.CachedResult]]) — consume the ranks, then
+    *         `release()`
     */
-  def run(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int = 10, damping: Double = 0.85): DataFrame =
-    runCached(edges, srcCol, dstCol, iters, damping).df
-
-  /** [[run]] with every internally-checkpointed frame (edges, degree
-    * table, periodic in-mass checkpoints) handed out for release
-    * ([[Checkpoints.CachedResult]]) — required for long-running callers;
-    * consume the ranks, then `release()`. */
   def runCached(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 10, damping: Double = 0.85): Checkpoints.CachedResult = {
     val (e, nodesDeg, n0) = graphFrames(edges, srcCol, dstCol)
@@ -168,21 +164,14 @@ object PageRank {
     * far under 2^63. (DuckDB's SUM(BIGINT) widens to HUGEINT; the final
     * CAST normalizes.)
     *
-    * Same iteration shape as [[run]]: per round one shuffled equi-join
-    * plus a partial-aggregatable integer sum to dst grain (the dangling
-    * mass fused in as the sentinel key, re-entering via a broadcast
-    * 1-row carrier; out-degree carried on the rank frame — zero
+    * Same iteration shape as [[runCached]]: per round one shuffled
+    * equi-join plus a partial-aggregatable integer sum to dst grain (the
+    * dangling mass fused in as the sentinel key, re-entering via a
+    * broadcast 1-row carrier; out-degree carried on the rank frame — zero
     * per-iteration driver jobs, no degree re-join), constant-depth
-    * lineage via lazy localCheckpoint.
+    * lineage via lazy localCheckpoint. Internal checkpoints are handed
+    * out as in [[runCached]].
     */
-  def runFixedPoint(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int = 10, dampingNum: Long = 85L, dampingDen: Long = 100L,
-      scale: Long = 1000000000000000L): DataFrame =
-    runFixedPointCached(edges, srcCol, dstCol, iters, dampingNum, dampingDen,
-      scale).df
-
-  /** [[runFixedPoint]] with internal checkpoints handed out — see
-    * [[runCached]] for the lifecycle contract. */
   def runFixedPointCached(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 10, dampingNum: Long = 85L, dampingDen: Long = 100L,
       scale: Long = 1000000000000000L): Checkpoints.CachedResult = {
@@ -195,7 +184,7 @@ object PageRank {
       return Checkpoints.CachedResult(driverSide.get, caches.toSeq)
     var ranks = nodesDeg.withColumn("rank_fp", lit(scale / n))
     (0 until iters).foreach { i =>
-      // same one-left-join routing as [[run]] (see comment there)
+      // same one-left-join routing as [[runCached]] (see comment there)
       var inMass = ranks
         .join(e, col("id") === col("src"), "left_outer")
         .select(coalesce(col("dst"), lit(DanglingKey)).as("dst"),
@@ -203,7 +192,7 @@ object PageRank {
             .otherwise(col("rank_fp")).as("contrib"))
         .groupBy(col("dst"))
         .agg(sum(col("contrib")).as("in_mass"))
-      if (iters > 4 && i % 2 == 0) { // see run()
+      if (iters > 4 && i % 2 == 0) { // see runCached()
         inMass = inMass.cutLineage(false)
         caches += inMass
       }
@@ -220,14 +209,14 @@ object PageRank {
           (expr(s"((${dampingDen - dampingNum} * ${scale}L + $dampingNum * __dm)" +
             s" div (${dampingDen * n}L)) ") +
             expr(s"($dampingNum * coalesce(in_mass, 0L)) div $dampingDen")).as("rank_fp"))
-      // no rank checkpoint — see run()
+      // no rank checkpoint — see runCached()
     }
     Checkpoints.CachedResult(ranks.select(col("id"), col("rank_fp")),
       caches.toSeq)
   }
 
-  /** Driver-side replay of [[runFixedPoint]]'s integer recurrence over a
-    * collected (bounded) graph. Arithmetic parity with the distributed
+  /** Driver-side replay of [[runFixedPointCached]]'s integer recurrence
+    * over a collected (bounded) graph. Arithmetic parity with the distributed
     * expressions, op by op: init = `scale / n` (the same Scala Long
     * division the `lit` evaluates), contribution = `rank_fp / out_deg`,
     * new rank = `((dampingDen−dampingNum)·scale + dampingNum·dm) /

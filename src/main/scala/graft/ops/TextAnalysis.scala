@@ -730,7 +730,7 @@ object TextAnalysis {
     * long tail), so AQE broadcasts it while it fits and falls back to a
     * shuffled join of 2-column token rows when it doesn't; a forced hint
     * would turn that documented degradation into a driver OOM (the same
-    * policy as [[bigramLogProb]]'s model tables, and this op is also run
+    * policy as [[bigramLogProbCached]]'s model tables, and this op is also run
     * per-micro-batch by the streaming drift monitor, where a driver OOM
     * kills the whole query). The corpus explodes narrowly and shuffles
     * ONCE, by document id, for the per-doc counts — the same single
@@ -797,21 +797,11 @@ object TextAnalysis {
     * small scale are sequential-stage floor (anatomy: 10-13 AQE jobs),
     * not plan cost, and the two-sided x100 A/B measures 1.9×.
     *
-    * One-shot form: the checkpointed tf table's release handle is
-    * dropped, so its blocks free on ContextCleaner GC after the caller's
-    * frame reference dies (the bench's inter-query `System.gc()` is
-    * exactly that trigger). A caller invoking this repeatedly in one
-    * long-lived job must use [[bigramLogProbCached]] and `release()`.
+    * The internally-checkpointed (doc, a, b, tf) frame is handed out for
+    * release ([[graft.ops.Checkpoints.CachedResult]]): a long-running
+    * caller that drops it accumulates one tf table per call until
+    * ContextCleaner GC. Consume `df`, then `release()`.
     */
-  def bigramLogProb(docs: DataFrame, idCol: String, textCol: String = "text",
-      minCount: Long = 1L): DataFrame =
-    bigramLogProbCached(docs, idCol, textCol, minCount).df
-
-  /** [[bigramLogProb]] with the internally-checkpointed (doc, a, b, tf)
-    * frame handed out for release ([[graft.ops.Checkpoints.CachedResult]])
-    * — the variant a long-running caller must use, or executor storage
-    * accumulates one tf table per call until ContextCleaner GC. Consume
-    * `df`, then `release()`. */
   def bigramLogProbCached(docs: DataFrame, idCol: String,
       textCol: String = "text",
       minCount: Long = 1L): graft.ops.Checkpoints.CachedResult = {
@@ -827,7 +817,7 @@ object TextAnalysis {
     // the corpus-wide window + aggregation feeds FOUR consumers (the
     // scoring join side, both model tables, the totals scalar) — lazily
     // localCheckpoint so it computes once per action instead of four
-    // times (the semanticDedup pattern; blocks belong to the first
+    // times (the semanticDedupCached pattern; blocks belong to the first
     // materializing action)
     val tfb = bi.groupBy(col("doc_id"), col("a"), col("b"))
       .agg(count(lit(1)).as("tf"))
@@ -876,7 +866,7 @@ object TextAnalysis {
     val totals = counts.select(sum(col("cnt")).as("n_total")) // 1-row scalar
     val lm = counts.where(col("cnt") >= minCount)
     // no broadcast HINT on the corpus-derived model table (same policy as
-    // bigramLogProb and oovRate): AQE broadcasts it while it fits and
+    // bigramLogProbCached and oovRate): AQE broadcasts it while it fits and
     // degrades to a shuffled join of 2-column count rows when a huge
     // vocabulary outgrows the limit — a forced hint would OOM the driver
     val px = tf.join(lm, Seq("token"), "left_outer")
@@ -1077,7 +1067,7 @@ object TextAnalysis {
         .otherwise(lit(0L))))
     val fm = inst.groupBy(col("doc_id"), col("bucket"))
       .agg(count(lit(1)).as("c"), first(col("__y")).as("__y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Checkpoints.Intermediate)
     // every round is a GLOBAL barrier (the gradient is a corpus sum): a
     // bounded matrix runs them all on the driver in two jobs, not 2+rounds
     val wts = DriverBound.collect(fm, DriverBound.FitRows) { fmRows =>
@@ -1091,7 +1081,7 @@ object TextAnalysis {
       // pass a second time (the scaladoc's one-pass contract)
       val nd = fm.groupBy(col("doc_id"))
         .agg(sum(col("c")).as("n"), first(col("__y")).as("y"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(Checkpoints.Intermediate)
       // bounded parameter fetch: the distinct-bucket set (≤ buckets rows)
       val present = fm.select(col("bucket")).distinct()
         .collect().map(_.getLong(0)).sorted
@@ -1225,7 +1215,7 @@ object TextAnalysis {
   /** Hashing-trick document vectors (Weinberger et al. 2009, feature
     * hashing): fold the token multiset into `dim` buckets by portable
     * hash — a model-free embedding that feeds the vector stack
-    * ([[Similarity]] ANN, [[Dedup.semanticDedup]]) when no trained
+    * ([[Similarity]] ANN, [[Dedup.semanticDedupCached]]) when no trained
     * encoder exists. Sparse form: one (doc_id, bucket, cnt) row per
     * nonzero bucket — integer-exact, hence bit-exact oracle-able.
     *

@@ -43,8 +43,9 @@ object Triangles {
   /** One row: (n_nodes, n_edges, n_triangles) for the canonical graph.
     *
     * Shared subtrees are materialized ONCE via lazy localCheckpoints
-    * (the bigramLogProb pattern — blocks free on ContextCleaner GC after
-    * the caller's frame reference dies): the canonical edge set feeds
+    * (as in [[TextAnalysis.bigramLogProbCached]], but with no handle
+    * handed out — blocks free on ContextCleaner GC after the caller's
+    * frame reference dies): the canonical edge set feeds
     * the degree table, the orientation join, and the edge count; the
     * degree table feeds both orientation legs and the node count. The
     * un-checkpointed form re-executed each consumer's whole upstream —

@@ -137,15 +137,6 @@ final class CsvBarSource(path: String) extends BarSource {
   }
 }
 
-/** Reads bars from parquet with full predicate pushdown. */
-final class ParquetBarSource(path: String) extends BarSource {
-  def fetch(spark: SparkSession, symbols: DataFrame,
-      start: java.sql.Date, end: java.sql.Date): DataFrame =
-    spark.read.parquet(path)
-      .where(col("Date").between(lit(start), lit(end)))
-      .join(broadcast(symbols.select(col("Symbol"))), Seq("Symbol"), "left_semi")
-}
-
 /** Format-generic bar source: one contract over parquet / orc / json-lines
   * / csv. An EXPLICIT schema is required for the text formats — schema
   * inference is a full extra pass over the data (a non-starter at 100 TB)

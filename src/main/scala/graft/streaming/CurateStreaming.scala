@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
-import graft.ops.Curate
+import graft.ops.{Checkpoints, Curate}
 
 /** Streaming twin of the append-mode curation composition
   * ([[graft.ops.Curate.ingest]]): each micro-batch of new documents is
@@ -97,7 +97,7 @@ object CurateStreaming {
       .parquet(s"$indexPath/banded/batch_id=$batchId")
     // all three outputs are on disk — release the per-batch caches, or a
     // long-running stream accumulates persisted blocks forever
-    r.caches.foreach(_.unpersist(false))
+    r.caches.foreach(Checkpoints.release(_))
   }
 
   /** Start the curation stream over `docs` (a streaming frame with

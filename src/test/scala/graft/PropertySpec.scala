@@ -85,13 +85,12 @@ class PropertySpec extends SparkSpec {
       val expected = unionFind(edges)
       // adaptive (these sizes take the driver union-find path) AND the
       // forced-distributed loop must both produce the reference labels
-      val got = Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      def labels() = consume(Dedup.connectedComponentsCached(
+          edges.toDF("a", "b"), "a", "b"))(_.collect())
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val got = labels()
       assert(got == expected, s"seed=$i: cc=$got expected=$expected")
-      val gotDist = DriverBound.distributedOnly {
-        Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b")
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      }
+      val gotDist = DriverBound.distributedOnly(labels())
       assert(gotDist == expected,
         s"seed=$i: distributed cc=$gotDist expected=$expected")
     }
@@ -105,14 +104,14 @@ class PropertySpec extends SparkSpec {
     val withNull = spark.createDataFrame(
       java.util.Arrays.asList(Row(1L, 2L), Row(null, 3L)),
       StructType(Seq(StructField("a", LongType), StructField("b", LongType))))
-    val labeled = Dedup.connectedComponents(withNull, "a", "b")
-      .collect().map(r => (r.get(0), r.get(1))).toMap
+    val labeled = consume(Dedup.connectedComponentsCached(withNull, "a", "b"))(
+      _.collect()).map(r => (r.get(0), r.get(1))).toMap
     assert(labeled(1L) == 1L && labeled(2L) == 1L, s"long pair mislabeled: $labeled")
     // string ids: integral-only gate → distributed loop, same labels as
     // lexicographic min-reachable
     val strs = Seq(("b", "c"), ("a", "b"), ("x", "y")).toDF("a", "b")
-    val gotS = Dedup.connectedComponents(strs, "a", "b")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val gotS = consume(Dedup.connectedComponentsCached(strs, "a", "b"))(
+      _.collect()).map(r => r.getString(0) -> r.getString(1)).toMap
     assert(gotS == Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x"),
       s"string cc wrong: $gotS")
   }
@@ -231,10 +230,10 @@ class PropertySpec extends SparkSpec {
       val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
       val model = graft.ops.Bpe.symbolTable(docs, "text", merges)
-      val decoded = graft.ops.Bpe.decode(
-          graft.ops.Bpe.encode(docs, "doc_id", "text", merges),
-          "doc_id", "token_ids", model)
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      val decoded = consume(graft.ops.Bpe.encodeCachedWithModel(docs,
+          "doc_id", "text", merges)._1)(
+          graft.ops.Bpe.decode(_, "doc_id", "token_ids", model).collect())
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
       texts.zipWithIndex.foreach { case (t, i) =>
         val expect = t.split(" ").filter(_.nonEmpty).mkString("")
         assert(decoded(i.toLong) == expect,

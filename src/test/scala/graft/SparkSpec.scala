@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM-wide session; suites are cheap). */
@@ -14,4 +14,10 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
+
+  /** `f` over an operator's result frame, then the frames backing it
+    * released — `f` must consume (collect/count) the lazy frame, which
+    * reads the released blocks. */
+  def consume[T](r: graft.ops.Checkpoints.CachedResult)(f: DataFrame => T): T =
+    try f(r.df) finally r.release()
 }

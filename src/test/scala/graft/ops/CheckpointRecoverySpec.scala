@@ -113,14 +113,16 @@ class CheckpointRecoverySpec extends SparkSpec {
       // forced distributed: the adaptive driver replay would sidestep the
       // checkpoint blocks this test exists to evict
       val r = DriverBound.distributedOnly {
-        PageRank.runFixedPoint(edges, "src", "dst", iters = 6)
+        PageRank.runFixedPointCached(edges, "src", "dst", iters = 6)
       }
-      r.count()
-      if (evictOnce) {
-        evictOnce = false
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      consume(r) { ranks =>
+        ranks.count()
+        if (evictOnce) {
+          evictOnce = false
+          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+        }
+        ranks.collect()
       }
-      r.collect()
     }
     assert(ranks.length == 5)
     assert(!evictOnce, "the eviction must actually have happened")

@@ -37,7 +37,7 @@ class CurateSpec extends SparkSpec {
     // no surviving exact-duplicate text
     assert(result.groupBy("text").count().where($"count" > 1).count() == 0)
     result.unpersist()
-    out.caches.foreach(_.unpersist(false))
+    out.caches.foreach(Checkpoints.release(_))
   }
 
   test("run(report = true) hands out its retained stage: released, nothing stays persisted") {
@@ -47,7 +47,7 @@ class CurateSpec extends SparkSpec {
     val out = Curate.run(docs, "doc_id", "text", empty)
     assert(out.docs.count() === out.report.afterMixture)
     assert(out.caches.size === 1, "the report run retains its last counted stage")
-    out.caches.foreach(_.unpersist(true))
+    out.caches.foreach(Checkpoints.release(_, blocking = true))
     val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
     assert(left.isEmpty, s"persisted RDDs left behind: ${left.values.mkString(", ")}")
   }
@@ -79,7 +79,7 @@ class CurateSpec extends SparkSpec {
         "— markup-level dedup would keep both")
     val row = out.docs.select("text").as[String].head()
     assert(!row.contains("<"), "curated text must be extracted, not markup")
-    out.caches.foreach(_.unpersist(false))
+    out.caches.foreach(Checkpoints.release(_))
   }
 
   test("learned quality gate composes upstream of curation (fit -> scoreWith -> run)") {
@@ -119,7 +119,7 @@ class CurateSpec extends SparkSpec {
     // one canonical that flows through to packing
     assert(out.report.afterNearDedup === 1 && out.docs.count() === 1,
       "rotations of one ring must collapse to a single packed canonical")
-    out.caches.foreach(_.unpersist(false))
+    out.caches.foreach(Checkpoints.release(_))
   }
 
   test("optional stages: span dedup binds, mixture whitelists and rebalances") {
@@ -156,7 +156,7 @@ class CurateSpec extends SparkSpec {
     assert(result.select("lang").distinct().collect()
       .map(_.getString(0)).toSet.subsetOf(Set("en", "de")))
     result.unpersist()
-    out.caches.foreach(_.unpersist(false))
+    out.caches.foreach(Checkpoints.release(_))
   }
 
   test("curation honors caller column names (idCol/textCol are not doc_id/text)") {
@@ -245,6 +245,32 @@ class CurateSpec extends SparkSpec {
       s"re-ingest admitted ${r2.report.afterNearDedup} docs")
     assert(r2.docs.count() === 0L)
   }
+
+  test("ingest hands out its in-batch components' checkpoints: released, nothing stays persisted") {
+    val hist = docs.where($"doc_id" < 300)
+    val (bands, rowsPerBand) = (8, 2)
+    val index = Curate.DedupIndex(
+      hist.select(md5($"text").as("digest")).distinct(),
+      Dedup.buildNearDupIndex(hist, "doc_id", "text", n = 3, bands, rowsPerBand))
+    // an in-batch near-duplicate: the connected components have an edge
+    val batch = docs.where($"doc_id".between(300, 339))
+      .unionByName(docs.where($"doc_id" === 310)
+        .select(lit(91000L).as("doc_id"),
+          concat($"text", lit(" addendum")).as("text")))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // forced distributed: the driver-side components retain nothing
+    val r = DriverBound.distributedOnly(Curate.ingest(batch, "doc_id", "text",
+      index, bands = bands, rowsPerBand = rowsPerBand))
+    assert(!r.docs.select("doc_id").as[Long].collect().contains(91000L),
+      "the in-batch near-duplicate must drop")
+    r.newDigests.count()
+    r.newBandedRows.count()
+    r.caches.foreach(Checkpoints.release(_))
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
+    assert(left.isEmpty, s"persisted RDDs left behind: ${left.values.mkString(", ")}")
+  }
+
   test("tokenizePack: hand-derived bins on encoded (BPE) lengths") {
     // Sennrich corpus: encoded lengths 15/10/24/12 under (e,s)->(es,t)
     val corpus = Seq(
@@ -253,10 +279,10 @@ class CurateSpec extends SparkSpec {
       (3L, "newest newest newest newest newest newest"),
       (4L, "widest widest widest")
     ).toDF("doc_id", "text")
-    val out = Curate.tokenizePack(corpus, "doc_id", "text",
+    val out = consume(Curate.tokenizePackCached(corpus, "doc_id", "text",
         merges = Seq(("e", "s"), ("es", "t")),
-        packBudget = 16L, packBuckets = 2)
-      .collect().map(r => r.getAs[Long]("doc_id") ->
+        packBudget = 16L, packBuckets = 2))(_.collect())
+      .map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[Long]("n_tokens"), r.getAs[Long]("pack_bucket"),
           r.getAs[Long]("pack_bin"), r.getAs[Long]("bin_offset")))).toMap
     // bucket = doc_id % 2; within bucket (n_tokens desc, doc_id) cumsum:

@@ -57,8 +57,9 @@ class DedupSpec extends SparkSpec {
   test("connectedComponents on the driver side leaves no edge checkpoint behind") {
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a", "b") // lazy: not materialized
-    val cc = Dedup.connectedComponents(edges, "a", "b").collect()
-    assert(cc.length == 5)
+    val cc = Dedup.connectedComponentsCached(edges, "a", "b")
+    assert(cc.df.collect().length == 5)
+    assert(cc.caches.isEmpty, "the driver side hands out no frame")
     assert(persistedSince(before).isEmpty, "connectedComponents left a checkpoint behind")
   }
 
@@ -151,8 +152,8 @@ class DedupSpec extends SparkSpec {
       (20L, 21L),                    // pair → component {20,21} label 20
       (30L, 30L)                     // self-loop → singleton {30}
     ).toDF("a", "b")
-    val cc = Dedup.connectedComponents(edges, "a", "b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val cc = consume(Dedup.connectedComponentsCached(edges, "a", "b"))(
+      _.collect()).map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(Seq(3L, 5L, 9L, 12L).forall(cc(_) == 3L), s"chain labels wrong: $cc")
     assert(cc(20L) == 20L && cc(21L) == 20L)
     assert(cc(30L) == 30L)
@@ -164,8 +165,8 @@ class DedupSpec extends SparkSpec {
   test("dropNearDuplicates keeps one representative per jaccard cluster") {
     val docs = graft.Tables.documents(spark, sf)
     val pairs = Dedup.jaccardPairs(docs, "doc_id", "text")
-    val removedIds = Dedup.connectedComponents(pairs, "id_a", "id_b")
-      .where(col("id") =!= col("label")).count()
+    val removedIds = consume(Dedup.connectedComponentsCached(pairs, "id_a",
+      "id_b"))(_.where(col("id") =!= col("label")).count())
     val kept = Dedup.dropNearDuplicates(docs, "doc_id", "text")
     assert(kept.count() == docs.count() - removedIds)
     // no surviving near-dup pair: both endpoints never kept together
@@ -790,9 +791,9 @@ class TextAnalysisSpec extends SparkSpec {
       (1L, "x y x y z"), // bigrams: (x,y)x2 (y,x) (y,z); C(x.)=3 C(y.)=2 N=5
       (2L, "x y"),
       (3L, "w")).toDF("doc_id", "text") // 1 token: no bigram, null score
-    def run(minCount: Long) = TextAnalysis
-      .bigramLogProb(df, "doc_id", minCount = minCount)
-      .collect().map(r => r.getLong(0) ->
+    def run(minCount: Long) = consume(TextAnalysis
+      .bigramLogProbCached(df, "doc_id", minCount = minCount))(_.collect())
+      .map(r => r.getLong(0) ->
         ((r.getLong(1), if (r.isNullAt(2)) None else Some(r.getDouble(2))))).toMap
     val m1 = run(1L)
     assert(m1(1L)._1 == 4L && m1(2L)._1 == 1L)
@@ -809,12 +810,13 @@ class TextAnalysisSpec extends SparkSpec {
     // order sensitivity — the property unigram scoring cannot have:
     // same bag of words, different adjacency, different score
     val ord = Seq((1L, "x y x y"), (2L, "x x y y")).toDF("doc_id", "text")
-    val s = TextAnalysis.bigramLogProb(ord, "doc_id")
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+    val s = consume(TextAnalysis.bigramLogProbCached(ord, "doc_id"))(
+      _.collect()).map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(s(1L) != s(2L), "bigram score must see word order")
     // bit-identical across partitionings (fixed-point sums are order-free)
-    val p1 = TextAnalysis.bigramLogProb(df.repartition(7), "doc_id")
-      .collect().map(r => r.getLong(0) ->
+    val p1 = consume(TextAnalysis.bigramLogProbCached(df.repartition(7),
+        "doc_id"))(_.collect())
+      .map(r => r.getLong(0) ->
         (if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
     assert(p1(1L) == m1(1L)._2 && p1(2L) == m1(2L)._2)
   }

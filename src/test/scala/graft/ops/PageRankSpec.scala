@@ -28,8 +28,8 @@ class PageRankSpec extends SparkSpec {
     val edges = Seq(
       (1L, 2L), (1L, 3L), (1L, 4L), (2L, 1L), (3L, 1L),
       (4L, 5L), (6L, 1L), (2L, 6L), (6L, 2L))
-    val got = PageRank.run(edges.toDF("s", "d"), "s", "d", iters = 15)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val got = consume(PageRank.runCached(edges.toDF("s", "d"), "s", "d",
+      iters = 15))(_.collect()).map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val want = ref(edges, iters = 15, damping = 0.85)
     assert(got.keySet == want.keySet)
     got.foreach { case (id, r) =>
@@ -43,8 +43,8 @@ class PageRankSpec extends SparkSpec {
 
   test("uniform cycle converges to uniform ranks") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L))
-    val got = PageRank.run(edges.toDF("s", "d"), "s", "d", iters = 20)
-      .collect().map(r => r.getDouble(1))
+    val got = consume(PageRank.runCached(edges.toDF("s", "d"), "s", "d",
+      iters = 20))(_.collect()).map(r => r.getDouble(1))
     got.foreach(r => assert(math.abs(r - 1.0 / 3) < 1e-9))
   }
 
@@ -53,10 +53,10 @@ class PageRankSpec extends SparkSpec {
       (1L, 2L), (1L, 3L), (1L, 4L), (2L, 1L), (3L, 1L),
       (4L, 5L), (6L, 1L), (2L, 6L), (6L, 2L))
     val scale = 1000000000000000L
-    val fp = PageRank.runFixedPoint(edges.toDF("s", "d"), "s", "d", iters = 15)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dbl = PageRank.run(edges.toDF("s", "d"), "s", "d", iters = 15)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val fp = consume(PageRank.runFixedPointCached(edges.toDF("s", "d"), "s",
+      "d", iters = 15))(_.collect()).map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dbl = consume(PageRank.runCached(edges.toDF("s", "d"), "s", "d",
+      iters = 15))(_.collect()).map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(fp.keySet == dbl.keySet)
     fp.foreach { case (id, r) =>
       assert(math.abs(r.toDouble / scale - dbl(id)) < 1e-12,
@@ -77,8 +77,8 @@ class PageRankSpec extends SparkSpec {
     // independence, which the driver replay would otherwise bypass at
     // these sizes
     def ranks(in: DataFrame) = DriverBound.distributedOnly {
-      PageRank.runFixedPoint(in, "s", "d", iters = 5)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+      consume(PageRank.runFixedPointCached(in, "s", "d", iters = 5))(
+        _.collect()).map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     }
     assert(ranks(df) == ranks(df.repartition(7)))
   }
@@ -87,12 +87,11 @@ class PageRankSpec extends SparkSpec {
     val edges = (1L to 200L).map(i => (i % 17, i % 23)) ++
       Seq((100L, 101L), (101L, 100L), (5L, 42L), (7L, 7L), (100L, 101L))
     val df = edges.toDF("s", "d")
-    val drv = PageRank.runFixedPoint(df, "s", "d", iters = 6)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val dist = DriverBound.distributedOnly {
-      PageRank.runFixedPoint(df, "s", "d", iters = 6)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    }
+    def ranks() = consume(PageRank.runFixedPointCached(df, "s", "d",
+      iters = 6))(_.collect()).map(r => (r.getLong(0), r.getLong(1)))
+      .sortBy(_._1).toSeq
+    val drv = ranks()
+    val dist = DriverBound.distributedOnly(ranks())
     assert(drv == dist, s"driver replay diverged: $drv vs $dist")
   }
 

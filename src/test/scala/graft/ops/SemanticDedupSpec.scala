@@ -3,8 +3,8 @@ package graft.ops
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** SemDeDup ([[Dedup.semanticDedup]]): cluster-bounded cosine dedup with
-  * greedy lowest-id keep, on hand-built two-cluster geometry.
+/** SemDeDup ([[Dedup.semanticDedupCached]]): cluster-bounded cosine dedup
+  * with greedy lowest-id keep, on hand-built two-cluster geometry.
   */
 class SemanticDedupSpec extends SparkSpec {
   import spark.implicits._
@@ -24,8 +24,9 @@ class SemanticDedupSpec extends SparkSpec {
       (4L, Seq(0.1f, 0.9f, 0f, 0f)),   // cluster 1, unique
       (5L, Seq(0f, 0.8f, 0.6f, 0f))    // cluster 1, far from 4 → kept
     )
-    val out = Dedup.semanticDedup(df, "vec_id", "v", index, minCosine = 0.95)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+    val out = consume(Dedup.semanticDedupCached(df, "vec_id", "v", index,
+        minCosine = 0.95))(_.collect())
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
     assert(out(1L) === ((0L, false)))
     assert(out(2L) === ((0L, true)))
     assert(out(3L) === ((0L, true)))
@@ -42,8 +43,9 @@ class SemanticDedupSpec extends SparkSpec {
   }
 
   private def drops(rows: (Long, Seq[Float])*): Map[Long, Boolean] =
-    Dedup.semanticDedup(vecs(rows: _*), "vec_id", "v", index, minCosine = 0.95)
-      .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
+    consume(Dedup.semanticDedupCached(vecs(rows: _*), "vec_id", "v", index,
+        minCosine = 0.95))(_.collect())
+      .map(r => r.getLong(0) -> r.getBoolean(2)).toMap
 
   test("chain A–B, B–C: B and C drop, so C has no kept neighbour") {
     // cos 15° = 0.966 ≥ 0.95 for A–B and B–C; cos 30° = 0.866 for A–C.
@@ -66,8 +68,9 @@ class SemanticDedupSpec extends SparkSpec {
       (1L, Seq(0.9f, 0.1f, 0f, 0f)),
       (2L, Seq(0.1f, 0.9f, 0f, 0f))
     )
-    val out = Dedup.semanticDedup(df, "vec_id", "v", index, minCosine = 0.0)
-      .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
+    val out = consume(Dedup.semanticDedupCached(df, "vec_id", "v", index,
+        minCosine = 0.0))(_.collect())
+      .map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     // even at threshold 0 nothing drops — candidates never cross clusters
     assert(out === Map(1L -> false, 2L -> false))
   }
@@ -75,10 +78,10 @@ class SemanticDedupSpec extends SparkSpec {
   test("drop decisions are invariant under repartitioning") {
     val df = vecs((1 to 40).map(i =>
       (i.toLong, Seq((i % 7).toFloat, (i % 5).toFloat, 1f, 0.5f))): _*)
-    val a = Dedup.semanticDedup(df, "vec_id", "v", index)
-      .orderBy("vec_id").collect().toSeq
-    val b = Dedup.semanticDedup(df.repartition(7), "vec_id", "v", index)
-      .orderBy("vec_id").collect().toSeq
+    val a = consume(Dedup.semanticDedupCached(df, "vec_id", "v", index))(
+      _.orderBy("vec_id").collect().toSeq)
+    val b = consume(Dedup.semanticDedupCached(df.repartition(7), "vec_id",
+      "v", index))(_.orderBy("vec_id").collect().toSeq)
     assert(a === b)
   }
 
@@ -91,11 +94,11 @@ class SemanticDedupSpec extends SparkSpec {
       (3L, Seq(0.1f, 0.9f, 0f, 0f)),
       (4L, Seq(0.1f, 0.9f, 0.001f, 0f))
     )
-    val flat = Dedup.semanticDedup(df, "vec_id", "v", index, minCosine = 0.95)
-      .orderBy("vec_id").collect().toSeq
-    val hier = Dedup.semanticDedupHier(df, "vec_id", "v",
+    val flat = consume(Dedup.semanticDedupCached(df, "vec_id", "v", index,
+      minCosine = 0.95))(_.orderBy("vec_id").collect().toSeq)
+    val hier = consume(Dedup.semanticDedupHierCached(df, "vec_id", "v",
       index.centroidsFlat, index.centroidsFlat, k2 = 1, dim = 4,
-      minCosine = 0.95).orderBy("vec_id").collect().toSeq
+      minCosine = 0.95))(_.orderBy("vec_id").collect().toSeq)
     assert(hier === flat)
   }
 

@@ -6,9 +6,9 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Source/sink format coverage beyond parquet+csv: ORC and JSON-lines
-  * round-trips through the same FileBarSource contract, with pushdown
-  * checked where the format supports it.
+/** Source/sink format coverage: parquet, ORC and JSON-lines round-trips
+  * through the same FileBarSource contract, with pushdown checked where
+  * the format supports it.
   */
 class FormatsSpec extends SparkSpec {
   import spark.implicits._
@@ -42,9 +42,11 @@ class FormatsSpec extends SparkSpec {
     assert(got == want, s"$format round-trip mismatch")
   }
 
-  test("orc round-trips typed bars through FileBarSource") {
-    roundTrip("orc", None)
-  }
+  // the columnar formats carry their own schema
+  for (format <- Seq("orc", "parquet"))
+    test(s"$format round-trips typed bars through FileBarSource") {
+      roundTrip(format, None)
+    }
 
   test("json-lines round-trips bars with an explicit schema") {
     roundTrip("json", Some(barSchema))
@@ -57,15 +59,17 @@ class FormatsSpec extends SparkSpec {
     }
   }
 
-  test("orc scan gets the date predicate pushed to the source") {
-    val dir = Files.createTempDirectory("graft_orc_push").toString + "/bars"
-    bars.write.orc(dir)
-    val plan = new FileBarSource(dir, "orc", None)
-      .fetch(spark, symbols, jan1, jan31)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("Date"),
-      s"expected pushed date filter in orc scan:\n$plan")
-  }
+  for (format <- Seq("orc", "parquet"))
+    test(s"$format scan gets the date predicate pushed to the source") {
+      val dir = Files.createTempDirectory(s"graft_${format}_push").toString +
+        "/bars"
+      bars.write.format(format).save(dir)
+      val plan = new FileBarSource(dir, format, None)
+        .fetch(spark, symbols, jan1, jan31)
+        .queryExecution.executedPlan.toString
+      assert("PushedFilters: \\[[^\\]]*Date".r.findFirstIn(plan).nonEmpty,
+        s"expected pushed date filter in $format scan:\n$plan")
+    }
 
   test("permissive json: a corrupt line drops, good rows survive") {
     val dir = Files.createTempDirectory("graft_json_bad").toString
