@@ -309,7 +309,7 @@ object SparkEntry {
 
     // ---- set ops (U1) ----
 
-    // n-ary union by name with missing-column tolerance.
+    // n-ary union by name with missing-column tolerance (the ETL's U1).
     "q_union_by_name" -> q { (s, dir) =>
       val a = Tables.lineitem(s, dir).select(
         col("l_orderkey").as("id"), col("l_extendedprice").as("amount"),
@@ -317,7 +317,7 @@ object SparkEntry {
       val b = Tables.orders(s, dir).select(
         col("o_orderkey").as("id"), lit("orders").as("src"),
         col("o_totalprice").as("total"))
-      a.unionByName(b, allowMissingColumns = true)
+      StockEtl.unionBars(Seq(a, b))
     },
 
     // ---- joins (engine-level, SURVEY §2.3) ----

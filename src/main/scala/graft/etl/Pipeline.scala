@@ -43,7 +43,7 @@ object Pipeline {
     * 100 TB.
     */
   @annotation.tailrec
-  def retry[T](attempts: Int, delayMs: Long)(f: => T): T =
+  private[graft] def retry[T](attempts: Int, delayMs: Long)(f: => T): T =
     util.Try(f) match {
       case util.Success(v) => v
       case util.Failure(e) if attempts > 1 =>

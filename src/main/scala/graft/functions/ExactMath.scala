@@ -51,7 +51,7 @@ object ExactMath {
     * Spark SQL and a DuckDB expression; intermediate stages are prefixed
     * `__ln_` (callers drop them).
     */
-  def lnStages(x: String, out: String): Seq[(String, String)] = {
+  private[graft] def lnStages(x: String, out: String): Seq[(String, String)] = {
     // Horner form of Q(t) = 1 + t/3 + t^2/5 + ... + t^12/25
     val horner = (12 to 1 by -1).foldLeft(lit(1.0 / 25)) { (acc, k0) =>
       val k = k0 - 1 // coefficient 1/(2k+1) for term t^k

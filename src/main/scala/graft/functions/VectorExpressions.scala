@@ -310,8 +310,6 @@ object VectorFunctions {
 
   def cosineF32(a: Column, b: Column): Column =
     asColumn(CosineSimilarityF32(expression(a), expression(b)))
-  def dotF32(a: Column, b: Column): Column =
-    asColumn(DotProductF32(expression(a), expression(b)))
   def l2NormF32(v: Column): Column = asColumn(L2NormF32(expression(v)))
   def hyperplaneBucketF32(v: Column, planes: Int, dim: Int = 64,
       seed: Long = 42L): Column =

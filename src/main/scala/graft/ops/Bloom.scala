@@ -25,7 +25,7 @@ object Bloom {
     * `md5(key || "#i")` mod `mBits` — non-negative, so `%` agrees
     * cross-engine.
     */
-  def bitPos(key: Column, i: Int, mBits: Int): Column =
+  private def bitPos(key: Column, i: Int, mBits: Int): Column =
     conv(substring(md5(concat(key.cast("string"), lit(s"#$i"))), 1, 8), 16, 10)
       .cast(LongType) % mBits
 

@@ -455,7 +455,7 @@ object Bpe {
     * indexing (identical semantics in any SQL engine — no regex-split
     * edge cases around empty strings).
     */
-  def wordTable(docs: DataFrame, textCol: String): DataFrame =
+  private[graft] def wordTable(docs: DataFrame, textCol: String): DataFrame =
     docs
       .select(explode(TextAnalysis.tokens(col(textCol))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("wcount"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed-table co-location: the pre-shuffle contract for repeated
   * large-large joins and aggregations on a stable key.
@@ -38,17 +38,5 @@ object Bucketing {
       .sortBy(key)
       .format("parquet")
       .saveAsTable(table)
-  }
-
-  /** Join two co-bucketed tables on their bucket key — shuffle-free when
-    * both were written with [[writeBucketed]] on `leftKey`/`rightKey` with
-    * the same bucket count.
-    */
-  def cocoJoin(spark: SparkSession, leftTable: String, rightTable: String,
-      leftKey: String, rightKey: String,
-      joinType: String = "inner"): DataFrame = {
-    val l = spark.table(leftTable)
-    val r = spark.table(rightTable)
-    l.join(r, l(leftKey) === r(rightKey), joinType)
   }
 }

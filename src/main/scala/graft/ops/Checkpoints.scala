@@ -74,7 +74,7 @@ object Checkpoints {
     * Callers release the returned frame through [[release]] either way
     * (reliable-checkpoint files are reaped by the ContextCleaner /
     * session teardown, not by unpersist — release is then a no-op). */
-  def cut(df: DataFrame, eager: Boolean = false): DataFrame = {
+  private[graft] def cut(df: DataFrame, eager: Boolean = false): DataFrame = {
     val spark = df.sparkSession
     if (!spark.conf.get(ReliableConfKey, "false").toBoolean)
       df.localCheckpoint(eager)
@@ -99,7 +99,7 @@ object Checkpoints {
     * text across the chain; Spark wraps it in job-abort layers whose
     * messages embed the original text, so the substring check is applied
     * to every message in the chain. */
-  def isBlockLoss(t: Throwable): Boolean = {
+  private[graft] def isBlockLoss(t: Throwable): Boolean = {
     var cur = t
     var depth = 0
     while (cur != null && depth < 20) {

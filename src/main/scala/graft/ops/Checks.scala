@@ -30,7 +30,7 @@ object Checks {
     * null, and a null count would let a gate like `n_violations =!= 0`
     * silently pass).
     */
-  def violations(df: DataFrame, rules: Seq[Rule]): DataFrame = {
+  private[graft] def violations(df: DataFrame, rules: Seq[Rule]): DataFrame = {
     require(rules.nonEmpty, "at least one rule")
     val counters = rules.map(r =>
       coalesce(sum(when(coalesce(r.valid, lit(false)), 0L).otherwise(1L)),
@@ -41,7 +41,7 @@ object Checks {
   }
 
   /** Duplicate-key rule: one row per violated key value. */
-  def duplicateKeys(df: DataFrame, keys: Seq[String]): DataFrame =
+  private def duplicateKeys(df: DataFrame, keys: Seq[String]): DataFrame =
     df.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n_rows"))
       .where(col("n_rows") > 1)
@@ -51,7 +51,7 @@ object Checks {
     * them). One left-anti join; Spark broadcasts the parent side when it
     * fits, else shuffles both on the key.
     */
-  def orphans(child: DataFrame, fk: String,
+  private def orphans(child: DataFrame, fk: String,
       parent: DataFrame, pk: String): DataFrame =
     child.where(col(fk).isNotNull)
       .join(parent.select(col(pk).as(fk)), Seq(fk), "left_anti")

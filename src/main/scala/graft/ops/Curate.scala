@@ -184,8 +184,7 @@ object Curate {
     * batch and its signature pipeline feed several consumers each; the
     * in-batch connected components checkpoint their edges and labels) —
     * release each through [[Checkpoints.release]] once the outputs are
-    * consumed, as [[graft.streaming.CurateStreaming.ingestBatch]] does
-    * per micro-batch (`unpersist` silently skips the checkpoints). */
+    * consumed (`unpersist` silently skips the checkpoints). */
   final case class IngestedBatch(docs: DataFrame, newDigests: DataFrame,
       newBandedRows: DataFrame, report: IngestReport,
       caches: Seq[DataFrame] = Nil)

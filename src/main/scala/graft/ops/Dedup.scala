@@ -320,7 +320,7 @@ object Dedup {
     * @return (id, label) — one row per node that appears in any edge;
     *         `label` = smallest id in the node's component.
     */
-  def connectedComponentsCached(edges: DataFrame, srcCol: String,
+  private[graft] def connectedComponentsCached(edges: DataFrame, srcCol: String,
       dstCol: String, maxIters: Int = 25): Checkpoints.CachedResult = {
     // the edge set is read every round — checkpoint once to cut an
     // arbitrary upstream plan, UNLESS the input is already a materialized
@@ -455,18 +455,6 @@ object Dedup {
         array((0 until k).map(i => col(s"__m$i")): _*).as("sig"))
   }
 
-  /** LSH banding: candidate pairs whose signatures collide in ≥1 of
-    * `bands` bands (`k = bands·rowsPerBand`). Returns pairs with the
-    * signature-estimated Jaccard.
-    */
-  def lshCandidatePairs(docs: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
-      minEstJaccard: Double = 0.0): DataFrame =
-    lshCandidatesFromSigs(
-      minhashSigsFromExploded(explodedShingles(docs, idCol, textCol, n),
-        bands * rowsPerBand),
-      bands, rowsPerBand, minEstJaccard)
-
   /** (doc_id, sig, band, band_hash) banded rows from signatures — the
     * storage layout of the incremental dedup index (see
     * [[ingestNearIncremental]]): each row CARRIES its signature, so an
@@ -567,7 +555,7 @@ object Dedup {
   }
 
   /** Hamming distance between two 64-bit signatures. */
-  def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
+  private def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** SimHash signatures frame. Like [[minhashSignatures]], computed as 64
     * codegen'd bit-count SUM aggregates over exploded token hashes (the

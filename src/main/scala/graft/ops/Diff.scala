@@ -41,11 +41,4 @@ object Diff {
           .otherwise(lit("changed")))
       .select(keys.map(col) :+ col("change_type"): _*)
   }
-
-  /** Diff summary: one row per change_type with its count. */
-  def diffSummary(oldDf: DataFrame, newDf: DataFrame,
-      keys: Seq[String], payload: Seq[String]): DataFrame =
-    snapshotDiff(oldDf, newDf, keys, payload)
-      .groupBy(col("change_type"))
-      .agg(count(lit(1)).as("n_rows"))
 }

@@ -146,7 +146,7 @@ object Html {
   /** All markup removed, entities decoded, whitespace normalized —
     * rules 1–8. Blank-line boundaries (`\n\n`) mark block structure for
     * [[mainContent]]'s density gate. NULL in, NULL out. */
-  def htmlToText(html: Column): Column =
+  private[graft] def htmlToText(html: Column): Column =
     textFromStripped(stripNonContent(html))
 
   /** Rules 5–8 over an ALREADY-STRIPPED page ([[stripNonContent]]'s

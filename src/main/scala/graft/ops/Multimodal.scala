@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -10,8 +10,7 @@ import org.apache.spark.sql.types._
   * alongside — the layout that scales: Spark never interprets the bytes in
   * the relational layer, metadata predicates prune scans (parquet column
   * pruning keeps the heavy binary column unread unless projected), and
-  * decode/feature-extraction runs partition-parallel with a pluggable
-  * decoder.
+  * decode runs partition-parallel.
   *
   * Decode is REAL for image, audio AND video: [[decodeImageStats]] reads
   * PNG/JPEG payloads with `javax.imageio`, [[decodeAudioStats]] reads
@@ -19,9 +18,7 @@ import org.apache.spark.sql.types._
   * walks MJPEG AVI containers ([[Avi]]) and decodes sampled frames with
   * `javax.imageio` — all pure-JVM codecs, partition-parallel,
   * iterator-to-iterator (a multi-GB media partition never materializes).
-  * Other video codecs (H.264 …) have no pure-JVM decoder; their byte-
-  * decode seam stays behind [[Decoder]] ([[StubDecoder]] documents the
-  * contract) while the container/sampling plumbing above them is real.
+  * Other video codecs (H.264 …) have no pure-JVM decoder.
   */
 object Multimodal {
 
@@ -38,35 +35,6 @@ object Multimodal {
 
   final case class MediaMeta(format: String, width: Int, height: Int, n_frames: Int)
   final case class Media(media_id: Long, kind: String, bytes: Array[Byte], meta: MediaMeta)
-  final case class MediaFeatures(media_id: Long, kind: String, n_bytes: Long,
-      width: Int, height: Int, features: Array[Double])
-
-  /** Partition-parallel decoder contract: an iterator-to-iterator transform
-    * (never materializes a partition in memory — safe for multi-GB media
-    * partitions).
-    */
-  trait Decoder extends Serializable {
-    def decode(batch: Iterator[Media]): Iterator[MediaFeatures]
-  }
-
-  /** Deterministic fake decode: features derived from byte-content hashes.
-    * Stands in for a real pixel/sample decoder; same signature, same
-    * iterator shape.
-    */
-  object StubDecoder extends Decoder {
-    def decode(batch: Iterator[Media]): Iterator[MediaFeatures] =
-      batch.map { m =>
-        val h = java.util.Arrays.hashCode(m.bytes).toLong & 0xffffffffL
-        val feats = Array.tabulate(4)(i => ((h >> (i * 8)) & 0xff).toDouble / 255.0)
-        // meta is nullable in mediaSchema — a metadata-less row decodes
-        // with zero dimensions rather than NPE-ing the partition (the
-        // bytes null case on the next line gets the same treatment)
-        val meta = Option(m.meta)
-        MediaFeatures(m.media_id, m.kind,
-          if (m.bytes == null) 0L else m.bytes.length.toLong,
-          meta.fold(0)(_.width), meta.fold(0)(_.height), feats)
-      }
-  }
 
   /** Deterministic media fixture derived from the `documents` table: the
     * UTF-8 text bytes play the role of an encoded payload; metadata is
@@ -84,15 +52,6 @@ object Multimodal {
         (pmod(col("n_chars"), lit(1024)) + 64).cast(IntegerType).as("width"),
         (pmod(col("n_chars"), lit(768)) + 64).cast(IntegerType).as("height"),
         (pmod(col("doc_id"), lit(30)) + 1).cast(IntegerType).as("n_frames")).as("meta"))
-
-  /** Decode + feature-extract with a pluggable decoder, partition-parallel.
-    */
-  def extractFeatures(media: DataFrame, decoder: Decoder = StubDecoder): Dataset[MediaFeatures] = {
-    val spark = media.sparkSession
-    implicit val encIn: Encoder[Media] = Encoders.product[Media]
-    implicit val encOut: Encoder[MediaFeatures] = Encoders.product[MediaFeatures]
-    media.as[Media].mapPartitions(it => decoder.decode(it))
-  }
 
   /** Metadata-only transform (e.g. a resize plan): touches the meta struct,
     * never deserializes bytes — stays a narrow codegen'd projection.

@@ -326,7 +326,7 @@ object Policy {
     * first tag lets a benign `content="all"` shadow a later
     * noindex/noai opt-out — under-blocking in a compliance gate. Empty
     * string when absent. Pure scalar regexp chain. */
-  def metaRobotsContent(html: Column): Column = {
+  private def metaRobotsContent(html: Column): Column = {
     val tags = regexp_extract_all(html,
       lit("(?is)<meta\\b[^>]*\\bname\\s*=\\s*[\"']robots[\"'][^>]*>"),
       lit(0))
@@ -338,7 +338,7 @@ object Policy {
     * split on commas OR whitespace (both separator styles occur in the
     * wild), so `noindex, nofollow` contains `noindex` but never
     * `index`. */
-  def hasDirective(directives: Column, d: String): Column =
+  private def hasDirective(directives: Column, d: String): Column =
     exists(split(lower(directives), "[,\\s]+"), t => trim(t) === lit(d))
 
   /** Append `robots_noindex` / `robots_nofollow` / `robots_noai` derived
@@ -384,7 +384,7 @@ object Policy {
     * creativecommons.org licenses/publicdomain URL, else the href of a
     * `rel="license"` link (`<a>` or `<link>`, either attribute order).
     * NULL when neither is present. */
-  def licenseUrl(html: Column): Column = {
+  private def licenseUrl(html: Column): Column = {
     val cc = regexp_extract(html, ccUrlRe, 1)
     val relF = regexp_extract(html, relFirstRe, 1)
     val hrefF = regexp_extract(html, hrefFirstRe, 1)
@@ -395,7 +395,7 @@ object Policy {
   /** License family code from a license URL: `cc0`, `public-domain`,
     * `cc-<code>` (cc-by, cc-by-nc-sa, …) for creativecommons.org URLs,
     * `other` for any non-CC `rel="license"` target, NULL for NULL. */
-  def licenseFamily(url: Column): Column =
+  private def licenseFamily(url: Column): Column =
     when(url.isNull, lit(null).cast("string"))
       .when(url.rlike("(?i)creativecommons\\.org/publicdomain/zero/"),
         lit("cc0"))
@@ -409,12 +409,12 @@ object Policy {
   /** Commercial use clear? TRUE only for affirmatively permissive
     * families (cc0, public-domain, CC without `-nc`); `other`/unknown/
     * NULL are FALSE — an unrecognized license is not a clearance. */
-  def licenseCommercial(family: Column): Column =
+  private def licenseCommercial(family: Column): Column =
     coalesce(family.isin("cc0", "public-domain") ||
       (family.startsWith("cc-") && !family.contains("-nc")), lit(false))
 
   /** Derivative works clear? Same affirmative logic with `-nd`. */
-  def licenseDerivatives(family: Column): Column =
+  private def licenseDerivatives(family: Column): Column =
     coalesce(family.isin("cc0", "public-domain") ||
       (family.startsWith("cc-") && !family.contains("-nd")), lit(false))
 

@@ -4,29 +4,17 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Time-series regularization: per-key date spine + gap-fill — turn an
-  * irregular observation log (trading days, sensor readings, crawl
-  * snapshots) into a dense daily series with last-observation-carried-
-  * forward values.
+/** Time-series regularization: per-key gap-fill — turn an irregular
+  * observation log (trading days, sensor readings, crawl snapshots) into
+  * a dense daily series with last-observation-carried-forward values.
   *
-  * Scale shape: the spine is GENERATED per key from that key's own
-  * (min, max) range — one aggregation plus one `sequence`/`explode`
-  * (narrow) — never a driver-side calendar crossed against the key space.
-  * The carry-forward is one window per key ordered by date with
-  * `last(_, ignoreNulls)` over the unbounded-preceding frame: a single
-  * shuffle on the key, linear scan per partition.
+  * Scale shape: each observation GENERATES its own days with one
+  * `sequence`/`explode` (narrow) — never a driver-side calendar crossed
+  * against the key space. The carry-forward is one window per key ordered
+  * by date with `last(_, ignoreNulls)` over the unbounded-preceding frame:
+  * a single shuffle on the key, linear scan per partition.
   */
 object Resample {
-
-  /** Dense daily spine per key: one row per (key, day) for every day in
-    * the key's own observed [min(date), max(date)] range.
-    */
-  def dateSpine(df: DataFrame, keyCol: String, dateCol: String): DataFrame =
-    df.groupBy(col(keyCol))
-      .agg(min(col(dateCol)).as("__d0"), max(col(dateCol)).as("__d1"))
-      .select(col(keyCol),
-        explode(sequence(col("__d0"), col("__d1"), expr("INTERVAL 1 DAY")))
-          .as(dateCol))
 
   /** Daily resample with LOCF: missing days carry the most recent prior
     * value of each `valueCols` entry. Added `is_observed` flags the

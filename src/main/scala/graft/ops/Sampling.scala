@@ -39,7 +39,7 @@ object Sampling {
     * on any engine, so oracles must mirror `greatest(1, least(2^32, ...))`
     * verbatim.
     */
-  def ringThreshold(quota: Column, n: Column): Column =
+  private[graft] def ringThreshold(quota: Column, n: Column): Column =
     least(lit(HashRing),
       greatest(lit(1L), floor(quota * lit(4294967296.0) / n)))
       .cast("long")
@@ -52,7 +52,7 @@ object Sampling {
     * document ids — for arbitrary 64-bit ids, swap in `xxhash64` and give
     * up SQL-engine portability, not determinism.
     */
-  def hashBucket(key: Column, buckets: Int = 10000): Column =
+  private[graft] def hashBucket(key: Column, buckets: Int = 10000): Column =
     pmod(key * lit(2654435761L) + lit(104729L), lit(HashRing)) % buckets
 
   /** Reproducible Bernoulli sample: keep rows whose key hashes into the

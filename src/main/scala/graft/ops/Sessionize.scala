@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   */
 object Sessionize {
 
-  def withSessionIds(events: DataFrame, userCol: String, tsCol: String,
+  private def withSessionIds(events: DataFrame, userCol: String, tsCol: String,
       tieBreak: String, gapSeconds: Long): DataFrame = {
     val w = Window.partitionBy(col(userCol)).orderBy(col(tsCol), col(tieBreak))
     val prev = lag(col(tsCol), 1).over(w)

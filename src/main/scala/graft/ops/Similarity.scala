@@ -369,16 +369,6 @@ object Similarity {
           col(vecCol), index.centroidsFlat, index.dim), 4))
       .drop(vecCol)
 
-  /** Keep only vectors within `maxSqDist` of their prototype — the
-    * outlier-pruning filter. Narrow, shuffle-free, pushdown-friendly;
-    * all input columns pass through unchanged.
-    */
-  def pruneOutliers(vecs: DataFrame, vecCol: String,
-      index: IvfIndex, maxSqDist: Double): DataFrame =
-    vecs.where(
-      graft.functions.VectorFunctions.centroidMinSqDistF32(
-        col(vecCol), index.centroidsFlat, index.dim) <= maxSqDist)
-
   /** IVF top-k: scan only the `nprobe` nearest inverted lists instead of
     * the corpus (candidate fraction ≈ nprobe/k), exact-score candidates
     * with the fused cosine kernel, return top-k. The assignment predicate
@@ -448,9 +438,9 @@ object Similarity {
     * an index REBUILD is an explicit batch operation, not maintenance.
     *
     * Exactly-once: per-batch-directory OVERWRITE, the same replay
-    * contract as [[graft.streaming.CurateStreaming.ingestBatch]] — a
-    * re-delivered batch id regenerates its directory identically instead
-    * of appending duplicates.
+    * contract as [[graft.streaming.ParagraphStreaming]] — a re-delivered
+    * batch id regenerates its directory identically instead of appending
+    * duplicates.
     *
     * Scale shape: per batch, one narrow codegen'd assignment projection
     * + one `repartition(centroid_id)`-free partitioned write (the

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.LongType
   * fine in batch (two-phase aggregation scales), but a STREAMING top-k over
   * an unbounded key domain (URLs, shingles) accumulates state per key — the
   * sketch's state is d×w cells forever, and the same plan runs in both
-  * modes (see the streaming spec: one `groupBy(row_i, bucket).count()`
+  * modes (see the streaming spec: one `groupBy(row_i, bucket)` sum
   * maintained incrementally in complete/update mode).
   *
   * Engine-portable hashing: bucket ids derive from `md5` (identical bytes
@@ -28,27 +28,17 @@ object Sketch {
     * modulo `width`. Non-negative (32-bit value in a long), lowercase-hex
     * md5 on both engines, so `%` agrees cross-engine.
     */
-  def cmBucket(key: Column, i: Int, width: Int): Column =
+  private def cmBucket(key: Column, i: Int, width: Int): Column =
     conv(substring(md5(concat(key, lit(s"#$i"))), 1, 8), 16, 10)
       .cast(LongType) % width
 
-  /** Build the sketch: ONE pass over the data — each row fans out to its
-    * `depth` (row, bucket) cells via posexplode, then a two-phase count
-    * keyed on the cell id. Map-side partial aggregation bounds the shuffle
-    * at partitions × depth × width rows regardless of input size.
-    */
-  def countMinBuild(df: DataFrame, keyCol: String,
-      depth: Int = 4, width: Int = 2048): DataFrame =
-    df.select(posexplode(
-        array((0 until depth).map(i => cmBucket(col(keyCol), i, width)): _*))
-        .as(Seq("row_i", "bucket")))
-      .groupBy(col("row_i"), col("bucket"))
-      .agg(count(lit(1)).as("cnt"))
-
-  /** Build the sketch from PRE-AGGREGATED (key, weight) rows: each key
-    * fans out to its `depth` cells once, weighted by its count. Cell
-    * values are identical to [[countMinBuild]] over the raw stream (a
-    * cell's count = total occurrences of the keys hashing into it), but
+  /** Build the sketch: ONE pass over (key, weight) rows — each row fans
+    * out to its `depth` (row, bucket) cells via posexplode, then a
+    * two-phase sum keyed on the cell id. Map-side partial aggregation
+    * bounds the shuffle at partitions × depth × width rows regardless of
+    * input size. A weight of 1 per row builds the sketch of the raw
+    * stream; PRE-AGGREGATED (key, count) rows give identical cells (a
+    * cell's count = total occurrences of the keys hashing into it) with
     * the `depth` md5 evaluations run per DISTINCT key instead of per
     * occurrence — the right composition when an exact per-key aggregate
     * is being computed anyway (see `q_heavy_hitters`), and the standard
@@ -62,8 +52,8 @@ object Sketch {
       .groupBy(col("row_i"), col("bucket"))
       .agg(sum(col(weightCol)).as("cnt"))
 
-  /** Merge count-min sketches (any union of [[countMinBuild]]/
-    * [[countMinBuildWeighted]] outputs over the same depth/width): cell
+  /** Merge count-min sketches (any union of [[countMinBuildWeighted]]
+    * outputs over the same depth/width): cell
     * counts ADD, exactly — so per-segment sketches built independently
     * across 1000 executors (or days, or sources) combine into the
     * one-pass sketch bit-for-bit. The mergeable twin of

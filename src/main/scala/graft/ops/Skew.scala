@@ -3,20 +3,14 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Skew-mitigation utilities for hot-key workloads.
+/** Skew mitigation for hot-key workloads.
   *
-  * AQE's skew-join splitting handles most cases at runtime; these helpers
-  * cover the two patterns AQE cannot fix:
-  *
-  *  1. A skewed AGGREGATION (one giant group): pre-aggregate under a salt,
-  *     then merge — two shuffles, but the first spreads the hot key over
-  *     `saltBuckets` reducers instead of melting one.
-  *  2. A skewed broadcast-infeasible JOIN against a small-but-hot dim:
-  *     replicate the small side per salt bucket so the hot key's rows
-  *     spread across buckets.
-  *
-  * Both are algebraic rewrites: results are identical to the unsalted
-  * plans for decomposable aggregates (sum/count/min/max).
+  * AQE's skew-join splitting handles skewed joins at runtime; it cannot
+  * fix a skewed AGGREGATION (one giant group). Pre-aggregate under a salt,
+  * then merge — two shuffles, but the first spreads the hot key over
+  * `saltBuckets` reducers instead of melting one. The rewrite is
+  * algebraic: results are identical to the unsalted plan for decomposable
+  * aggregates (sum/count/min/max).
   */
 object Skew {
 
@@ -37,19 +31,5 @@ object Skew {
       .groupBy(keys.map(col): _*)
       .agg(sum(col("__n")).as("n_rows"),
         aggs.map { case (name, _) => sum(col(s"__$name")).as(name) }: _*)
-  }
-
-  /** Salted equi-join: spread a hot left key over `saltBuckets` partitions
-    * by replicating the (small) right side once per bucket. Correct for any
-    * join type whose semantics survive right-side duplication under the
-    * added salt-equality condition (inner/left_outer on distinct right keys).
-    */
-  def saltedJoin(leftBig: DataFrame, rightSmall: DataFrame, key: String,
-      saltBuckets: Int, joinType: String = "inner"): DataFrame = {
-    val l = leftBig.withColumn("__salt",
-      pmod(spark_partition_id() + monotonically_increasing_id(), lit(saltBuckets)))
-    val r = rightSmall.withColumn("__salt",
-      explode(sequence(lit(0), lit(saltBuckets - 1))))
-    l.join(r, Seq(key, "__salt"), joinType).drop("__salt")
   }
 }

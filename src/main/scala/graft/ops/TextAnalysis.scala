@@ -54,7 +54,7 @@ object TextAnalysis {
   /** Normalized form for near-identity comparison: lowercase, non-alnum
     * runs collapsed to single spaces, trimmed.
     */
-  def normalized(text: Column): Column =
+  private def normalized(text: Column): Column =
     trim(regexp_replace(lower(text), "[^a-z0-9]+", " "))
 
   /** Deterministic 128-bit content fingerprint of the normalized text. */
@@ -118,7 +118,7 @@ object TextAnalysis {
     langIdFromTokens(tokens(lower(text)), profiles)
 
   /** Language ID from a materialized tokens column (attribute). */
-  def langIdFromTokens(toks: Column,
+  private def langIdFromTokens(toks: Column,
       profiles: Map[String, Seq[String]] = langProfiles): Column = {
     val n = nullif(size(toks), lit(0)).cast(DoubleType)
     // build struct(score, lang) per profile, take array_max (lexicographic
@@ -476,7 +476,7 @@ object TextAnalysis {
     */
   val sentenceRe: String = "[^.!?]+[.!?]*|[.!?]+"
 
-  def sentences(text: Column): Column =
+  private[graft] def sentences(text: Column): Column =
     filter(transform(regexp_extract_all(text, lit(sentenceRe), lit(0)),
       s => trim(s)), s => s =!= "")
 
@@ -563,18 +563,11 @@ object TextAnalysis {
       .withColumn("score", col("tf").cast(DoubleType) / col("df").cast(DoubleType))
   }
 
-  /** Unicode NFC normalization (native codegen'd expression — see
-    * [[graft.functions.TextExpressions]]): one canonical byte string per
-    * canonically-equivalent text, the precondition for hash-based dedup.
-    */
-  def nfc(text: Column): Column =
-    graft.functions.TextFunctions.unicodeNormalize(text, "NFC")
-
   /** Accent folding: NFD decomposition, then strip combining marks —
     * `é`/`e`+U+0301 both become `e`. (The same algorithm DuckDB's
     * `strip_accents` applies for Latin scripts.)
     */
-  def stripAccents(text: Column): Column =
+  private def stripAccents(text: Column): Column =
     regexp_replace(
       graft.functions.TextFunctions.unicodeNormalize(text, "NFD"),
       "\\p{M}+", "")
@@ -1233,21 +1226,6 @@ object TextAnalysis {
         pmod(xxhash64(col("tok")), lit(dim.toLong)).as("bucket"))
       .agg(count(lit(1)).as("cnt"))
   }
-
-  /** Dense Array[Float] form of [[featureHashCounts]] for the vector
-    * operators (cosine ANN, SemDeDup) — raw counts, caller normalizes if
-    * its metric needs it (the cosine kernels are scale-invariant).
-    */
-  def featureHashVectors(docs: DataFrame, idCol: String, textCol: String,
-      dim: Int = 64): DataFrame =
-    featureHashCounts(docs, idCol, textCol, dim)
-      .groupBy(col("doc_id"))
-      .agg(map_from_entries(collect_list(struct(col("bucket"), col("cnt"))))
-        .as("__m"))
-      .select(col("doc_id"),
-        transform(sequence(lit(0L), lit(dim.toLong - 1L)),
-          j => coalesce(element_at(col("__m"), j), lit(0L)).cast("float"))
-          .as("vec"))
 
   /** Full per-document text-statistics projection. Tokenizes once (staged
     * column), then derives every statistic from the attribute.

@@ -34,7 +34,7 @@ import org.apache.spark.sql.types.LongType
 object Triangles {
 
   /** Canonical undirected edge set: u < v, self-loops and duplicates out. */
-  def canonical(edges: DataFrame, aCol: String, bCol: String): DataFrame =
+  private def canonical(edges: DataFrame, aCol: String, bCol: String): DataFrame =
     edges.select(least(col(aCol), col(bCol)).cast(LongType).as("u"),
         greatest(col(aCol), col(bCol)).cast(LongType).as("v"))
       .where(col("u") =!= col("v"))
@@ -53,7 +53,7 @@ object Triangles {
     * carry order-nondeterministic expressions (collect_set in the
     * co-purchase caller) — which the r11 x10 anatomy probe measured as
     * 42 exchanges / 16 sequential jobs for a 3-join query. */
-  def countExact(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
+  private[graft] def countExact(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
     val und = canonical(edges, aCol, bCol).cutLineage(false)
     val deg = und.select(explode(array(col("u"), col("v"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))

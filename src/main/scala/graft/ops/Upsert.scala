@@ -27,29 +27,18 @@ object Upsert {
       .drop("__rk")
   }
 
-  /** Merge an update log into a base snapshot: rows from `updates` win over
-    * `base` on key collision (and within each side, `recency` decides).
-    * Classic upsert = union + compaction — one shuffle total, no join.
-    */
-  def merge(base: DataFrame, updates: DataFrame, keys: Seq[String],
-      recency: Seq[Column]): DataFrame = {
-    // a literal epoch column makes "updates beat base" part of the SAME
-    // ordering (no outer-join formulation, which would shuffle twice)
-    val tagged = base.withColumn("__epoch", lit(0))
-      .unionByName(updates.withColumn("__epoch", lit(1)))
-    latestByKey(tagged, keys, col("__epoch").desc +: recency)
-      .drop("__epoch")
-  }
-
   /** Apply a full CDC log WITH DELETES: `opCol` marks each change 'U'
-    * (upsert) or 'D' (delete). The latest change per key wins exactly as
-    * in [[merge]]; keys whose LATEST change is a delete leave the
-    * snapshot. Same single-shuffle shape — the tombstone filter runs
+    * (upsert) or 'D' (delete). Rows from `changes` win over `base` on key
+    * collision (and within each side, `recency` decides); keys whose
+    * LATEST change is a delete leave the snapshot. Classic upsert = union
+    * + compaction — one shuffle total, no join. The tombstone filter runs
     * after the rank-1 pick, so a key deleted and re-inserted 10⁶ times
     * still ships one row per map task.
     */
   def applyCdc(base: DataFrame, changes: DataFrame, keys: Seq[String],
       recency: Seq[Column], opCol: String): DataFrame = {
+    // a literal epoch column makes "changes beat base" part of the SAME
+    // ordering (no outer-join formulation, which would shuffle twice)
     val tagged = base
       .withColumn(opCol, lit("U")).withColumn("__epoch", lit(0))
       .unionByName(changes.withColumn("__epoch", lit(1)))

@@ -91,7 +91,7 @@ object Urls {
 
   /** Lowercased scheme of an absolute URL; empty string when the input
     * has no `scheme://`. */
-  def scheme(url: Column): Column =
+  private def scheme(url: Column): Column =
     lower(regexp_extract(trim(url), schemeRe, 1))
 
   /** Lowercased host of an absolute URL: authority minus userinfo and
@@ -145,7 +145,7 @@ object Urls {
     * empty, or null). An IPv4 literal is returned whole — it has no
     * label structure, but it IS the owner key a quota should group by.
     */
-  def registeredDomain(hostCol: Column): Column = {
+  private[graft] def registeredDomain(hostCol: Column): Column = {
     val h = lower(hostCol)
     val last2 = regexp_extract(h, "([^.]+\\.[^.]+)$", 1)
     val last3 = regexp_extract(h, "([^.]+\\.[^.]+\\.[^.]+)$", 1)

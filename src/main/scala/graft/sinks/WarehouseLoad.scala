@@ -127,7 +127,7 @@ object WarehouseLoad {
     * present — a stage written without optional columns still types
     * correctly (COPY matches columns by name, not position).
     */
-  def readStaged(spark: SparkSession, stagePath: String): DataFrame = {
+  private def readStaged(spark: SparkSession, stagePath: String): DataFrame = {
     val raw = graft.etl.StockEtl.readStagedCsv(spark, stagePath)
     val present = raw.columns.toSet
     val cast = numericCols.filter(present).foldLeft(raw)((df, c) =>

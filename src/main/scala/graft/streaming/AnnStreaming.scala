@@ -15,7 +15,7 @@ import graft.ops.Similarity
   *
   * Exactly-once: Structured Streaming's checkpointed batch ids plus the
   * per-batch-directory OVERWRITE in `ivfIngestBatch` — the identical
-  * replay contract as [[CurateStreaming]]. The quantizer freezes at the
+  * replay contract as [[ParagraphStreaming]]. The quantizer freezes at the
   * first batch (or `pretrained`): index maintenance must never
   * re-geometry committed lists; a rebuild is a batch operation.
   */

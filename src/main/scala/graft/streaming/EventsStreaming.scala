@@ -71,21 +71,6 @@ object EventsStreaming {
     q.awaitTermination()
   }
 
-  /** Streaming exact deduplication for document ingest: exactly-once
-    * retention keyed on a content digest, with state BOUNDED by the
-    * watermark horizon (`dropDuplicatesWithinWatermark` evicts digest keys
-    * once the watermark passes them). Unbounded digest state is the 100-TB
-    * failure mode of naive streaming dedup — the horizon caps state at
-    * (arrival rate × watermark delay) keys regardless of stream age. Batch
-    * twin: [[graft.ops.Dedup.dropExactDuplicates]].
-    */
-  def dedupDocumentsStream(docs: DataFrame, tsCol: String, textCol: String,
-      watermarkDelay: String = "1 hour"): DataFrame =
-    docs
-      .withColumn("content_hash", md5(col(textCol)))
-      .withWatermark(tsCol, watermarkDelay)
-      .dropDuplicatesWithinWatermark("content_hash")
-
   /** Stream-static dimension enrichment: every micro-batch joins against
     * the broadcast static side — no streaming state, and the stream side
     * never shuffles. The SAME function serves batch frames (the batch twin
@@ -126,54 +111,6 @@ object EventsStreaming {
       .select(col("purchase_id"), col("purchase_ts"), col("p_user").as("user_id"),
         col("view_id"), col("view_ts"))
   }
-
-  /** Incremental materialized view: maintain a latest-state-per-key table
-    * under a continuous update stream with `foreachBatch` +
-    * [[graft.ops.Upsert.merge]] — each micro-batch is first compacted to
-    * one row per key (tiny), then merged into the base table.
-    *
-    * This is the standard no-table-format formulation of streaming upsert:
-    * the expensive side (the base) is rewritten once per batch, the stream
-    * side never accumulates state in the store. Exactly-once comes from
-    * the sink's overwrite idempotence plus checkpointed batch ids (a
-    * replayed batch merges to the same result — merge is idempotent for
-    * identical input).
-    *
-    * @return the running StreamingQuery; callers own stop().
-    */
-  def maintainLatestState(updates: DataFrame, tablePath: String,
-      checkpoint: String, keys: Seq[String],
-      recency: Seq[org.apache.spark.sql.Column]): org.apache.spark.sql.streaming.StreamingQuery =
-    updates.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val target = new org.apache.hadoop.fs.Path(tablePath)
-        val fs = target.getFileSystem(hconf)
-        val compacted = graft.ops.Upsert.latestByKey(batch.toDF(), keys, recency)
-        val merged =
-          if (fs.exists(target)) {
-            val base = spark.read.parquet(tablePath)
-            graft.ops.Upsert.merge(base, compacted, keys, recency)
-          } else compacted
-        // write-new-then-swap, never read-and-overwrite in place (the
-        // distributed write would race its own input). The swap is
-        // rename-ASIDE, never delete-then-rename: a crash between a
-        // delete and a rename would lose the whole accumulated state
-        // table, while a crash here leaves either the old table or a
-        // recoverable backup (renames are atomic on HDFS)
-        val tmp = new org.apache.hadoop.fs.Path(tablePath + "_next")
-        merged.write.mode("overwrite").parquet(tmp.toString)
-        val backup = new org.apache.hadoop.fs.Path(tablePath + "_prev")
-        fs.delete(backup, true) // stale backup from a prior crash
-        if (fs.exists(target)) fs.rename(target, backup)
-        fs.rename(tmp, target)
-        fs.delete(backup, true)
-        ()
-      }
-      .start()
 
   final case class FunnelEv(user_id: Long, event_type: String, ts: java.sql.Timestamp)
   /** Compacted funnel state, timestamps in epoch micros. `Long.MaxValue`

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -12,8 +12,8 @@ import graft.ops.Dedup
   * new documents is cleaned against the paragraph-frequency evidence of
   * every EARLIER batch, and both outputs — the cleaned rows and the
   * batch's frequency delta — land as batch-partitioned parquet
-  * (`.../batch_id=N/`), the same exactly-once-on-plain-files contract as
-  * [[CurateStreaming]]:
+  * (`.../batch_id=N/`). That layout is what makes replays exactly-once
+  * on a plain file store, with no table format:
   *
   *  - per-batch-directory OVERWRITE makes re-delivered batches
   *    regenerate byte-identical partitions instead of double-counting
@@ -42,16 +42,30 @@ object ParagraphStreaming {
     * ids per the incremental contract, so the sum IS the distinct-doc
     * frequency). Empty frame when nothing has been ingested.
     */
-  def loadIndex(spark: SparkSession, indexPath: String,
-      beforeBatch: Long): DataFrame =
-    CurateStreaming.readDeltas(spark, indexPath, beforeBatch, deltaSchema)
-      .groupBy(col("pdigest"))
+  private[graft] def loadIndex(spark: SparkSession, indexPath: String,
+      beforeBatch: Long): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(indexPath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val deltas =
+      if (!fs.exists(p) || fs.listStatus(p).isEmpty)
+        spark.createDataFrame(new java.util.ArrayList[Row](), deltaSchema)
+      else
+        // EXPLICIT schema (batch_id filled from the partition paths): a
+        // crash can leave the newest batch directory with zero readable
+        // data files, and a schema-inferring read would then throw on
+        // every recovery replay instead of pruning the partition away
+        spark.read.schema(deltaSchema.add(StructField("batch_id", LongType)))
+          .parquet(indexPath)
+          .where(col("batch_id") < beforeBatch)
+          .drop("batch_id")
+    deltas.groupBy(col("pdigest"))
       .agg(sum(col("doc_freq")).as("doc_freq"))
+  }
 
   /** One micro-batch body, exposed for deterministic-replay testing: the
     * streaming query below delegates here verbatim.
     */
-  def ingestBatch(batch: DataFrame, batchId: Long, idCol: String,
+  private[graft] def ingestBatch(batch: DataFrame, batchId: Long, idCol: String,
       textCol: String, sep: String, maxDocFreq: Long,
       indexPath: String, outPath: String): Unit = {
     val spark = batch.sparkSession

@@ -9,8 +9,7 @@ import graft.ops.Policy
 /** Streaming twin of the crawl-policy gate ([[Policy.gate]]): crawl
   * drops arrive as micro-batches and each batch is gated against a
   * STATIC per-host robots-rule table ([[Policy.parseRobots]] output —
-  * refreshed out-of-band on the robots recrawl cadence, exactly like the
-  * frozen vocabulary in [[QualityStreaming]]). The gate is stateless
+  * refreshed out-of-band on the robots recrawl cadence). The gate is stateless
   * (scalar regexp signals + one stream-static equi-join), so state never
   * grows and a batch's cost tracks the batch, not the stream's age.
   *
@@ -24,7 +23,7 @@ import graft.ops.Policy
 object PolicyStreaming {
 
   /** One micro-batch body, exposed for deterministic-replay testing. */
-  def gateBatch(batch: DataFrame, batchId: Long, urlCol: String,
+  private[graft] def gateBatch(batch: DataFrame, batchId: Long, urlCol: String,
       htmlCol: String, hostRules: DataFrame, outPath: String,
       respectNoAi: Boolean = true,
       requireCommercial: Boolean = false): Unit = {
@@ -54,8 +53,7 @@ object PolicyStreaming {
     * parseRobots frame would re-run its window parse inside every
     * micro-batch before re-joining. Callers own stop(), and on a robots
     * refresh the superseded rule table's blocks should be released with
-    * `hostRules.unpersist()` after the old query stops (same lifecycle
-    * as [[QualityStreaming]]'s frozen vocabulary — blocks otherwise
+    * `hostRules.unpersist()` after the old query stops (blocks otherwise
     * release with the session). Read the surviving corpus at
     * `outPath/kept`, the per-batch audit at `outPath/audit`. */
   def gateStream(pages: DataFrame, urlCol: String, htmlCol: String,

@@ -78,9 +78,10 @@ class EvalModeParitySpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("vector kernels: interpreted and compiled evaluation are bit-identical") {
     val v = col("v")
+    graft.GraftExtensions.register(spark)
     val rows = assertParity(vectors.select(col("id"),
       VectorFunctions.cosineF32(v, col("w")),
-      VectorFunctions.dotF32(v, col("w")),
+      expr("dot_f32(v, w)"),
       VectorFunctions.l2NormF32(v),
       VectorFunctions.hyperplaneBucketF32(v, planes = 12, dim = dim),
       VectorFunctions.nearestCentroidF32(v, cents, dim),

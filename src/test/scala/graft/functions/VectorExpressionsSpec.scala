@@ -31,7 +31,8 @@ class VectorExpressionsSpec extends SparkSpec {
     val df = Seq(
       (1L, Some(Array(1.0f, 2.0f, 3.0f)), Some(Array(4.0f, 5.0f, 6.0f))),
       (2L, None: Option[Array[Float]], Some(Array(1.0f)))).toDF("id", "a", "b")
-    val got = df.select($"id", VectorFunctions.dotF32($"a", $"b").as("d"))
+    graft.GraftExtensions.register(spark)
+    val got = df.select($"id", expr("dot_f32(a, b)").as("d"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
     assert(got(1L).contains(32.0))
     assert(got(2L).isEmpty)
@@ -96,18 +97,6 @@ class VectorExpressionsSpec extends SparkSpec {
     assert(out(2L) === ((1, 0.0)))
     assert(out(3L)._1 === 0) // tie breaks to the lowest id
     assert(math.abs(out(3L)._2 - 0.5) < 1e-12)
-  }
-
-  test("pruneOutliers keeps exactly the within-threshold vectors") {
-    val index = Similarity.IvfIndex(Array(1.0, 0.0, 0.0, 0.0), 4)
-    val df = Seq(
-      (1L, Seq(1.0f, 0f, 0f, 0f)),     // dist 0
-      (2L, Seq(0.9f, 0.1f, 0f, 0f)),   // dist 0.02
-      (3L, Seq(-1f, 2f, 2f, 0f))       // dist 12 -> outlier
-    ).toDF("vec_id", "v")
-    val kept = Similarity.pruneOutliers(df, "v", index, maxSqDist = 1.0)
-      .select("vec_id").as[Long].collect().sorted
-    assert(kept === Array(1L, 2L))
   }
 
   test("hierarchical cell kernel: matches a driver-side two-level argmin on real vectors") {

@@ -16,8 +16,9 @@ class BucketingSpec extends SparkSpec {
         graft.Tables.orders(spark, sf).select("o_orderkey", "o_totalprice"),
         "ord_bucketed", "o_orderkey", buckets = 4)
 
-      val joined = Bucketing.cocoJoin(spark, "li_bucketed", "ord_bucketed",
-        "l_orderkey", "o_orderkey")
+      val li = spark.table("li_bucketed")
+      val ord = spark.table("ord_bucketed")
+      val joined = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
       val plan = joined.queryExecution
         .explainString(org.apache.spark.sql.execution.FormattedMode)
       val exchanges = "(?m)^\\(\\d+\\) Exchange".r.findAllIn(plan).size

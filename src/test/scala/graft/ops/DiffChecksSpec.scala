@@ -25,13 +25,6 @@ class DiffSpec extends SparkSpec {
       4L -> "unchanged", 5L -> "added"))
   }
 
-  test("diff summary counts per change type") {
-    val s = Diff.diffSummary(oldV, newV, Seq("k"), Seq("s", "v"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(s == Map("unchanged" -> 2L, "changed" -> 1L,
-      "removed" -> 1L, "added" -> 1L))
-  }
-
   test("keys-only diff (empty payload): pure existence comparison") {
     val d = Diff.snapshotDiff(oldV, newV, Seq("k"), Nil)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap

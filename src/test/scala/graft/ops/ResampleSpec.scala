@@ -14,14 +14,6 @@ class ResampleSpec extends SparkSpec {
     ("B", Date.valueOf("2024-02-10"), Some(5.0)))
     .toDF("k", "d", "v")
 
-  test("dateSpine: per-key dense range from the key's own min/max") {
-    val spine = Resample.dateSpine(obs, "k", "d")
-      .collect().map(r => (r.getString(0), r.getDate(1).toString))
-    assert(spine.count(_._1 == "A") == 4, "A spans 4 days")
-    assert(spine.count(_._1 == "B") == 1, "B is a single day")
-    assert(spine.contains(("A", "2024-01-02")) && spine.contains(("A", "2024-01-03")))
-  }
-
   test("resampleDailyLocf: gaps carry the prior value; observed rows flagged") {
     val out = Resample.resampleDailyLocf(obs, "k", "d", Seq("v"))
       .collect()

@@ -20,15 +20,6 @@ class SkewSpec extends SparkSpec {
     assert(salted.toSeq == plain.toSeq)
   }
 
-  test("salted join equals plain join (inner, distinct right keys)") {
-    val li = graft.Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity")
-    val oRenamed = graft.Tables.orders(spark, sf)
-      .select(col("o_orderkey").as("l_orderkey"), col("o_totalprice"))
-    val a = Skew.saltedJoin(li, oRenamed, "l_orderkey", saltBuckets = 4).count()
-    val b = li.join(oRenamed, Seq("l_orderkey")).count()
-    assert(a == b)
-  }
-
   test("GraftExtensions constructs and injects without error") {
     new graft.GraftExtensions()(new org.apache.spark.sql.SparkSessionExtensions)
   }
@@ -43,8 +34,8 @@ class SkewSpec extends SparkSpec {
   * which is exactly what these specs pin: bit-identical output vs a
   * driver-side reference and across adversarial repartitionings. (AQE
   * cannot split a single window key — correctness requires co-location —
-  * so "AQE handles the rest" applies to the JOIN paths, which
-  * `saltedJoin`/`saltedSum` cover above; the window path's defense is the
+  * so "AQE handles the rest" applies to the join and aggregation paths,
+  * which AQE and `saltedSum` cover; the window path's defense is the
   * linear per-key bound checked here.)
   */
 class SkewStressSpec extends SparkSpec {

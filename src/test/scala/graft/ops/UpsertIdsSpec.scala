@@ -23,22 +23,6 @@ class UpsertSpec extends SparkSpec {
     assert(out == Map("k1" -> "new", "k2" -> "only", "k3" -> "tie-hi"))
   }
 
-  test("merge: updates beat base on collision; non-colliding rows survive") {
-    val base = Seq(
-      (1L, "k1", t("2024-01-01 10:00:00"), "base1"),
-      (2L, "k2", t("2024-01-01 10:00:00"), "base2"))
-      .toDF("event_id", "key", "ts", "v")
-    val updates = Seq(
-      // older timestamp than base — updates must STILL win (epoch ordering)
-      (3L, "k1", t("2024-01-01 09:00:00"), "upd1"),
-      (4L, "k3", t("2024-01-01 10:00:00"), "upd3"))
-      .toDF("event_id", "key", "ts", "v")
-    val out = Upsert.merge(base, updates, Seq("key"),
-        Seq(col("ts").desc, col("event_id").desc))
-      .select("key", "v").as[(String, String)].collect().toMap
-    assert(out == Map("k1" -> "upd1", "k2" -> "base2", "k3" -> "upd3"))
-  }
-
   test("applyCdc: latest tombstone deletes the key; delete-then-reinsert survives") {
     val base = Seq(
       (1L, "k1", t("2024-01-01 10:00:00"), "base1"),

@@ -75,40 +75,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming dedup: duplicate content within the watermark is dropped") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-
-    val input = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val deduped = EventsStreaming.dedupDocumentsStream(
-      input.toDS().toDF("doc_id", "ts", "text"), "ts", "text")
-    val dir = java.nio.file.Files.createTempDirectory("deddoc").toString
-    val q = deduped.writeStream
-      .outputMode(OutputMode.Append)
-      .format("memory").queryName("dedup_out")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .start()
-    try {
-      val t = java.sql.Timestamp.valueOf(_: String)
-      // batch 1: two distinct texts, one in-batch duplicate
-      input.addData(
-        (1L, t("2024-01-01 10:00:00"), "alpha"),
-        (2L, t("2024-01-01 10:00:01"), "alpha"),
-        (3L, t("2024-01-01 10:00:02"), "beta"))
-      q.processAllAvailable()
-      // batch 2: cross-batch duplicate (inside the watermark) + one new
-      input.addData(
-        (4L, t("2024-01-01 10:10:00"), "beta"),
-        (5L, t("2024-01-01 10:10:01"), "gamma"))
-      q.processAllAvailable()
-      val texts = spark.table("dedup_out").select("text").as[String].collect().sorted
-      assert(texts.toSeq == Seq("alpha", "beta", "gamma"),
-        s"expected one survivor per distinct text, got ${texts.toSeq}")
-    } finally q.stop()
-  }
-
   test("streaming count-min sketch equals the batch build with d×w state") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.OutputMode
@@ -120,8 +86,9 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[String]
     // the SAME build plan as batch, maintained incrementally: state is the
     // d×w cell table, never per-key
-    val sketch = graft.ops.Sketch.countMinBuild(
-      input.toDS().toDF("k"), "k", depth = 4, width = 64)
+    val sketch = graft.ops.Sketch.countMinBuildWeighted(
+      input.toDS().toDF("k").withColumn("one", lit(1L)), "k", "one",
+      depth = 4, width = 64)
     val dir = java.nio.file.Files.createTempDirectory("cms").toString
     val q = sketch.writeStream
       .outputMode(OutputMode.Complete)
@@ -133,8 +100,9 @@ class StreamingSpec extends SparkSpec {
       input.addData(b2); q.processAllAvailable()
       val streamed = spark.table("cms_out")
         .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-      val batch = graft.ops.Sketch.countMinBuild(
-        (b1 ++ b2).toDF("k"), "k", depth = 4, width = 64)
+      val batch = graft.ops.Sketch.countMinBuildWeighted(
+        (b1 ++ b2).toDF("k").withColumn("one", lit(1L)), "k", "one",
+        depth = 4, width = 64)
         .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
       assert(streamed == batch,
         s"streamed sketch != batch sketch: ${streamed.toSeq.diff(batch.toSeq)}")
@@ -331,45 +299,6 @@ class StreamingSpec extends SparkSpec {
         .select("purchase_id", "view_id").as[(Long, Long)].collect().toSet
       assert(out == Set((20L, 10L)),
         s"only the same-user in-horizon view attributes, got $out")
-    } finally q.stop()
-  }
-
-  test("foreachBatch incremental upsert maintains latest-state table across batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-
-    val t = java.sql.Timestamp.valueOf(_: String)
-    val dir = java.nio.file.Files.createTempDirectory("mview").toString
-    // crash residue from a hypothetical prior run: the swap must clear a
-    // stale backup directory, never trip over it
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(s"$dir/state_prev/junk"))
-    val input = MemoryStream[(Long, String, java.sql.Timestamp, Double)]
-    val q = EventsStreaming.maintainLatestState(
-      input.toDS().toDF("event_id", "key", "ts", "value"),
-      s"$dir/state", s"$dir/ckpt", Seq("key"),
-      Seq(col("ts").desc, col("event_id").desc))
-    try {
-      input.addData(
-        (1L, "k1", t("2024-01-01 10:00:00"), 1.0),
-        (2L, "k1", t("2024-01-01 11:00:00"), 2.0), // in-batch compaction
-        (3L, "k2", t("2024-01-01 10:00:00"), 3.0))
-      q.processAllAvailable()
-      val s1 = spark.read.parquet(s"$dir/state")
-        .select("key", "value").as[(String, Double)].collect().toMap
-      assert(s1 == Map("k1" -> 2.0, "k2" -> 3.0))
-      // batch 2: update k1, add k3 — k2 must survive the merge untouched
-      input.addData(
-        (4L, "k1", t("2024-01-01 12:00:00"), 9.0),
-        (5L, "k3", t("2024-01-01 10:00:00"), 7.0))
-      q.processAllAvailable()
-      val s2 = spark.read.parquet(s"$dir/state")
-        .select("key", "value").as[(String, Double)].collect().toMap
-      assert(s2 == Map("k1" -> 9.0, "k2" -> 3.0, "k3" -> 7.0))
-      // the rename-aside swap leaves no backup behind on success
-      assert(!new java.io.File(s"$dir/state_prev").exists(),
-        "stale backup directory not cleaned up")
     } finally q.stop()
   }
 
