@@ -2151,7 +2151,7 @@ object SparkEntry {
         .unionByName(docs.where(col("doc_id") === 310)
           .select(lit(91000L).as("doc_id"), col("text")))   // in-batch exact dup
       val r1 = Curate.ingest(batch1, "doc_id", "text", index0,
-        n = 3, bands = bands, rowsPerBand = rowsPerBand, report = false)
+        n = 3, bands = bands, rowsPerBand = rowsPerBand)
       val index1 = Curate.DedupIndex(
         index0.digests.unionByName(r1.newDigests),
         index0.banded.unionByName(r1.newBandedRows))
@@ -2159,7 +2159,7 @@ object SparkEntry {
         .unionByName(docs.where(col("doc_id") === 310)
           .select(lit(92000L).as("doc_id"), col("text")))   // cross-BATCH exact dup
       val r2 = Curate.ingest(batch2, "doc_id", "text", index1,
-        n = 3, bands = bands, rowsPerBand = rowsPerBand, report = false)
+        n = 3, bands = bands, rowsPerBand = rowsPerBand)
       r1.docs.withColumn("batch", lit(1))
         .unionByName(r2.docs.withColumn("batch", lit(2)))
         .select(col("batch"), col("doc_id"), col("quality_score"), col("split"),

@@ -23,8 +23,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   * them — no variant drops them): a long-running caller, e.g. a
   * streaming job invoking an op per batch, must be able to bound
   * executor storage instead of waiting on ContextCleaner GC. The caller
-  * releases AFTER consuming the result (outputs are lazy — releasing
-  * first silently recomputes).
+  * releases AFTER consuming the result: outputs are lazy, so a persist
+  * released first silently recomputes, and a lazy cut released first
+  * fails the read with "Checkpoint block … not found".
   */
 object Checkpoints {
 

@@ -53,8 +53,9 @@ object Curate {
   final case class MixtureSpec(domainCol: String,
       targets: Seq[(String, Int)], budget: Long)
 
-  /** `caches`: with `report`, the last-stage cache `docs` reads — release
-    * each through [[Checkpoints.release]] once `docs` is consumed. */
+  /** `caches`: with `report`, the last-stage lineage cut `docs` reads —
+    * release each through [[Checkpoints.release]] once `docs` is
+    * consumed. */
   final case class Curated(docs: DataFrame, report: CurationReport,
       caches: Seq[DataFrame] = Nil)
 
@@ -69,15 +70,17 @@ object Curate {
     *                     content, never markup
     * @param splits       per-myriad split weights (sum 10000)
     * @param packBudget   token budget per packed training bin
-    * @param report       when true, each counted stage is persisted
-    *                     (MEMORY_AND_DISK) before its count so no stage
-    *                     prefix re-executes, intermediates are unpersisted
-    *                     once the final stage is materialized, and the
-    *                     returned frame reads from the retained last-stage
-    *                     cache, handed out in [[Curated.caches]]. When
-    *                     false (production mode) nothing is counted or
-    *                     cached — the pipeline is one fully lazy plan and
-    *                     observability is the caller's metrics layer.
+    * @param report       when true, each counted stage is cut eagerly
+    *                     ([[Checkpoints.cut]]) and its count reads only
+    *                     the cut's blocks, so no stage prefix re-executes
+    *                     and no later plan nests an earlier one; each
+    *                     stage is released through [[Checkpoints.release]]
+    *                     as soon as the next cut holds its rows, and the
+    *                     returned frame reads the last cut, handed out in
+    *                     [[Curated.caches]]. When false (production mode)
+    *                     nothing is counted or stored — the pipeline is
+    *                     one fully lazy plan and observability is the
+    *                     caller's metrics layer.
     */
   def run(docs0: DataFrame, idCol: String, textCol: String,
       evalSet: DataFrame,
@@ -101,15 +104,15 @@ object Curate {
     val docs = if (htmlInput)
       docs0.withColumn(textCol, Html.mainContent(col(textCol)))
     else docs0
-    val intermediates = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    // persist-then-count: each count touches only its OWN stage (the
-    // parent is already cached), never the whole pipeline prefix
+    val cuts = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    // cut-then-count: each count reads only its OWN stage's blocks, and
+    // each stage plans against a LogicalRDD leaf, never the pipeline prefix
     def cnt(df: DataFrame): (DataFrame, Long) =
       if (!report) (df, -1L)
       else {
-        val p = df.persist(Checkpoints.Intermediate)
-        intermediates += p
-        (p, p.count())
+        val c = Checkpoints.cut(df, eager = true)
+        cuts += c
+        (c, c.count())
       }
 
     val input = if (report) docs.count() else -1L
@@ -158,14 +161,13 @@ object Curate {
       idCol, "__n_tokens", budget = packBudget, buckets = packBuckets,
       bucketSalt = Some(col("split")))
       .drop("__n_tokens", "__toks")
-    // the final stage is now counted/materialized through the cached
-    // parents; earlier intermediates are no longer needed (the LAST cached
-    // stage — `mixed` when the mixture stage ran, else `kept` — backs the
-    // returned frame)
-    if (report) intermediates.dropRight(1).foreach(_.unpersist(false))
+    // every cut holds its own rows, so only the LAST one — `mixed` when
+    // the mixture stage ran, else `kept` — backs the returned frame; the
+    // earlier cuts are read by nothing and release now
+    cuts.dropRight(1).foreach(Checkpoints.release(_))
     Curated(packed,
       CurationReport(input, nExact, nNear, nSpan, nClean, nKept, nMixed),
-      intermediates.lastOption.toSeq)
+      cuts.lastOption.toSeq)
   }
 
   /** The persisted dedup state an append-mode corpus maintains between
@@ -180,11 +182,14 @@ object Curate {
 
   /** One ingested batch: the curated rows plus the index DELTA the caller
     * appends before the next round ([[DedupIndex]] union). `caches` are
-    * the frames persisted or checkpointed on the caller's behalf (the
-    * batch and its signature pipeline feed several consumers each; the
-    * in-batch connected components checkpoint their edges and labels) —
-    * release each through [[Checkpoints.release]] once the outputs are
-    * consumed (`unpersist` silently skips the checkpoints). */
+    * the lineage cuts taken on the caller's behalf: each counted stage,
+    * the banded signatures and the index matches of
+    * [[Dedup.ingestNearIncremental]], and the in-batch connected
+    * components' edges and labels. `docs`, `newDigests` and
+    * `newBandedRows` read them, so release each through
+    * [[Checkpoints.release]] only once all three are consumed — a cut
+    * released earlier fails the consuming action with "Checkpoint block …
+    * not found" (and `unpersist` does not reach a cut at all). */
   final case class IngestedBatch(docs: DataFrame, newDigests: DataFrame,
       newBandedRows: DataFrame, report: IngestReport,
       caches: Seq[DataFrame] = Nil)
@@ -217,20 +222,22 @@ object Curate {
       mixture: Option[MixtureSpec] = None,
       splits: Seq[(String, Int)] =
         Seq(("train", 9000), ("val", 500), ("test", 500)),
-      packBudget: Long = 2048L, packBuckets: Int = 32,
-      report: Boolean = true): IngestedBatch = {
-    // stages persist in BOTH modes (each feeds more than one consumer —
-    // exact feeds the near-dup pipeline twice, accepted feeds the digest
-    // delta and the quality tail); report=true additionally counts them.
-    // Lazy persists cost nothing until an action runs; the handles go out
-    // in IngestedBatch.caches for the caller to release.
-    val intermediates = scala.collection.mutable.ListBuffer.empty[DataFrame]
+      packBudget: Long = 2048L, packBuckets: Int = 32): IngestedBatch = {
+    // every counted stage is cut eagerly: each feeds more than one
+    // consumer (exact feeds the near-dup pipeline twice, accepted feeds
+    // the digest delta and the quality tail), the count then reads only
+    // the cut's blocks, and a cut is a LogicalRDD leaf, so neither a later
+    // stage nor the next round's index plans against this round's
+    // pipeline. `docs`, `newDigests` and `newBandedRows` all read the
+    // cuts, so every one goes out in IngestedBatch.caches and none is
+    // released here.
+    val cuts = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def cnt(df: DataFrame): (DataFrame, Long) = {
-      val p = df.persist(Checkpoints.Intermediate)
-      intermediates += p
-      (p, if (report) p.count() else -1L)
+      val c = Checkpoints.cut(df, eager = true)
+      cuts += c
+      (c, c.count())
     }
-    val input = if (report) batch.count() else -1L
+    val input = batch.count()
     // exact stage attaches the digest column the index delta reuses
     val (exact, nExact) =
       cnt(Dedup.ingestExactIncremental(batch, index.digests, idCol, textCol))
@@ -254,17 +261,9 @@ object Curate {
       idCol, "__n_tokens", budget = packBudget, buckets = packBuckets,
       bucketSalt = Some(col("split")))
       .drop("__n_tokens", "__toks", "digest")
-    // report mode already materialized every stage (the counts), so the
-    // upstream intermediates can release now; the last stage stays cached
-    // for the caller's consumption of `docs`. In report=false mode no
-    // action has run yet — every handle passes to the caller.
-    val caches =
-      if (report) {
-        intermediates.dropRight(1).foreach(_.unpersist(false))
-        intermediates.takeRight(1).toSeq ++ nearRes.caches
-      } else intermediates.toSeq ++ nearRes.caches
     IngestedBatch(packed, newDigests, nearRes.newIndexRows,
-      IngestReport(input, nExact, nNear, nKept, nMixed), caches)
+      IngestReport(input, nExact, nNear, nKept, nMixed),
+      cuts.toSeq ++ nearRes.caches)
   }
 
   /** The TRAINING-BATCH TERMINAL path: tokenizer encode → sequence

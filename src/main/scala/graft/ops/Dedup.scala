@@ -482,11 +482,11 @@ object Dedup {
   private def bandSlice(sig: Column, band: Column, rowsPerBand: Int): Column =
     slice(sig, band * rowsPerBand + 1, lit(rowsPerBand))
 
-  /** Banding over precomputed non-null signatures (composition point). */
-  private[graft] def lshCandidatesFromSigs(sigs: DataFrame, bands: Int,
+  /** Candidate pairs (id_a < id_b, est_jaccard) from [[bandedFromSigs]]
+    * rows of k-long signatures: a band-slice self-join, then the
+    * estimated-Jaccard filter. */
+  private def lshCandidatesFromBanded(banded: DataFrame, k: Int,
       rowsPerBand: Int, minEstJaccard: Double): DataFrame = {
-    val k = bands * rowsPerBand
-    val banded = bandedFromSigs(sigs, bands, rowsPerBand)
     val pairs = banded.as("a")
       .join(banded.as("b"),
         col("a.band") === col("b.band") &&
@@ -525,9 +525,10 @@ object Dedup {
     // the candidate-pair count) is checkpointed, intermediates released
     checkpointReleasing { cached =>
       val exploded = cached(explodedShingles(docs, idCol, textCol, n))
-      val est = cached(lshCandidatesFromSigs(
-        minhashSigsFromExploded(exploded, bands * rowsPerBand),
-        bands, rowsPerBand, 0.0))
+      val k = bands * rowsPerBand
+      val est = cached(lshCandidatesFromBanded(bandedFromSigs(
+        minhashSigsFromExploded(exploded, k), bands, rowsPerBand),
+        k, rowsPerBand, 0.0))
       // Exact Jaccard ONLY where the sketch found a candidate: the capped
       // index is restricted to candidate documents, per-doc shingle sets are
       // collected (candidate docs only — a tiny fraction of the corpus), and
@@ -840,14 +841,14 @@ object Dedup {
     *                     duplicate group
     * @param newIndexRows banded signature rows for the accepted docs; the
     *                     caller appends them to the persisted index
-    * @param caches       frames persisted or checkpointed on the caller's
-    *                     behalf (the persisted signature pipeline and
-    *                     labels, plus the in-batch connected-components
-    *                     checkpoints): call [[Checkpoints.release]] on
-    *                     each once the outputs are consumed, or a
-    *                     long-running caller — a daily-ingest stream —
-    *                     accumulates blocks (`unpersist` silently skips
-    *                     the checkpoints)
+    * @param caches       lineage cuts taken on the caller's behalf (the
+    *                     banded signatures, the index matches, and the
+    *                     in-batch connected components' edges and
+    *                     labels): all three outputs read them, so call
+    *                     [[Checkpoints.release]] on each only once the
+    *                     outputs are consumed, or a long-running caller —
+    *                     a daily-ingest stream — accumulates blocks
+    *                     (`unpersist` does not reach a cut)
     */
   final case class IngestResult(accepted: DataFrame, dropped: DataFrame,
       newIndexRows: DataFrame, caches: Seq[DataFrame] = Nil)
@@ -906,19 +907,20 @@ object Dedup {
         s"index signature length ${r.getInt(0)} != bands*rowsPerBand = $k — " +
           "the probe must use the index's build parameters")
     }
-    // the signature/banding pipeline feeds FOUR consumers (index probe,
-    // in-batch pairs, accepted rows, new index rows) — persist once, as in
-    // jaccardPairs; callers own the cache lifetime (handles returned in
-    // IngestResult.caches)
-    val cachedFrames = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def cached(df: DataFrame): DataFrame = {
-      val p = df.persist(Checkpoints.Intermediate); cachedFrames += p; p
+    // the banded signatures feed three consumers (index probe, in-batch
+    // pairs, new index rows) and the index matches three more (the pair
+    // filter, the survivors, the dropped rows): cut each eagerly, so every
+    // consumer plans against a LogicalRDD leaf; callers own the cuts
+    // (IngestResult.caches)
+    val cuts = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    def cut(df: DataFrame): DataFrame = {
+      val c = Checkpoints.cut(df, eager = true); cuts += c; c
     }
-    val sigs = cached(sigsWithFallback(batch, idCol, textCol, n, k))
-    val banded = cached(bandedFromSigs(sigs, bands, rowsPerBand))
+    val banded = cut(bandedFromSigs(
+      sigsWithFallback(batch, idCol, textCol, n, k), bands, rowsPerBand))
     // probe the persisted index: band-bucket equi-join, est-Jaccard filter,
     // ONE surviving match per batch doc is enough to reject it
-    val vsIndex = cached(banded.as("n")
+    val vsIndex = cut(banded.as("n")
       .join(index.as("i"),
         col("n.band") === col("i.band") &&
           col("n.band_hash") === col("i.band_hash") &&
@@ -929,16 +931,18 @@ object Dedup {
       .agg(min(col("i.doc_id")).as("match_id")))
     // in-batch near-dup pairs among docs that survived the index probe
     val inBatchPairs =
-      lshCandidatesFromSigs(sigs, bands, rowsPerBand, minEstJaccard)
+      lshCandidatesFromBanded(banded, k, rowsPerBand, minEstJaccard)
         .join(vsIndex.select(col("doc_id").as("id_a")), Seq("id_a"), "left_anti")
         .join(vsIndex.select(col("doc_id").as("id_b")), Seq("id_b"), "left_anti")
     // ONE connected-components run serves both the canonical pick and the
     // dropped-doc attribution: with min-id preference the component label
-    // IS the kept canonical
+    // IS the kept canonical. Its labels need no cut of their own: they are
+    // a local relation on the driver side of the gate and the final label
+    // cut on the distributed side.
     val cc = connectedComponentsCached(inBatchPairs, "id_a", "id_b")
-    cachedFrames ++= cc.caches
-    val labels = cached(cc.df
-      .withColumnsRenamed(Map("id" -> "doc_id", "label" -> "keep_id")))
+    cuts ++= cc.caches
+    val labels = cc.df
+      .withColumnsRenamed(Map("id" -> "doc_id", "label" -> "keep_id"))
     val droppedInBatch = labels
       .where(col("doc_id") =!= col("keep_id"))
       .select(col("doc_id"), col("keep_id").as("match_id"))
@@ -949,7 +953,7 @@ object Dedup {
     val newIndexRows = banded
       .join(accepted.select(col(idCol).as("doc_id")), Seq("doc_id"), "left_semi")
     IngestResult(accepted, vsIndex.unionByName(droppedInBatch), newIndexRows,
-      cachedFrames.toSeq)
+      cuts.toSeq)
   }
 
   /** Exact incremental ingest: admit batch docs whose content digest

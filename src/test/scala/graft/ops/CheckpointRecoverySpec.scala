@@ -148,4 +148,59 @@ class CheckpointRecoverySpec extends SparkSpec {
     assert(tri.getAs[Long]("n_triangles") == 1L)
   }
 
+  /** One `Curate.ingest` round of 60 fixture docs against an index of
+    * 200, in session `s`; `before` runs on the result before anything
+    * reads it. Returns the sorted rows of `docs`, `newDigests` and
+    * `newBandedRows`. */
+  private def ingestRows(s: org.apache.spark.sql.SparkSession,
+      before: Curate.IngestedBatch => Unit = _ => ()): Seq[Seq[String]] = {
+    val docs = graft.Tables.documents(s, sf).select("doc_id", "text")
+    val hist = docs.where(col("doc_id") < 200)
+    val index = Curate.DedupIndex(
+      hist.select(md5(col("text")).as("digest")).distinct(),
+      Dedup.buildNearDupIndex(hist, "doc_id", "text", n = 3, 8, 2))
+    val r = Curate.ingest(docs.where(col("doc_id").between(200, 259)),
+      "doc_id", "text", index, bands = 8, rowsPerBand = 2)
+    before(r)
+    try Seq(r.docs, r.newDigests, r.newBandedRows)
+      .map(_.collect().map(_.toString).sorted.toSeq)
+    finally r.caches.foreach(Checkpoints.release(_))
+  }
+
+  test("ingest: a block evicted from a cut before docs is consumed is block loss; the retry rebuilds the same rows") {
+    val clean = ingestRows(spark)
+    var attempts = 0
+    var lost: Throwable = null
+    val healed = Checkpoints.withBlockLossRetry(retries = 1, onRetry = lost = _) {
+      attempts += 1
+      ingestRows(spark, r => if (attempts == 1) {
+        // one block of a cut `docs` reads, gone before the first read
+        val cut = r.docs.queryExecution.analyzed.collectLeaves().collectFirst {
+          case lr: LogicalRDD if r.caches.exists(_.queryExecution.analyzed
+            .collectLeaves().exists(_ eq lr)) => lr.rdd
+        }.getOrElse(fail("docs reads no handed-out cut"))
+        org.apache.spark.SparkEnv.get.blockManager.removeBlock(
+          org.apache.spark.storage.RDDBlockId(cut.id, 0))
+      })
+    }
+    assert(attempts == 2 && lost != null && Checkpoints.isBlockLoss(lost),
+      s"expected one block-loss retry, got $attempts attempts: $lost")
+    assert(healed == clean)
+  }
+
+  test("ingest under reliable cuts returns the rows of lazy cuts") {
+    val lazyRows = ingestRows(spark)
+    val s2 = spark.newSession()
+    if (s2.sparkContext.getCheckpointDir.isEmpty)
+      s2.sparkContext.setCheckpointDir(
+        Files.createTempDirectory("graft_reliable_ckpt").toString)
+    s2.conf.set(Checkpoints.ReliableConfKey, "true")
+    val reliable = ingestRows(s2, r => assert(r.caches.exists(c =>
+      c.queryExecution.analyzed.collectLeaves().exists {
+        case lr: LogicalRDD => lr.rdd.isCheckpointed
+        case _ => false
+      }), "a reliable cut must be checkpointed to files"))
+    assert(reliable == lazyRows)
+  }
+
 }

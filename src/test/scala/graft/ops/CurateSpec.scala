@@ -271,6 +271,75 @@ class CurateSpec extends SparkSpec {
     assert(left.isEmpty, s"persisted RDDs left behind: ${left.values.mkString(", ")}")
   }
 
+  /** The `q_curate_incremental` shape: an index over docs < 300, then two
+    * chained ingest rounds — round 2 probes the index grown by round 1's
+    * delta, so its plans read round 1's cuts. */
+  private def twoRounds(): (Curate.IngestedBatch, Curate.IngestedBatch) = {
+    val (bands, rowsPerBand) = (8, 2)
+    val hist = docs.where($"doc_id" < 300)
+    val index0 = Curate.DedupIndex(
+      hist.select(md5($"text").as("digest")).distinct(),
+      Dedup.buildNearDupIndex(hist, "doc_id", "text", n = 3, bands, rowsPerBand))
+    val batch1 = docs.where($"doc_id".between(300, 399))
+      .unionByName(docs.where($"doc_id" === 5)
+        .select(lit(90005L).as("doc_id"), $"text"))
+      .unionByName(docs.where($"doc_id" === 310)
+        .select(lit(91000L).as("doc_id"), $"text"))
+    val r1 = Curate.ingest(batch1, "doc_id", "text", index0,
+      bands = bands, rowsPerBand = rowsPerBand)
+    val index1 = Curate.DedupIndex(
+      index0.digests.unionByName(r1.newDigests),
+      index0.banded.unionByName(r1.newBandedRows))
+    val batch2 = docs.where($"doc_id".between(400, 499))
+      .unionByName(docs.where($"doc_id" === 310)
+        .select(lit(92000L).as("doc_id"), $"text"))
+    (r1, Curate.ingest(batch2, "doc_id", "text", index1,
+      bands = bands, rowsPerBand = rowsPerBand))
+  }
+
+  private def formatted(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+
+  test("chained ingest rounds hand off cuts: flat plans, outputs readable until release, nothing left") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val (r1, r2) = twoRounds()
+    // every stage hand-off is a LogicalRDD leaf: round 2's plans neither
+    // embed a cached plan nor grow with round 1's pipeline
+    for ((name, df) <- Seq("docs" -> r2.docs, "newDigests" -> r2.newDigests,
+        "newBandedRows" -> r2.newBandedRows)) {
+      val plan = formatted(df)
+      assert(!plan.contains("InMemoryRelation"), s"round 2 $name plans a cache")
+      assert(plan.length < (1 << 20), s"round 2 $name plan is ${plan.length} chars")
+    }
+    // consume every output AFTER both rounds returned: a cut released
+    // inside ingest would fail these with "Checkpoint block … not found"
+    for (r <- Seq(r1, r2)) {
+      assert(r.docs.count() === r.report.afterQualityFilter)
+      assert(r.newDigests.count() === r.report.afterNearDedup)
+      assert(r.newBandedRows.select("doc_id").distinct().count()
+        === r.report.afterNearDedup)
+    }
+    val ids2 = r2.docs.select("doc_id").as[Long].collect().toSet
+    assert(!ids2.contains(92000L), "the cross-batch exact duplicate must drop")
+    (r1.caches ++ r2.caches).foreach(Checkpoints.release(_))
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
+    assert(left.isEmpty, s"persisted RDDs left behind: ${left.values.mkString(", ")}")
+  }
+
+  test("run with report: consume, release caches, nothing stays persisted") {
+    val sc = spark.sparkContext
+    val evalSet = docs.where($"doc_id".isin(5L, 17L, 42L))
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val out = Curate.run(docs, "doc_id", "text", evalSet)
+    assert(!formatted(out.docs).contains("InMemoryRelation"))
+    assert(out.docs.count() === out.report.afterQualityFilter)
+    out.caches.foreach(Checkpoints.release(_))
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
+    assert(left.isEmpty, s"persisted RDDs left behind: ${left.values.mkString(", ")}")
+  }
+
   test("tokenizePack: hand-derived bins on encoded (BPE) lengths") {
     // Sennrich corpus: encoded lengths 15/10/24/12 under (e,s)->(es,t)
     val corpus = Seq(
