@@ -4,7 +4,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.TextExpressions.UnicodeNormalize
+import graft.functions.TextExpressions.{UnicodeNormalize, WordTokens}
 import graft.functions.VectorExpressions._
 
 /** SparkSessionExtensions wiring: makes the engine's SQL functions
@@ -48,7 +48,10 @@ object GraftExtensions {
       QuantizeAuditInt8F32(es.head)),
     // unicode_normalize(s, 'NFC'|'NFD'|'NFKC'|'NFKD')
     fn("unicode_normalize", classOf[UnicodeNormalize])(es =>
-      UnicodeNormalize(es(0), litString(es(1), "form"))))
+      UnicodeNormalize(es(0), litString(es(1), "form"))),
+    // word_tokens(s) / lower_word_tokens(s): the \w+ runs of s / lower(s)
+    fn("word_tokens", classOf[WordTokens])(es => WordTokens(es.head, lower = false)),
+    fn("lower_word_tokens", classOf[WordTokens])(es => WordTokens(es.head, lower = true)))
 
   private def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression) =
     (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)

@@ -754,7 +754,7 @@ object SparkEntry {
     // q_bpe_merges and the Lloyd quantizer.
     "q_quality_fit" -> q { (s, dir) =>
       val docs = Tables.documents(s, dir).withColumn("__label",
-        size(TextAnalysis.tokens(lower(col("text")))) >= 60)
+        size(TextAnalysis.lowerTokens(col("text"))) >= 60)
       TextAnalysis.fitQualityClassifier(docs, "doc_id", "text", "__label",
         buckets = 256, rounds = 3)
     },

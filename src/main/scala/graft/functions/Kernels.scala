@@ -3,7 +3,9 @@ package graft.functions
 import java.text.Normalizer
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationFactory, CollationSupport,
+  GenericArrayData}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The static loop bodies of the native expressions in this package, one
@@ -203,6 +205,57 @@ object Kernels {
     }
     new GenericArrayData(codes)
   }
+
+  /** Word tokens of `s`: the maximal runs of `[A-Za-z0-9_]` bytes, in
+    * order — the array `array_remove(split(s, "\\W+"), "")` yields, since
+    * Java's `\W` is every char outside that class and every byte of a
+    * non-ASCII (or invalid) UTF-8 sequence is >= 0x80, a separator here.
+    * With `lower`, ASCII text is lower-cased byte by byte; text with any
+    * byte >= 0x80 is first lower-cased by Spark's own `lower()` kernel
+    * (`useICU` as the `Lower` expression reads it), whose output is then
+    * tokenized, so both forms equal the regex over `lower(s)` by
+    * construction and ASCII text never reaches ICU case mapping. The
+    * tokens are views onto one private copy of the input bytes. */
+  def wordTokens(s: UTF8String, lower: Boolean, useICU: Boolean): ArrayData = {
+    val n = s.numBytes
+    val bytes = new Array[Byte](n)
+    s.writeToMemory(bytes, Platform.BYTE_ARRAY_OFFSET)
+    // pass 1: count the runs; a non-ASCII byte under `lower` hands over
+    var count = 0
+    var inRun = false
+    var i = 0
+    while (i < n) {
+      val b = bytes(i)
+      val word = isWordByte(b)
+      if (word && !inRun) count += 1
+      else if (b < 0 && lower) return wordTokens(
+        CollationSupport.Lower.exec(s, CollationFactory.UTF8_BINARY_COLLATION_ID, useICU),
+        lower = false, useICU)
+      inRun = word
+      i += 1
+    }
+    // pass 2: lower-case in place and cut the runs out as views
+    val out = new Array[Any](count)
+    var t = 0
+    var start = -1
+    i = 0
+    while (i <= n) {
+      if (i < n && isWordByte(bytes(i))) {
+        if (lower && bytes(i) >= 'A' && bytes(i) <= 'Z') bytes(i) = (bytes(i) + 32).toByte
+        if (start < 0) start = i
+      } else if (start >= 0) {
+        out(t) = UTF8String.fromBytes(bytes, start, i - start)
+        t += 1
+        start = -1
+      }
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** `[A-Za-z0-9_]`: the bytes of Java's `\w`. */
+  private def isWordByte(b: Byte): Boolean =
+    (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9') || b == '_'
 
   // form is a plan-time constant; resolve the enum once, not per row
   private val forms: Map[String, Normalizer.Form] =

@@ -63,7 +63,7 @@ object Curate {
     *
     * @param evalSet      held-out eval docs for decontamination (same
     *                     schema); pass an empty frame to skip
-    * @param minQuality   [[TextAnalysis.qualityScore]] threshold in [0,1]
+    * @param minQuality   [[TextAnalysis.qualityScoreFromTokens]] threshold in [0,1]
     * @param htmlInput    when true, `textCol` holds raw HTML (a WARC
     *                     crawl): [[Html.mainContent]] extraction runs
     *                     before any other stage, so dedup/quality see
@@ -137,10 +137,10 @@ object Curate {
     val (clean, nClean) = cnt(spanned.join(contaminated, Seq(idCol), "left_anti"))
     // stage the tokens ONCE: the quality expression reads them ~5 times
     // and the packer needs the count — inlining the tokenizer would
-    // re-run regexp extraction per read (TextAnalysis's documented
+    // re-run the token scan per read (TextAnalysis's documented
     // production contract)
     val scored = clean
-      .withColumn("__toks", TextAnalysis.tokens(lower(col(textCol))))
+      .withColumn("__toks", TextAnalysis.lowerTokens(col(textCol)))
       .withColumn("quality_score",
         TextAnalysis.qualityScoreFromTokens(col("__toks")))
     val (kept, nKept) = cnt(scored.where(col("quality_score") >= minQuality))
@@ -246,7 +246,7 @@ object Curate {
     val (accepted, nNear) = cnt(nearRes.accepted)
     val newDigests = accepted.select(col("digest"))
     val scored = accepted
-      .withColumn("__toks", TextAnalysis.tokens(lower(col(textCol))))
+      .withColumn("__toks", TextAnalysis.lowerTokens(col(textCol)))
       .withColumn("quality_score",
         TextAnalysis.qualityScoreFromTokens(col("__toks")))
     val (kept, nKept) = cnt(scored.where(col("quality_score") >= minQuality))

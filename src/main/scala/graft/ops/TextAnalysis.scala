@@ -2,7 +2,9 @@ package graft.ops
 
 import graft.ops.Checkpoints.CutOps
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.TextExpressions.WordTokens
+
+import org.apache.spark.sql.{Column, DataFrame, GraftExpressionBridge}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -10,24 +12,36 @@ import org.apache.spark.sql.types._
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, quality scoring, language ID, document fingerprinting.
   *
-  * All operators are built from codegen'd `org.apache.spark.sql.functions`
-  * and higher-order array functions — no Scala UDFs — so they stay inside
-  * whole-stage codegen and scale linearly with input: at 100 TB these run
-  * as a single narrow (shuffle-free) projection over the corpus.
+  * The word tokenizer is a native Catalyst expression
+  * ([[graft.functions.TextExpressions.WordTokens]]); every other operator
+  * is built from codegen'd `org.apache.spark.sql.functions` and
+  * higher-order array functions over its tokens — no Scala UDFs — so all
+  * of them stay inside whole-stage codegen and scale linearly with input:
+  * at 100 TB these run as a single narrow (shuffle-free) projection over
+  * the corpus.
   */
 object TextAnalysis {
 
-  /** ASCII word tokens (`\w+`) — computed as a split on the complement
-    * (`\W+`) with the boundary empties removed, which yields the
-    * IDENTICAL maximal-\w-run array from the same regex engine while
-    * skipping regexp_extract_all's per-match group extraction
-    * (OPTIMIZATION_r12.md §6: 16–38% faster on the bare tokenize, 3/3
-    * interleaved runs, checksum-equal; this is the innermost kernel of
-    * every text query's first stage). TextAnalysisSpec pins the
-    * equivalence with `regexp_extract_all(s, "\w+", 0)`.
+  /** ASCII word tokens (`\w+`): the maximal `[A-Za-z0-9_]` runs, in
+    * order, from one native byte scan ([[graft.functions.Kernels.wordTokens]])
+    * — the array `regexp_extract_all(s, "\w+", 0)` and
+    * `array_remove(split(s, "\\W+"), "")` yield, without a regex. This is
+    * the innermost kernel of every text query's first stage. OpsSpec pins
+    * the equivalence on hostile inputs in both evaluation modes.
     */
-  def tokens(text: Column): Column =
-    array_remove(split(text, "\\W+"), "")
+  def tokens(text: Column): Column = wordTokens(text, lower = false)
+
+  /** [[tokens]] of `lower(text)`, the case-folded form the stopword and
+    * language profiles need. ASCII text is lower-cased inside the kernel
+    * and never reaches ICU case mapping, whose one-off start-up costs
+    * about a second per JVM; other text goes through Spark's `lower()`
+    * first, so the result equals `tokens(lower(text))` by construction.
+    */
+  def lowerTokens(text: Column): Column = wordTokens(text, lower = true)
+
+  private def wordTokens(text: Column, lower: Boolean): Column =
+    GraftExpressionBridge.column(
+      WordTokens(GraftExpressionBridge.expression(text), lower))
 
   def tokenCount(text: Column): Column = size(tokens(text)).cast(LongType)
 
@@ -90,14 +104,6 @@ object TextAnalysis {
     round(lengthScore * lit(0.4) + stopScore * lit(0.3) + wordLenScore * lit(0.3), 4)
   }
 
-  /** Convenience for ad-hoc use on small data; production paths should
-    * stage tokens once and use [[qualityScoreFromTokens]]. Case-folds
-    * first: the stopword profile is lowercase, and "The cat" must score
-    * like "the cat".
-    */
-  def qualityScore(text: Column): Column =
-    qualityScoreFromTokens(tokens(lower(text)))
-
   /** Tiny per-language stopword profiles for the n-gram/stopword language-ID
     * heuristic. Real pipelines use fastText-style models; the mechanism —
     * score each profile, take the argmax — is identical and fully
@@ -110,15 +116,12 @@ object TextAnalysis {
     "es" -> Seq("el", "la", "los", "y", "es", "un", "una", "que", "de", "por"),
     "zh" -> Seq("de", "le", "shi", "bu", "wo", "you", "zai", "ta", "men", "zhe"))
 
-  /** Detected language code: argmax over profile-overlap ratios, 'und' when
-    * nothing matches. Case-folds first (profiles are lowercase — a
-    * Title-Case document must not come back 'und').
+  /** Detected language code from a materialized tokens column
+    * (attribute): argmax over profile-overlap ratios, 'und' when nothing
+    * matches. Pass case-folded tokens ([[lowerTokens]]): the profiles are
+    * lowercase, and a Title-Case document must not come back 'und'.
     */
-  def langId(text: Column, profiles: Map[String, Seq[String]] = langProfiles): Column =
-    langIdFromTokens(tokens(lower(text)), profiles)
-
-  /** Language ID from a materialized tokens column (attribute). */
-  private def langIdFromTokens(toks: Column,
+  private[graft] def langIdFromTokens(toks: Column,
       profiles: Map[String, Seq[String]] = langProfiles): Column = {
     val n = nullif(size(toks), lit(0)).cast(DoubleType)
     // build struct(score, lang) per profile, take array_max (lexicographic
@@ -179,7 +182,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("n_tokens"), col("len_lo"), col("len_hi"))
   }
 
-  /** Mixed-language detection — the curation signal [[langId]] alone
+  /** Mixed-language detection — the curation signal [[langIdFromTokens]] alone
     * cannot produce: a document that interleaves two languages gets ONE
     * whole-document argmax and slides through a per-language pipeline,
     * but chunk-level voting exposes it. Tokens split into fixed
@@ -198,7 +201,7 @@ object TextAnalysis {
     require(chunkTokens >= 1, s"chunkTokens must be >= 1, got $chunkTokens")
     val w = chunkTokens
     val chunks = docs
-      .select(col(idCol).as("doc_id"), tokens(lower(col(textCol))).as("t"))
+      .select(col(idCol).as("doc_id"), lowerTokens(col(textCol)).as("t"))
       .select(col("doc_id"),
         explode(transform(
           sequence(lit(0), ((size(col("t")) - lit(1)) / lit(w)).cast(IntegerType)),
@@ -591,7 +594,7 @@ object TextAnalysis {
   def invertedIndex(docs: DataFrame, idCol: String,
       textCol: String = "text"): DataFrame =
     docs.select(col(idCol).as("doc_id"),
-      explode(array_distinct(tokens(lower(col(textCol))))).as("token"))
+      explode(array_distinct(lowerTokens(col(textCol)))).as("token"))
 
   /** Conjunctive (AND) keyword search against an inverted index: a doc
     * matches iff it contains EVERY query term. The `isin` predicate prunes
@@ -652,7 +655,7 @@ object TextAnalysis {
     // scans replace one scan plus two corpus-wide shuffles — at 100 TB a
     // re-read is cheap, a full exchange of per-token rows is not.
     val withToks = docs.select(col(idCol).as("doc_id"),
-      tokens(lower(col(textCol))).as("__toks"))
+      lowerTokens(col(textCol)).as("__toks"))
     val dlAll = withToks
       .select(col("doc_id"), size(col("__toks")).as("dl"))
       .where(col("dl") > 0)
@@ -701,7 +704,7 @@ object TextAnalysis {
   def buildVocab(docs: DataFrame, textCol: String = "text",
       minCount: Long = 5L): DataFrame = {
     val counts = docs
-      .select(explode(tokens(lower(col(textCol)))).as("token"))
+      .select(explode(lowerTokens(col(textCol))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n"))
       .where(col("n") >= minCount)
       .withColumn("__negn", -col("n"))
@@ -733,7 +736,7 @@ object TextAnalysis {
       vocab: DataFrame): DataFrame =
     docs
       .select(col(idCol).as("doc_id"),
-        explode(tokens(lower(col(textCol)))).as("token"))
+        explode(lowerTokens(col(textCol))).as("token"))
       .join(vocab.select(col("token"), lit(true).as("__in")),
         Seq("token"), "left_outer")
       .groupBy(col("doc_id"))
@@ -801,7 +804,7 @@ object TextAnalysis {
     val par = graft.Conf.sizedShufflePartitions(docs, rowMultiplier = 2.0)
     val toks = docs.repartition(par, col(idCol))
       .select(col(idCol).as("doc_id"),
-        posexplode(tokens(lower(col(textCol)))).as(Seq("pos", "tok")))
+        posexplode(lowerTokens(col(textCol))).as(Seq("pos", "tok")))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val bi = toks
       .select(col("doc_id"), col("tok").as("a"),
@@ -853,7 +856,7 @@ object TextAnalysis {
       minCount: Long = 1L): DataFrame = {
     val tf = docs
       .select(col(idCol).as("doc_id"),
-        explode(tokens(lower(col(textCol)))).as("token"))
+        explode(lowerTokens(col(textCol))).as("token"))
       .groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
     val counts = tf.groupBy(col("token")).agg(sum(col("tf")).as("cnt"))
     val totals = counts.select(sum(col("cnt")).as("n_total")) // 1-row scalar
@@ -915,7 +918,7 @@ object TextAnalysis {
     val par = graft.Conf.sizedShufflePartitions(docs, rowMultiplier = 2.0)
     val toks = docs.repartition(par, col(idCol))
       .select(col(idCol).as("doc_id"),
-        posexplode(tokens(lower(col(textCol)))).as(Seq("pos", "tok")))
+        posexplode(lowerTokens(col(textCol))).as(Seq("pos", "tok")))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     // weight seam: replace `weightOf` with a broadcast model-table join to
     // serve a real trained checkpoint
@@ -1020,7 +1023,7 @@ object TextAnalysis {
     val toks = docs.repartition(par, col(idCol))
       .select(col(idCol).as("doc_id") +:
         carry.map { case (n, c) => c.as(n) } :+
-        posexplode(tokens(lower(col(textCol)))).as(Seq("pos", "tok")): _*)
+        posexplode(lowerTokens(col(textCol))).as(Seq("pos", "tok")): _*)
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val keep = col("doc_id") +: carry.map { case (n, _) => col(n) }
     val feats = toks.select(keep :+ col("tok") :+
@@ -1198,7 +1201,7 @@ object TextAnalysis {
       // legacy sizeOfNull makes size(NULL) = -1 — a nonsense negative hit
       // count that still passes the gate, and a parity break vs the
       // oracle's NULL
-      .withColumn("__toks", tokens(lower(coalesce(col(textCol), lit("")))))
+      .withColumn("__toks", lowerTokens(coalesce(col(textCol), lit(""))))
       .select(col(idCol).as("doc_id"),
         size(filter(col("__toks"), t => array_contains(bl, t)))
           .cast(LongType).as("n_hits"))
@@ -1221,7 +1224,7 @@ object TextAnalysis {
     require(dim > 0, s"dim must be positive, got $dim")
     docs
       .select(col(idCol).as("doc_id"),
-        explode(tokens(lower(col(textCol)))).as("tok"))
+        explode(lowerTokens(col(textCol))).as("tok"))
       .groupBy(col("doc_id"),
         pmod(xxhash64(col("tok")), lit(dim.toLong)).as("bucket"))
       .agg(count(lit(1)).as("cnt"))
@@ -1238,7 +1241,7 @@ object TextAnalysis {
       // the stopword and language profiles (lowercase) only match folded
       // tokens — raw-case tokens would zero stopword_ratio and return
       // 'und' for any Title-Case document
-      .withColumn("__toks", tokens(lower(t)))
+      .withColumn("__toks", lowerTokens(t))
       .select(
         col("*"),
         length(t).cast(LongType).as("n_chars_computed"),

@@ -95,9 +95,7 @@ object EntryPointSpec {
     "ShardWriter.verifyShards" -> "spec-only read-back check of written shards",
     "Similarity.annTopK" -> "spec-only; the ANN queries repeat its probe math inline",
     "Similarity.trainIvfCentroidsDistributed" -> "spec-only",
-    "SnapshotTable.expire" -> "spec-only snapshot retention",
-    "TextAnalysis.langId" -> "spec-only; the queries call langIdFromTokens through analyze",
-    "TextAnalysis.qualityScore" -> "spec-only; the queries call qualityScoreFromTokens")
+    "SnapshotTable.expire" -> "spec-only snapshot retention")
 
   /** Qualified names (`Object.def`) of the public member defs in the
     * operator packages under `roots` that no other file under `roots`

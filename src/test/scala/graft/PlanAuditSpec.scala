@@ -350,7 +350,8 @@ class PlanAuditSpec extends SparkSpec {
     // would fold the projection away before the plan is inspected
     val plan = spark.range(3)
       .select(concat(lit("the cat sat on mat "), col("id").cast("string")).as("text"))
-      .select(graft.ops.TextAnalysis.langId(col("text")).as("lang"))
+      .select(graft.ops.TextAnalysis.langIdFromTokens(
+        graft.ops.TextAnalysis.lowerTokens(col("text"))).as("lang"))
       .queryExecution.optimizedPlan
     val filters = plan.flatMap(_.expressions.flatMap(_.collect {
       case f: ArrayFilter => f
@@ -359,6 +360,62 @@ class PlanAuditSpec extends SparkSpec {
     // an inlined argmax would double them to 10
     assert(graft.ops.TextAnalysis.langProfiles.size == 5)
     assert(filters.size == 5, s"expected 5 filter() lambdas, got ${filters.size}:\n$plan")
+  }
+
+  test("curation plans tokenize natively: no case mapping or regex split expression") {
+    import org.apache.spark.sql.catalyst.expressions.{InitCap, Lower, StringSplit, Upper}
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.functions.{col, md5}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.functions.TextExpressions.WordTokens
+    import graft.ops.{Checkpoints, Curate, Dedup}
+    // a Lower here starts ICU case mapping, about a second of class
+    // initialization in every fresh JVM; StringSplit is the regex tokenizer
+    def offending(p: LogicalPlan) = p.flatMap(_.expressions.flatMap(_.collect {
+      case e @ (_: Lower | _: Upper | _: InitCap | _: StringSplit) => e
+    }))
+    def tokenizes(p: LogicalPlan) =
+      p.exists(_.expressions.exists(_.exists(_.isInstanceOf[WordTokens])))
+    // every query the calls run, the eager cuts included, arrives here, in
+    // order: once the marker query is seen, so is every query before it
+    val marker = "curation_plan_audit_marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.map(_.name) == Seq(marker)) done.countDown()
+        else seen.add(qe.optimizedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val docs = graft.Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+    val evalSet = docs.where(col("doc_id").isin(5L, 17L))
+    val hist = docs.where(col("doc_id") < 300)
+    val index = Curate.DedupIndex(
+      hist.select(md5(col("text")).as("digest")).distinct(),
+      Dedup.buildNearDupIndex(hist, "doc_id", "text", n = 3, 8, 2))
+    spark.listenerManager.register(listener)
+    val direct = try {
+      val lazyRun = Curate.run(docs, "doc_id", "text", evalSet, report = false).docs
+      val run = Curate.run(docs, "doc_id", "text", evalSet)
+      val ingested = Curate.ingest(docs.where(col("doc_id") >= 300), "doc_id", "text",
+        index, n = 3, bands = 8, rowsPerBand = 2)
+      val frames = Seq(lazyRun, run.docs, ingested.docs, ingested.newDigests,
+        ingested.newBandedRows) ++
+        Seq("q_curate", "q_curate_incremental").map(SparkEntry.queries(_)(spark, sf))
+      frames.foreach(_.collect())
+      (run.caches ++ ingested.caches).foreach(Checkpoints.release(_))
+      spark.range(1).toDF(marker).collect()
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener never saw the marker query")
+      frames.map(_.queryExecution.optimizedPlan)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val plans = direct ++ seen.asScala
+    assert(plans.exists(tokenizes), "no curation plan tokenized: the audit saw nothing")
+    plans.foreach { p =>
+      val bad = offending(p)
+      assert(bad.isEmpty, s"${bad.mkString(", ")} in a curation plan:\n$p")
+    }
   }
 }
 

@@ -95,14 +95,27 @@ class EvalModeParitySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(rows.exists(_(1) == nan) && rows.exists(_(1) == null))
   }
 
-  test("unicode_normalize: interpreted and compiled evaluation are bit-identical") {
+  /** (id, s): the documents fixture plus `extra`. */
+  private def texts(extra: String*): DataFrame = {
     import spark.implicits._
-    val texts = graft.Tables.documents(spark, sf).select("text").as[String]
-      .collect().toSeq ++ Seq("caf\u00e9", "cafe\u0301", "\ufb01 \u2460 \u212b", "", null)
-    val df = spark.createDataFrame(java.util.Arrays.asList(
-      texts.zipWithIndex.map { case (s, i) => Row(i.toLong, s) }: _*),
+    val ts = graft.Tables.documents(spark, sf).select("text").as[String]
+      .collect().toSeq ++ extra
+    spark.createDataFrame(java.util.Arrays.asList(
+      ts.zipWithIndex.map { case (s, i) => Row(i.toLong, s) }: _*),
       StructType(Seq(StructField("id", LongType), StructField("s", StringType))))
+  }
+
+  test("unicode_normalize: interpreted and compiled evaluation are bit-identical") {
+    val df = texts("caf\u00e9", "cafe\u0301", "\ufb01 \u2460 \u212b", "", null)
     assertParity(df.select(col("id") +: Seq("NFC", "NFD", "NFKC", "NFKD")
       .map(f => TextFunctions.unicodeNormalize(col("s"), f)): _*))
+  }
+
+  test("word tokens: interpreted and compiled evaluation are bit-identical") {
+    graft.GraftExtensions.register(spark)
+    val df = texts("The END_1.", "x\u212Ay \u0130 \u03a3\u03a3", "a\ud83d\ude00B", "", "...", null)
+    val rows = assertParity(df.select(col("id"),
+      expr("word_tokens(s)"), expr("lower_word_tokens(s)")))
+    assert(rows.exists(_(1) == Seq("The", "END_1")) && rows.exists(_(2) == Seq("xky", "i")))
   }
 }

@@ -511,7 +511,8 @@ class TextAnalysisSpec extends SparkSpec {
       (1L, "the cat and the dog of the house is in a tree"),
       (2L, "der hund und die katze ist nicht ein tier zu haus"),
       (3L, "xyzzy qwerty plugh")).toDF("doc_id", "text")
-    val got = df.select($"doc_id", TextAnalysis.langId($"text").as("lang"))
+    val got = df.select($"doc_id",
+        TextAnalysis.langIdFromTokens(TextAnalysis.lowerTokens($"text")).as("lang"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got(1L) == "en")
     assert(got(2L) == "de")
@@ -522,26 +523,73 @@ class TextAnalysisSpec extends SparkSpec {
     val df = Seq(
       (1L, "the project is a large and careful piece of work that it describes in detail for the reader"),
       (2L, "zzz qq x")).toDF("doc_id", "text")
-    val s = df.select($"doc_id", TextAnalysis.qualityScore($"text").as("q"))
+    val s = df.select($"doc_id",
+        TextAnalysis.qualityScoreFromTokens(TextAnalysis.lowerTokens($"text")).as("q"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(s(1L) > s(2L))
     assert(s.values.forall(v => v >= 0.0 && v <= 1.0))
   }
 
   test("tokens is regexp_extract_all(\\w+) on boundary and null inputs") {
-    // tokens splits on \W+ and removes the boundary empties; the result
-    // must be the same maximal-\w-run array the extract form yields
-    val df = Seq[(Long, String)]((1L, ""), (2L, "!a!"), (3L, "..."),
-      (4L, "a  b"), (5L, "the end."), (6L, null)).toDF("doc_id", "text")
-    val out = df.select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t"),
-        regexp_extract_all(col("text"), lit("\\w+"), lit(0)).as("x"))
-      .collect().map(r => r.getLong(0) ->
-        ((Option(r.getSeq[String](1)), Option(r.getSeq[String](2))))).toMap
-    out.foreach { case (id, (t, x)) => assert(t === x, s"doc $id") }
-    assert(out(2L)._1 === Some(Seq("a")))
-    assert(out(4L)._1 === Some(Seq("a", "b")))
-    assert(out(5L)._1 === Some(Seq("the", "end")))
-    assert(out(6L)._1 === None)
+    // the native kernel must return the regex forms' arrays on every input
+    // class (boundaries, null, case, non-ASCII, invalid UTF-8, 1 MB), and
+    // lowerTokens the same over lower(); interpreted and compiled, under
+    // both ICU case-mapping settings
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import java.nio.charset.StandardCharsets.UTF_8
+    val mixed = "Ab_9 \u212Aelvin caf\u00e9 STRA\u00dfE \u0130stanbul \u03a3\u039f\u03a3 " +
+      "e\u0301x \ud83d\ude00y\ud83d\ude00 THE end. "
+    val ascii = "The QUICK brown_fox 42 jumps, over the LAZY dog; "
+    val mb = 1 << 20
+    val strs = Seq[String](null, "", "!a!", "...", "a  b", "the end.", "!?., ;:-",
+      "_ 0 9_9 __", "MiXeD CaSe ASCII", "\u212A", "x\u212Ay", "\u0130", "I\u0130i",
+      "\u03a3", "\u039f\u03a3 \u03c3\u03c2", "\u00df \u1e9e", "e\u0301 a\u0308b",
+      "\ud83d\ude00", "a\ud83d\ude00B\ud83d\udc4dc", ascii * (mb / ascii.length + 1),
+      mixed * (mb / mixed.length + 1))
+    val texts: Seq[Array[Byte]] = strs.map(t => if (t == null) null else t.getBytes(UTF_8)) ++
+      // invalid UTF-8: a lead byte before ASCII, a lone continuation, an
+      // overlong '/', a truncated 4-byte sequence, an encoded surrogate
+      Seq(Array(0x41, 0xc3, 0x42, 0xff, 0x43), Array(0x80, 0x61, 0x62, 0xbf),
+        Array(0x61, 0xc0, 0xaf, 0x5a), Array(0x4b, 0xf0, 0x9f, 0x98, 0x4b),
+        Array(0x78, 0xed, 0xa0, 0x80, 0x59, 0xe2, 0x28, 0xa1)).map(_.map(_.toByte))
+    val df = spark.createDataFrame(java.util.Arrays.asList(
+      texts.zipWithIndex.map { case (b, i) => Row(i.toLong, b) }: _*),
+      StructType(Seq(StructField("id", LongType), StructField("b", BinaryType))))
+      .select(col("id"), col("b").cast(StringType).as("text"))
+    def split0(c: org.apache.spark.sql.Column) = array_remove(split(c, "\\W+"), "")
+    for (compiled <- Seq(false, true); icu <- Seq(true, false)) {
+      val confs = Seq(
+        "spark.sql.codegen.wholeStage" -> compiled.toString,
+        "spark.sql.codegen.factoryMode" -> (if (compiled) "CODEGEN_ONLY" else "NO_CODEGEN"),
+        "spark.sql.icu.caseMappings.enabled" -> icu.toString,
+        // evaluate the local rows in the plan, not folded on the driver
+        "spark.sql.optimizer.excludedRules" ->
+          "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+      val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      val out = try df.select(col("id"), TextAnalysis.tokens(col("text")),
+          regexp_extract_all(col("text"), lit("\\w+"), lit(0)), split0(col("text")),
+          TextAnalysis.lowerTokens(col("text")), split0(lower(col("text"))))
+        .collect().map(r => r.getLong(0).toInt -> r).toMap
+      finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      assert(out.size == texts.size)
+      out.foreach { case (id, r) =>
+        val mode = s"doc $id compiled=$compiled icu=$icu"
+        assert(r.get(1) == r.get(2) && r.get(1) == r.get(3), s"tokens, $mode")
+        assert(r.get(4) == r.get(5), s"lowerTokens, $mode")
+      }
+      def toks(s: String, lowered: Boolean = false) =
+        Option(out(strs.indexOf(s)).getSeq[String](if (lowered) 4 else 1))
+      assert(toks(null) === None && toks(null, lowered = true) === None)
+      assert(toks("!a!") === Some(Seq("a")))
+      assert(toks("a  b") === Some(Seq("a", "b")))
+      assert(toks("the end.") === Some(Seq("the", "end")))
+      // KELVIN SIGN lower-cases to ASCII 'k': a token only after lower()
+      assert(toks("x\u212Ay") === Some(Seq("x", "y")))
+      assert(toks("x\u212Ay", lowered = true) === Some(Seq("xky")))
+      assert(toks(strs(19), lowered = true).get.size > 100000)
+    }
   }
 
   test("repetition stats: duplicate-token fraction, empty-doc zero") {
@@ -785,7 +833,8 @@ class TextAnalysisSpec extends SparkSpec {
     // the whole-doc argmax on doc 1 reads plain 'en' — mixture is the
     // only signal that sees the German third
     val whole = df.where(col("doc_id") === 1L)
-      .select(TextAnalysis.langId(col("text"))).head().getString(0)
+      .select(TextAnalysis.langIdFromTokens(TextAnalysis.lowerTokens(col("text"))))
+      .head().getString(0)
     assert(whole === "en")
   }
 
